@@ -264,6 +264,55 @@ def test_wrong_input_arity_reports_node(spark):
         compile_flow(spark, flow)
 
 
+def _one_node_flow(name: str, config: dict) -> dict:
+    return {
+        "generators": [
+            {"id": "g", "name": "inline", "config": {"rows": [[1]], "columns": ["a"]},
+             "next": ["p"]}
+        ],
+        "processors": [{"id": "p", "name": name, "config": config, "next": []}],
+    }
+
+
+def test_operator_failure_keeps_type_and_notes_node(spark):
+    """Any exception an operator raises while compiling keeps its type and
+    carries a note naming the node and its operator."""
+    from pyspark.errors import AnalysisException
+
+    flow = _one_node_flow("filter", {"expression": "${missing_col} > 0"})
+    with pytest.raises(AnalysisException) as info:
+        compile_flow(spark, flow)
+    assert "node p (filter)" in info.value.__notes__
+
+
+def test_source_failure_notes_node(spark):
+    flow = _one_node_flow("identity", {})
+    flow["generators"][0]["name"] = "no_such_source"
+    with pytest.raises(KeyError) as info:
+        compile_flow(spark, flow)
+    assert "node g (no_such_source)" in info.value.__notes__
+
+
+def test_operator_returning_nothing_names_node(spark, monkeypatch):
+    from tuktu_spark.operators.registry import OPERATORS
+
+    monkeypatch.setitem(OPERATORS, "returns_none", lambda config: lambda df: None)
+    with pytest.raises(FlowError, match="at node 'p' returned no DataFrame"):
+        compile_flow(spark, _one_node_flow("returns_none", {}))
+
+
+@pytest.mark.parametrize("node", ["nope", "dead"])
+def test_run_stream_flow_unknown_or_pruned_node(spark, node):
+    """Asking for a node that is not compiled (unknown, or pruned as
+    unreachable) is a FlowError naming it and listing the compiled ids."""
+    from tuktu_spark.flow.compiler import run_stream_flow
+
+    flow = _one_node_flow("identity", {})
+    flow["processors"].append({"id": "dead", "name": "identity", "config": {}, "next": []})
+    with pytest.raises(FlowError, match=rf"node '{node}' is not a compiled node.*\['g', 'p'\]"):
+        run_stream_flow(spark, flow, node=node)
+
+
 def test_run_flow_param_value_containing_placeholder_text(spark):
     """A substituted parameter VALUE that itself contains literal '#{x}'
     text must NOT be re-matched by a second substitution pass (run_flow

@@ -148,6 +148,112 @@ def test_foreach_batch_sink(spark, events, event_stream, tmp_path):
     assert sum(seen) == events.count() and len(seen) >= 2  # several micro-batches
 
 
+# ---------------------------------------------------------------------------
+# Checkpoint file manager (session.local_checkpoint_conf)
+
+
+def test_session_resolves_filesystem_checkpoint_manager(spark, tmp_path):
+    """The manager Spark builds for a checkpoint path on the test session
+    (the bare one; the state store wraps it in its checksum manager)."""
+    from tuktu_spark.session import LOCAL_CHECKPOINT_MANAGER
+
+    jvm = spark._jvm
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert mgr.getClass().getName() == LOCAL_CHECKPOINT_MANAGER
+
+
+@pytest.mark.parametrize(
+    "default_fs, conf, local",
+    [
+        ("file:///", {}, True),
+        ("file:/", {}, True),
+        # an explicit caller value is kept, whatever the FS
+        ("file:///", {"spark.sql.streaming.checkpointFileManagerClass": "my.Manager"}, False),
+        ("hdfs://nn:8020", {}, False),
+        ("s3a://bucket", {}, False),
+    ],
+)
+def test_local_checkpoint_conf_rule(default_fs, conf, local):
+    from tuktu_spark.session import (
+        CHECKPOINT_MANAGER_KEY,
+        LOCAL_CHECKPOINT_MANAGER,
+        local_checkpoint_conf,
+    )
+
+    want = {CHECKPOINT_MANAGER_KEY: LOCAL_CHECKPOINT_MANAGER} if local else {}
+    assert local_checkpoint_conf(default_fs, conf) == want
+
+
+def test_ensure_session_confs_applies_rule_to_other_sessions(spark):
+    """A session built elsewhere gets the local manager from
+    ensure_session_confs, unless it already chose one."""
+    from tuktu_spark.session import CHECKPOINT_MANAGER_KEY, LOCAL_CHECKPOINT_MANAGER
+    from tuktu_spark.tables import ensure_session_confs
+
+    other = spark.newSession()
+    other.conf.unset(CHECKPOINT_MANAGER_KEY)
+    ensure_session_confs(other)
+    assert other.conf.get(CHECKPOINT_MANAGER_KEY) == LOCAL_CHECKPOINT_MANAGER
+    other.conf.set(CHECKPOINT_MANAGER_KEY, "my.Manager")
+    ensure_session_confs(other)
+    assert other.conf.get(CHECKPOINT_MANAGER_KEY) == "my.Manager"
+
+
+def test_crash_replay_keeps_state_and_totals(spark, events, tmp_path):
+    """A stateful update-mode aggregate that died after logging batch 1's
+    offsets but before committing it. The restart re-runs batch 1 and then
+    runs a new batch; the final per-group totals are the batch truth.
+
+    The replayed state commit asks to overwrite the existing ``.delta``
+    files only "if possible" (Spark's CheckpointFileManager contract).
+    The local FileSystem refuses to rename over a file, so under the
+    FileSystem-based manager the first attempt's complete files stay and
+    the restart builds batch 2 on them."""
+    import os
+
+    from tuktu_spark.operators import make_operator
+
+    sdf = STR.replay_dataframe(events, str(tmp_path / "in"), chunks=3, order_col="ts")
+    third = sorted((tmp_path / "in" / "replay").iterdir())[2]
+    held = tmp_path / third.name
+    os.rename(third, held)  # keeps its mtime, the newest of the three
+    agg = make_operator(
+        "aggregate_by_value",
+        {"group": ["event_type"], "aggregations": {"n": "count()", "ids": "sum(${event_id})"}},
+    )(sdf)
+    ckpt = tmp_path / "ckpt"
+    seen: list[tuple[int, dict]] = []
+
+    def run() -> None:
+        q = STR.foreach_batch_sink(
+            agg, lambda df, bid: seen.extend((bid, r.asDict()) for r in df.collect()),
+            checkpoint=str(ckpt),
+        )
+        q.processAllAvailable()
+        q.stop()
+
+    run()
+    assert {"0", "1"} <= set(os.listdir(ckpt / "commits"))
+    deltas = {p: os.stat(p).st_ino for p in (ckpt / "state").rglob("2.delta")}
+    assert deltas  # batch 1 committed state version 2
+    first = sorted((r for bid, r in seen if bid == 1), key=lambda r: r["event_type"])
+    for name in ("1", ".1.crc"):  # the crash: batch 1 never committed
+        (ckpt / "commits" / name).unlink(missing_ok=True)
+    os.rename(held, third)
+    seen.clear()
+    run()
+
+    assert sorted({bid for bid, _ in seen}) == [1, 2]
+    assert sorted((r for bid, r in seen if bid == 1), key=lambda r: r["event_type"]) == first
+    assert {p: os.stat(p).st_ino for p in deltas} == deltas
+    final = {r["event_type"]: (r["n"], r["ids"]) for _, r in sorted(seen, key=lambda x: x[0])}
+    truth = events.toPandas().groupby("event_type")["event_id"].agg(["count", "sum"])
+    assert final == {k: (int(c), int(t)) for k, (c, t) in truth.iterrows()}
+
+
 def test_rate_source_shape(spark):
     df = STR.rate_source(spark, rows_per_second=5, constant={"tag": "x"})
     assert df.isStreaming and set(df.columns) == {"timestamp", "value", "tag"}

@@ -98,7 +98,11 @@ def compile_flow(
     # --- generators ---
     for g in generators:
         gid = g.get("id", f"__gen{generators.index(g)}__")
-        outputs[gid] = make_source(spark, g["name"], g.get("config", {}))
+        try:
+            outputs[gid] = make_source(spark, g["name"], g.get("config", {}))
+        except Exception as e:
+            e.add_note(f"node {gid} ({g['name']})")
+            raise
         if g.get("cache"):
             outputs[gid] = outputs[gid].cache()
 
@@ -111,16 +115,23 @@ def compile_flow(
                 continue
             node = processors[nid]
             inputs = [outputs[p] for p in preds[nid]]
-            transform = make_operator(node["name"], node.get("config", {}))
             try:
-                out = transform(*inputs)
-            except TypeError as e:
-                raise FlowError(
-                    f"operator {node['name']!r} at node {nid!r} got "
-                    f"{len(inputs)} input(s): {e}"
-                ) from e
+                transform = make_operator(node["name"], node.get("config", {}))
+                try:
+                    out = transform(*inputs)
+                except TypeError as e:
+                    raise FlowError(
+                        f"operator {node['name']!r} at node {nid!r} got "
+                        f"{len(inputs)} input(s): {e}"
+                    ) from e
+            except Exception as e:
+                # name the failing node but keep the type callers match on
+                e.add_note(f"node {nid} ({node['name']})")
+                raise
             if out is None:
-                raise FlowError(f"operator {node['name']!r} returned no DataFrame")
+                raise FlowError(
+                    f"operator {node['name']!r} at node {nid!r} returned no DataFrame"
+                )
             if node.get("cache"):
                 out = out.cache()
             outputs[nid] = out
@@ -176,6 +187,11 @@ def run_stream_flow(
     from ..streaming import memory_sink
 
     outputs = compile_flow(spark, flow, params=params)
+    if node not in outputs:
+        raise FlowError(
+            f"node {node!r} is not a compiled node of this flow (unknown or "
+            f"unreachable from a generator); compiled: {sorted(outputs)}"
+        )
     sdf = outputs[node]
     if not sdf.isStreaming:
         raise FlowError(f"node {node!r} is not a streaming DataFrame")

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import apply_local_checkpoint_conf
+
 # Confs the query layer depends on, applied to ANY session (the driver
 # passes its own SparkSession, not ours — see session.py for the rationale
 # behind each). All three are runtime-settable.
@@ -67,7 +69,8 @@ def ensure_session_confs(spark: SparkSession) -> None:
     """Make an externally-supplied session able to run every query.
 
     Idempotent and cheap; called from ``load_table`` and the query registry
-    so the driver's vanilla session behaves like ``session.get_spark()``'s.
+    so the driver's vanilla session behaves like ``session.get_spark()``'s,
+    streaming checkpoint manager included (``session.local_checkpoint_conf``).
     """
     for k, v in _SESSION_CONFS.items():
         try:
@@ -75,6 +78,7 @@ def ensure_session_confs(spark: SparkSession) -> None:
                 spark.conf.set(k, v)
         except Exception:
             spark.conf.set(k, v)
+    apply_local_checkpoint_conf(spark)
 
 
 TABLES = (
