@@ -1039,3 +1039,35 @@ def test_streaming_attribution_lifecycle_flow(spark, sf_dir, tmp_path_factory):
     assert len({s for _, s, _ in got}) < ev.count()
     batches = {p for p in os.listdir(out_dir) if p.startswith("batch_id=")}
     assert batches == {"batch_id=-1", "batch_id=1"}, batches
+
+
+def test_build_jobs_carry_their_node_id(spark, tmp_path):
+    """Every Spark job a flow launches while it builds (source schema
+    inference, the sink's write) carries ``node <id> (<operator>)`` as its
+    job description; the caller's description is restored afterwards."""
+    src = tmp_path / "in.json"
+    src.write_text('{"k": 1}\n{"k": 2}\n{"k": 3}\n')
+    flow = {
+        "generators": [{"id": "src", "name": "json", "config": {"path": str(src)}, "next": ["keep"]}],
+        "processors": [
+            {"id": "keep", "name": "filter", "config": {"expression": "${k} > 1"}, "next": ["sink"]},
+            {"id": "sink", "name": "parquet_sink",
+             "config": {"path": str(tmp_path / "out"), "mode": "overwrite"}, "next": []},
+        ],
+    }
+    sc = spark.sparkContext
+    sc.setJobGroup("flow-node-labels", "caller")
+    try:
+        run_flow(spark, flow)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    store = sc._jsc.sc().statusStore()
+    labels = []
+    for job in sc.statusTracker().getJobIdsForGroup("flow-node-labels"):
+        desc = store.job(job).description()
+        labels.append(None if desc.isEmpty() else desc.get())
+    nodes = {"node src (json)", "node keep (filter)", "node sink (parquet_sink)"}
+    assert labels and set(labels) <= nodes
+    assert {"node src (json)", "node sink (parquet_sink)"} <= set(labels)

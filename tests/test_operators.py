@@ -429,6 +429,37 @@ class TestSources:
         )
         assert df.count() == 4
 
+    def test_time_sequence_spaced_result_name(self, spark):
+        df = make_source(
+            spark,
+            "time_sequence",
+            {"start": "2020-01-01 00:00:00", "end": "2020-01-03 00:00:00",
+             "interval": "1 day", "result": "day start"},
+        )
+        ref = spark.sql(
+            "SELECT explode(sequence(TIMESTAMP '2020-01-01 00:00:00', "
+            "TIMESTAMP '2020-01-03 00:00:00', INTERVAL 1 day)) AS t"
+        )
+        assert df.columns == ["day start"]
+        assert df.schema[0].dataType == ref.schema[0].dataType
+        assert [r[0] for r in df.collect()] == [r[0] for r in ref.collect()]
+
+    def test_csv_header_flag_parsed_strictly(self, spark, tmp_path):
+        from tuktu_spark.flow import run_flow
+
+        p = tmp_path / "h.csv"
+        p.write_text("1,a\n2,b\n3,c\n")
+        flow = {"generators": [
+            {"id": "g", "name": "csv", "config": {"path": str(p), "header": "#{hdr}"}}
+        ]}
+        assert run_flow(spark, flow, params={"hdr": "false"})["g"].count() == 3
+        assert run_flow(spark, flow, params={"hdr": "TRUE"})["g"].count() == 2
+        assert make_source(spark, "csv", {"path": str(p), "header": False}).count() == 3
+        with pytest.raises(ValueError, match="'header'"):
+            make_source(spark, "csv", {"path": str(p), "header": "no"})
+        with pytest.raises(ValueError, match="'infer_schema'"):
+            make_source(spark, "csv", {"path": str(p), "infer_schema": 1})
+
     def test_line_source(self, spark, tmp_path):
         p = tmp_path / "f.txt"
         p.write_text("l0\nl1\nl2\nl3\n")
@@ -580,6 +611,32 @@ class TestPlanMemoHygiene:
         # next real load clears the oversized memo instead of growing it
         T.load_table(s, sf_dir, "region")
         assert len(T._plan_memo_of(s)) <= T._PLAN_MEMO_MAX_ENTRIES
+
+
+    def test_rewritten_table_is_read_again(self, spark, tmp_path):
+        import os
+        import time
+
+        from tuktu_spark.tables import load_table, table_path
+
+        sf = str(tmp_path)
+        path = table_path(sf, "region")
+
+        def write(n, age_s):
+            spark.range(n).write.mode("overwrite").parquet(path)
+            t = time.time_ns() - int(age_s * 1e9)  # past the racy window
+            for d, _, files in os.walk(path):
+                for f in files:
+                    os.utime(os.path.join(d, f), ns=(t, t))
+
+        write(3, 60)
+        df1 = load_table(spark, sf, "region")
+        assert load_table(spark, sf, "region") is df1  # unchanged: memo hit
+        write(5, 30)
+        df2 = load_table(spark, sf, "region")
+        assert df2 is not df1
+        assert df2.count() == 5
+        assert load_table(spark, sf, "region") is df2
 
 
 class TestColumnMemo:

@@ -20,6 +20,7 @@ reference's execution (SURVEY.md §3.1):
 
 from __future__ import annotations
 
+import contextlib
 import json
 from typing import Any
 
@@ -40,6 +41,20 @@ def _load(flow: dict | str) -> dict:
     return flow
 
 
+@contextlib.contextmanager
+def _job_description(spark: SparkSession, text: str):
+    """Label the Spark jobs the body launches with ``text`` (Spark's job
+    description), then restore the caller's. The job group is left alone:
+    callers count jobs by group."""
+    sc = spark.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", caller)
+
+
 def compile_flow(
     spark: SparkSession,
     flow: dict | str,
@@ -48,7 +63,9 @@ def compile_flow(
     _substituted: bool = False,
 ) -> dict[str, DataFrame]:
     """Compile a flow spec; returns {node_id: DataFrame} for every compiled
-    node (sinks excluded — use run_flow to execute them).
+    node (sinks excluded — use run_flow to execute them). Spark jobs run
+    while a node builds (schema inference, sinks, eager probes) carry the
+    job description ``node <id> (<operator>)``.
 
     ``params`` fills ``#{}`` (config-time); ``meta`` fills ``%{}``
     (dispatch-time — supplied by an including flow or the caller).
@@ -98,10 +115,12 @@ def compile_flow(
     # --- generators ---
     for g in generators:
         gid = g.get("id", f"__gen{generators.index(g)}__")
+        label = f"node {gid} ({g['name']})"
         try:
-            outputs[gid] = make_source(spark, g["name"], g.get("config", {}))
+            with _job_description(spark, label):
+                outputs[gid] = make_source(spark, g["name"], g.get("config", {}))
         except Exception as e:
-            e.add_note(f"node {gid} ({g['name']})")
+            e.add_note(label)
             raise
         if g.get("cache"):
             outputs[gid] = outputs[gid].cache()
@@ -115,18 +134,20 @@ def compile_flow(
                 continue
             node = processors[nid]
             inputs = [outputs[p] for p in preds[nid]]
+            label = f"node {nid} ({node['name']})"
             try:
-                transform = make_operator(node["name"], node.get("config", {}))
-                try:
-                    out = transform(*inputs)
-                except TypeError as e:
-                    raise FlowError(
-                        f"operator {node['name']!r} at node {nid!r} got "
-                        f"{len(inputs)} input(s): {e}"
-                    ) from e
+                with _job_description(spark, label):
+                    transform = make_operator(node["name"], node.get("config", {}))
+                    try:
+                        out = transform(*inputs)
+                    except TypeError as e:
+                        raise FlowError(
+                            f"operator {node['name']!r} at node {nid!r} got "
+                            f"{len(inputs)} input(s): {e}"
+                        ) from e
             except Exception as e:
                 # name the failing node but keep the type callers match on
-                e.add_note(f"node {nid} ({node['name']})")
+                e.add_note(label)
                 raise
             if out is None:
                 raise FlowError(

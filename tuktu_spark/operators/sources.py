@@ -7,31 +7,105 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..tables import listing_signature, memo_put, schema_memo_of
 from .registry import source
+
+# Session confs that change the schema Spark infers, per format.
+_FILE_INFERENCE_CONFS = (
+    "spark.sql.caseSensitive",
+    "spark.sql.files.ignoreCorruptFiles",
+    "spark.sql.session.timeZone",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.timestampType",
+)
+_TEXT_INFERENCE_CONFS = (
+    "spark.sql.columnNameOfCorruptRecord",
+    "spark.sql.legacy.timeParserPolicy",
+)
+_INFERENCE_CONFS = {
+    "parquet": _FILE_INFERENCE_CONFS + (
+        "spark.sql.parquet.binaryAsString",
+        "spark.sql.parquet.int96AsTimestamp",
+        "spark.sql.parquet.mergeSchema",
+        "spark.sql.parquet.respectSummaryFiles",
+        "spark.sql.parquet.inferTimestampNTZ.enabled",
+        "spark.sql.legacy.parquet.nanosAsLong",
+    ),
+    "orc": _FILE_INFERENCE_CONFS + ("spark.sql.orc.mergeSchema", "spark.sql.orc.impl"),
+    "json": _FILE_INFERENCE_CONFS + _TEXT_INFERENCE_CONFS,
+    "csv": _FILE_INFERENCE_CONFS + _TEXT_INFERENCE_CONFS,
+}
+
+
+def read_inferred(
+    spark: SparkSession, fmt: str, path: str, options: dict[str, str] | None = None
+) -> DataFrame:
+    """``spark.read.options(**options).format(fmt).load(path)``, with the
+    schema inference job run only once per unchanged input.
+
+    The first read infers the schema as Spark always does and keeps it on
+    the session. A later read reuses it (``reader.schema``) when the
+    format, path, options, the session confs that steer ``fmt``'s
+    inference and the file listing (``tables.listing_signature``) are all
+    unchanged. Spark still lists the files on every read, so the data is
+    current; only the inference job is skipped. Globs, non-local paths,
+    missing paths and files modified in the last 2 s are inferred every
+    time."""
+    options = options or {}
+    reader = spark.read.options(**options).format(fmt)
+    signature = listing_signature(spark, path)
+    if signature is None:
+        return reader.load(path)
+    confs = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS[fmt])
+    key = (fmt, path, tuple(sorted(options.items())), confs)
+    memo = schema_memo_of(spark)
+    entry = memo.get(key)
+    if entry is not None and entry[0] == signature:
+        return reader.schema(entry[1]).load(path)
+    df = reader.load(path)
+    memo_put(memo, key, (signature, df.schema))
+    return df
+
+
+def _flag(config: dict, key: str, default: bool) -> str:
+    """A boolean option as Spark's "true"/"false": a bool, or the string
+    true/false in any case; anything else is a config error."""
+    value = config.get(key, default)
+    if isinstance(value, str) and value.lower() in ("true", "false"):
+        return value.lower()
+    if isinstance(value, bool):
+        return str(value).lower()
+    raise ValueError(f"{key!r} must be true or false, got {value!r}")
 
 
 @source("parquet")
 def parquet(spark: SparkSession, config: dict) -> DataFrame:
-    """Parquet file/directory source (predicate pushdown + column pruning)."""
-    return spark.read.parquet(config["path"])
+    """Parquet file/directory source (predicate pushdown + column pruning).
+    Its schema is inferred once per unchanged input and session
+    (FLOWSPEC.md "Schema reuse")."""
+    return read_inferred(spark, "parquet", config["path"])
 
 
 @source("csv")
 def csv(spark: SparkSession, config: dict) -> DataFrame:
     """CSVGenerator (csv/generators/CsvGenerator.scala:111-218): headers
-    present/predefined, separator/quote/escape, error tolerance."""
-    reader = spark.read.options(
-        header=str(bool(config.get("header", True))).lower(),
-        sep=config.get("separator", ","),
-        quote=config.get("quote", '"'),
-        escape=config.get("escape", "\\"),
-        mode=config.get("mode", "PERMISSIVE"),  # error tolerance (:198)
-        inferSchema=str(bool(config.get("infer_schema", True))).lower(),
-    )
+    present/predefined, separator/quote/escape, error tolerance. `header`
+    and `infer_schema` take true/false (bool or string). Without an
+    explicit `schema`, the inferred one is reused while the input is
+    unchanged (FLOWSPEC.md "Schema reuse")."""
+    options = {
+        "header": _flag(config, "header", True),
+        "sep": config.get("separator", ","),
+        "quote": config.get("quote", '"'),
+        "escape": config.get("escape", "\\"),
+        "mode": config.get("mode", "PERMISSIVE"),  # error tolerance (:198)
+        "inferSchema": _flag(config, "infer_schema", True),
+    }
     schema = config.get("schema")
     if schema:
-        reader = reader.schema(schema)
-    df = reader.csv(config["path"])
+        df = spark.read.options(**options).schema(schema).csv(config["path"])
+    else:
+        df = read_inferred(spark, "csv", config["path"], options)
     headers = config.get("headers")  # predefined header names
     if headers:
         df = df.toDF(*headers)
@@ -40,8 +114,9 @@ def csv(spark: SparkSession, config: dict) -> DataFrame:
 
 @source("json")
 def json(spark: SparkSession, config: dict) -> DataFrame:
-    """JSON-lines source with schema inference."""
-    return spark.read.json(config["path"])
+    """JSON-lines source with schema inference, run once per unchanged
+    input and session (FLOWSPEC.md "Schema reuse")."""
+    return read_inferred(spark, "json", config["path"])
 
 
 @source("line", "text")
@@ -136,14 +211,11 @@ def random_source(spark: SparkSession, config: dict) -> DataFrame:
 def time_sequence(spark: SparkSession, config: dict) -> DataFrame:
     """TimeGenerator (TimeGenerator.scala:26-168): timestamp sequence from
     start to end by interval — sequence() + explode, distributed."""
-    start, end = config["start"], config["end"]
-    interval = config.get("interval", "1 day")
+    start = F.lit(config["start"]).cast("timestamp")
+    end = F.lit(config["end"]).cast("timestamp")
+    step = F.lit(config.get("interval", "1 day")).cast("interval")
     name = config.get("result", "time")
-    return spark.sql(
-        f"""SELECT explode(sequence(
-              TIMESTAMP '{start}', TIMESTAMP '{end}',
-              INTERVAL {interval})) AS {name}"""
-    )
+    return spark.range(1).select(F.explode(F.sequence(start, end, step)).alias(name))
 
 
 @source("sql_table")
@@ -185,8 +257,10 @@ def rate_stream(spark: SparkSession, config: dict) -> DataFrame:
 @source("orc")
 def orc(spark: SparkSession, config: dict) -> DataFrame:
     """ORC file/directory source (predicate pushdown + column pruning,
-    same contract as the parquet source — Spark-native reader)."""
-    return spark.read.orc(config["path"])
+    same contract as the parquet source — Spark-native reader). Its schema
+    is inferred once per unchanged input and session (FLOWSPEC.md "Schema
+    reuse")."""
+    return read_inferred(spark, "orc", config["path"])
 
 
 @source("avro")

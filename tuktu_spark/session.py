@@ -50,7 +50,7 @@ def local_checkpoint_conf(default_fs: str, conf: Mapping[str, str]) -> dict[str,
     return {CHECKPOINT_MANAGER_KEY: LOCAL_CHECKPOINT_MANAGER}
 
 
-def _default_fs(spark: SparkSession) -> str:
+def hadoop_default_fs(spark: SparkSession) -> str:
     return spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
 
 
@@ -59,7 +59,7 @@ def apply_local_checkpoint_conf(spark: SparkSession) -> None:
     that is already in use (reading it builds the session state)."""
     if spark.conf.get(CHECKPOINT_MANAGER_KEY, None) is not None:
         return  # chosen already; skip reading the Hadoop conf
-    for k, v in local_checkpoint_conf(_default_fs(spark), {}).items():
+    for k, v in local_checkpoint_conf(hadoop_default_fs(spark), {}).items():
         spark.conf.set(k, v)
 
 
@@ -109,6 +109,6 @@ def get_spark(
     # would build this session's state (~0.4 s) before its first query.
     sc_conf = spark.sparkContext._conf
     caller = {**dict(sc_conf.getAll()), **(extra_conf or {})}
-    for k, v in local_checkpoint_conf(_default_fs(spark), caller).items():
+    for k, v in local_checkpoint_conf(hadoop_default_fs(spark), caller).items():
         sc_conf.set(k, v)
     return spark

@@ -7,10 +7,14 @@ identical either way and keeps predicate pushdown / column pruning intact.
 
 from __future__ import annotations
 
+import os
+import stat
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .session import apply_local_checkpoint_conf
+from .session import apply_local_checkpoint_conf, hadoop_default_fs
 
 # Confs the query layer depends on, applied to ANY session (the driver
 # passes its own SparkSession, not ours — see session.py for the rationale
@@ -105,7 +109,10 @@ def table_path(sf_dir: str, name: str) -> str:
 # tables for every query build. The memo returns the SAME DataFrame
 # object — an immutable PLAN, not data: every action still computes from
 # the parquet files, so this is reader reuse (what any long-lived Spark
-# app does with a catalog table), not result caching.
+# app does with a catalog table), not result caching. An entry is served
+# only while the table's file listing (``listing_signature``) is the one
+# it was built from: the DataFrame holds its file index, so a rewritten
+# table is read again instead of through a stale index.
 #
 # r14 hygiene (r13 verdict #7 / advice #1): the memo now lives ON the
 # SparkSession object (``spark._tuktu_plan_memo``) instead of a global
@@ -118,17 +125,106 @@ def table_path(sf_dir: str, name: str) -> str:
 # for process lifetime — the attribute dict is garbage-collected with
 # the session. Entries are capped (a memo this size means sf_dirs are
 # being generated dynamically; re-resolving is the correct behavior
-# then). sf_dir contents must be immutable within a session — true for
-# the driver corpus and documented in TESTDATA.md.
+# then). The file sources' schema memo (``spark._tuktu_schema_memo``,
+# operators/sources.py) follows the same rules.
 _PLAN_MEMO_MAX_ENTRIES = 64
 
 
-def _plan_memo_of(spark: SparkSession) -> dict:
-    memo = getattr(spark, "_tuktu_plan_memo", None)
+def _session_memo(spark: SparkSession, attr: str) -> dict:
+    memo = getattr(spark, attr, None)
     if memo is None:
         memo = {}
-        spark._tuktu_plan_memo = memo
+        setattr(spark, attr, memo)
     return memo
+
+
+def _plan_memo_of(spark: SparkSession) -> dict:
+    return _session_memo(spark, "_tuktu_plan_memo")
+
+
+def schema_memo_of(spark: SparkSession) -> dict:
+    return _session_memo(spark, "_tuktu_schema_memo")
+
+
+def memo_put(memo: dict, key, value) -> None:
+    """Store into a session memo, clearing it once it holds
+    ``_PLAN_MEMO_MAX_ENTRIES`` other keys."""
+    if key not in memo and len(memo) >= _PLAN_MEMO_MAX_ENTRIES:
+        memo.clear()
+    memo[key] = value
+
+
+# Spark's own glob test (SparkHadoopUtil.isGlobPath).
+_GLOB_CHARS = frozenset("{}[]*?\\")
+# git's "racy clean" window: a file rewritten within one timestamp tick of
+# its listing can keep its size and mtime, so a listing is trusted only
+# once every file in it is older than this.
+_RACY_NS = 2_000_000_000
+
+
+def _local_path(spark: SparkSession, path: str) -> str | None:
+    """The local filesystem path Spark reads for ``path``; None for a glob
+    or a path on another filesystem."""
+    if any(c in _GLOB_CHARS for c in path):
+        return None
+    colon, slash = path.find(":"), path.find("/")
+    if colon != -1 and (slash == -1 or colon < slash):
+        if not path.startswith("file:"):
+            return None
+        path = path[len("file:"):]
+        if path.startswith("//"):
+            if not path.startswith("///"):
+                return None  # file://host/...
+            path = path[2:]
+    else:
+        # a session conf overrides the context's Hadoop conf for reads
+        fs = spark.conf.get("fs.defaultFS", None) or hadoop_default_fs(spark)
+        if not fs.startswith("file:"):
+            return None
+    if not path.startswith("/"):
+        # Hadoop's local FS resolves relative paths against the JVM's cwd
+        path = os.path.join(spark._jvm.java.lang.System.getProperty("user.dir"), path)
+    return path
+
+
+def _listing(root: str) -> list[tuple[str, int, int]]:
+    st = os.stat(root)
+    if not stat.S_ISDIR(st.st_mode):
+        return [("", st.st_size, st.st_mtime_ns)]
+    out, dirs = [], [""]
+    while dirs:
+        rel = dirs.pop()
+        with os.scandir(os.path.join(root, rel)) as entries:
+            for e in entries:
+                name = os.path.join(rel, e.name)
+                if e.is_dir():
+                    dirs.append(name)
+                else:
+                    s = e.stat()
+                    out.append((name, s.st_size, s.st_mtime_ns))
+    return sorted(out)
+
+
+def listing_signature(spark: SparkSession, path: str) -> tuple | None:
+    """The files Spark lists when it reads ``path``: (relative path, size,
+    ``st_mtime_ns``) of every file under it, hidden ones included, sorted.
+    Equal signatures mean an unchanged input, so a memo keyed on one may
+    reuse what it derived from the files.
+
+    None, and nothing may be reused, when the listing cannot vouch for
+    the files: a glob, a non-local filesystem, a missing path, or a file
+    modified less than 2 s ago (racy: a same-size rewrite in the same
+    timestamp tick would leave the signature unchanged)."""
+    local = _local_path(spark, path)
+    if local is None:
+        return None
+    try:
+        files = _listing(local)
+    except OSError:
+        return None
+    if max((f[2] for f in files), default=0) > time.time_ns() - _RACY_NS:
+        return None
+    return tuple(files)
 
 
 def load_table(
@@ -146,10 +242,12 @@ def load_table(
     ensure_session_confs(spark)
     memo = _plan_memo_of(spark)
     key = (sf_dir, name, bool(parallel))
+    path = table_path(sf_dir, name)
+    signature = listing_signature(spark, path)
     cached = memo.get(key)
-    if cached is not None:
-        return cached
-    df = spark.read.parquet(table_path(sf_dir, name))
+    if signature is not None and cached is not None and cached[0] == signature:
+        return cached[1]
+    df = spark.read.parquet(path)
     if parallel:
         df = ensure_parallelism(df)
     if name == "events":
@@ -163,9 +261,8 @@ def load_table(
             # (already micros-truncated, byte-identical to DuckDB). Session
             # TZ is pinned to UTC, so the cast reinterprets the same instant.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    if len(memo) >= _PLAN_MEMO_MAX_ENTRIES:
-        memo.clear()
-    memo[key] = df
+    if signature is not None:
+        memo_put(memo, key, (signature, df))
     return df
 
 
