@@ -301,6 +301,24 @@ def test_operator_returning_nothing_names_node(spark, monkeypatch):
         compile_flow(spark, _one_node_flow("returns_none", {}))
 
 
+@pytest.mark.parametrize(
+    "name, config",
+    [
+        ("duplicate_span_intervals", {"n": 5, "engine": "sql"}),
+        ("remove_duplicate_spans", {"n": 5, "engine": "arrow"}),
+        ("zip_merge", {"order_by": ["a"], "engine": "window"}),
+        ("js_merge", {"order_by": ["a"], "engine": "bounded"}),
+    ],
+)
+def test_removed_engine_key_fails_loudly(spark, name, config):
+    """A flow that still sets the removed ``engine`` key fails at compile
+    time, naming the operator, the key and the node — it must not run a
+    different kernel than the one it asked for."""
+    with pytest.raises(ValueError, match=f"'{name}'.*'engine'") as info:
+        compile_flow(spark, _one_node_flow(name, config))
+    assert f"node p ({name})" in info.value.__notes__
+
+
 @pytest.mark.parametrize("node", ["nope", "dead"])
 def test_run_stream_flow_unknown_or_pruned_node(spark, node):
     """Asking for a node that is not compiled (unknown, or pruned as

@@ -818,30 +818,61 @@ class TestAnnIvf:
         assert all(1 <= r["rank"] <= 3 for r in rows)
 
 
+def _py_minhash(shingles):
+    """Reference MinHash: per hash function, min(((h mod P) * a + b) mod P)
+    over the shingle hashes in exact integer arithmetic; an empty array
+    yields the all-P sentinel."""
+    from tuktu_spark.llm import dedup as D
+
+    P = D.MERSENNE_P
+    if not shingles:
+        return [P] * D.NUM_HASHES
+    return [min(((h % P) * a + b) % P for h in shingles)
+            for a, b in zip(D.HASH_A, D.HASH_B)]
+
+
+def _py_simhash(text):
+    """Reference SimHash: tokens split on Java's \\s class, token hash =
+    first 15 hex chars of md5, bit b set iff more tokens have it set than
+    not; no tokens -> 0."""
+    import hashlib
+    import re
+
+    toks = [t for t in re.split(r"[ \t\n\x0b\f\r]+", text or "") if t]
+    hs = [int(hashlib.md5(t.encode()).hexdigest()[:15], 16) for t in toks]
+    out = 0
+    for b in range(48):
+        ones = sum((h >> b) & 1 for h in hs)
+        if 2 * ones > len(hs):
+            out |= 1 << b
+    return out
+
+
 class TestSignatureEngines:
     def test_arrow_and_sql_signatures_identical(self, spark, sf_dir):
+        """The Arrow MinHash kernel equals the exact-integer reference."""
         from tuktu_spark.llm import dedup as D
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(100)
         h = D.hashed_shingles(docs, "text", "doc_id", 3)
-        arrow = {r["doc_id"]: r["signature"]
-                 for r in D.minhash_signatures_from_hashed(h, "doc_id", "arrow").collect()}
-        sql = {r["doc_id"]: r["signature"]
-               for r in D.minhash_signatures_from_hashed(h, "doc_id", "sql").collect()}
-        assert arrow == sql and len(arrow) == 100
+        rows = h.join(D.minhash_signatures_from_hashed(h, "doc_id"), "doc_id").collect()
+        got = {r["doc_id"]: r["signature"] for r in rows}
+        want = {r["doc_id"]: _py_minhash(r["shingles"]) for r in rows}
+        assert got == want and len(got) == 100
 
     def test_empty_shingles_sentinel_both_engines(self, spark):
         from tuktu_spark.llm import dedup as D
 
         df = spark.createDataFrame([(1, "x"), (2, "a b c d")], "doc_id long, text string")
         h = D.hashed_shingles(df, "text", "doc_id", 3)
-        for engine in ("arrow", "sql"):
-            sigs = {r["doc_id"]: r["signature"]
-                    for r in D.minhash_signatures_from_hashed(h, "doc_id", engine).collect()}
-            assert sigs[1][0] == D.MERSENNE_P  # sentinel for the short doc
-            assert sigs[2][0] < D.MERSENNE_P
+        rows = h.join(D.minhash_signatures_from_hashed(h, "doc_id"), "doc_id").collect()
+        sigs = {r["doc_id"]: r["signature"] for r in rows}
+        assert sigs[1] == [D.MERSENNE_P] * D.NUM_HASHES  # sentinel for the short doc
+        assert sigs[2][0] < D.MERSENNE_P
+        assert all(r["signature"] == _py_minhash(r["shingles"]) for r in rows)
 
     def test_simhash_engines_identical(self, spark, sf_dir):
+        """The Arrow SimHash kernel equals the md5 bit-vote reference."""
         from pyspark.sql import functions as F
 
         from tuktu_spark.llm import dedup as D
@@ -849,12 +880,13 @@ class TestSignatureEngines:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(100)
         extra = spark.createDataFrame([(9001, ""), (9002, "  "), (9003, "one")],
                                       "doc_id long, text string")
-        alld = docs.select("doc_id", "text").unionByName(extra)
-        a = {r["doc_id"]: r["s"] for r in
-             alld.select("doc_id", D.simhash(F.col("text"), "arrow").alias("s")).collect()}
-        b = {r["doc_id"]: r["s"] for r in
-             alld.select("doc_id", D.simhash(F.col("text"), "sql").alias("s")).collect()}
-        assert a == b and a[9001] == 0 and a[9002] == 0
+        rows = (docs.select("doc_id", "text").unionByName(extra)
+                .select("doc_id", "text", D.simhash(F.col("text")).alias("s"))
+                .collect())
+        got = {r["doc_id"]: r["s"] for r in rows}
+        want = {r["doc_id"]: _py_simhash(r["text"]) for r in rows}
+        assert got == want and len(got) == 103
+        assert got[9001] == 0 and got[9002] == 0 and got[9003] != 0
 
 
 class TestMediaCodecsExtra:
@@ -1089,15 +1121,22 @@ class TestDuplicateNgramSpans:
 
 
 def test_ngram_spans_engines_identical(spark, sf_dir):
-    """Arrow (hashlib.md5) and Catalyst (SQL md5) window hashing are
-    bit-identical — pins the 3.5x Arrow fast path to the oracle semantics."""
+    """The Arrow window hash (hashlib.md5) equals the naive window model
+    over the same corpus, the md5 of each window's text included."""
+    import hashlib
+
+    from tests.test_llm_property import naive_ngram_spans
     from tuktu_spark.llm.dedup import duplicate_ngram_spans
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(120)
+    rows = [(r["doc_id"], r["text"]) for r in docs.collect()]
     key = lambda r: (r["doc_id"], r["start_idx"], r["gram_hash"], r["n_dups"])
-    a = sorted(map(key, duplicate_ngram_spans(docs, n=10, engine="arrow").collect()))
-    b = sorted(map(key, duplicate_ngram_spans(docs, n=10, engine="sql").collect()))
-    assert a == b and len(a) > 0
+    got = sorted(map(key, duplicate_ngram_spans(docs, n=10).collect()))
+    want = sorted(
+        (i, j, hashlib.md5(g.encode()).hexdigest(), c)
+        for (i, j), (g, c) in naive_ngram_spans(rows, 10, 2).items()
+    )
+    assert got == want and len(got) > 0
 
 
 class TestIvfIndex:
@@ -1254,15 +1293,15 @@ class TestDuplicateSpanRemoval:
         }  # doc 4 fully duplicated -> dropped
 
     def test_engines_identical_on_corpus(self, spark, sf_dir):
+        """Maximal intervals equal the naive window model merged per doc."""
+        from tests.test_llm_property import naive_span_intervals
         from tuktu_spark.llm.dedup import duplicate_span_intervals
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(150)
+        rows = [(r["doc_id"], r["text"]) for r in docs.collect()]
         key = lambda r: (r["doc_id"], r["span_start"], r["span_end"])
-        a = sorted(map(key, duplicate_span_intervals(docs, n=10,
-                                                     engine="arrow").collect()))
-        b = sorted(map(key, duplicate_span_intervals(docs, n=10,
-                                                     engine="sql").collect()))
-        assert a == b and len(a) > 0
+        got = set(map(key, duplicate_span_intervals(docs, n=10).collect()))
+        assert got == naive_span_intervals(rows, 10, 2) and len(got) > 0
 
     def test_operators_registered(self, spark):
         from tuktu_spark.operators.registry import make_operator

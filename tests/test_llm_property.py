@@ -75,17 +75,42 @@ def test_duplicate_ngram_spans_matches_naive_model(spark, corpus, n):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {(r["doc_id"], r["start_idx"]): r["n_dups"]
            for r in duplicate_ngram_spans(df, n=n, min_count=2).collect()}
+    want = {k: c for k, (_g, c) in naive_ngram_spans(rows, n, 2).items()}
+    assert got == want
 
+
+def naive_ngram_spans(rows, n: int, min_count: int) -> dict:
+    """Naive window model of ``duplicate_ngram_spans``: {(id, start):
+    (gram text, corpus count)} for every n-token window whose text occurs
+    >= min_count times across ``rows`` of (id, text)."""
     grams: Counter = Counter()
     positions = []
     for i, t in rows:
-        toks = [x for x in re.split(r"\s+", t.strip()) if x]
+        toks = [x for x in re.split(r"\s+", (t or "").strip()) if x]
         for j in range(len(toks) - n + 1):
             g = " ".join(toks[j : j + n])
             grams[g] += 1
             positions.append((i, j, g))
-    want = {(i, j): grams[g] for i, j, g in positions if grams[g] >= 2}
-    assert got == want
+    return {(i, j): (g, grams[g]) for i, j, g in positions if grams[g] >= min_count}
+
+
+def naive_span_intervals(rows, n: int, min_count: int) -> set:
+    """(id, span_start, span_end) of ``duplicate_span_intervals``: the
+    flagged starts of ``naive_ngram_spans`` merged per document while
+    consecutive starts are <= n apart; span_end is exclusive."""
+    starts: dict = {}
+    for i, j in sorted(naive_ngram_spans(rows, n, min_count)):
+        starts.setdefault(i, []).append(j)
+    out = set()
+    for i, js in starts.items():
+        lo = prev = js[0]
+        for j in js[1:]:
+            if j - prev > n:
+                out.add((i, lo, prev + n))
+                lo = j
+            prev = j
+        out.add((i, lo, prev + n))
+    return out
 
 
 @settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))

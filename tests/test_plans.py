@@ -423,7 +423,7 @@ def test_zip_merge_default_engine_is_distributed(spark):
     single-partition global window. The default plan numbers both branches
     with the distributed positional kernel (pid-clustered windows +
     broadcast offsets) — no SinglePartition exchange on the data path;
-    engine='window' remains an explicit small-data opt-in."""
+    Indices equal a global ``row_number() OVER (ORDER BY ...)``."""
     from tuktu_spark.operators.registry import make_operator
 
     a = spark.range(0, 2000).selectExpr("id AS pos", "id * 2 AS x")
@@ -441,11 +441,16 @@ def test_zip_merge_default_engine_is_distributed(spark):
     ]
     assert not data_windows, data_windows
 
-    # window engine still selectable and identical
-    w = make_operator("zip_merge", {"order_by": ["pos"], "engine": "window"})(a, b)
-    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, w.collect()))
-
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
+
+    # same rows as a zip on a global row_number window
+    rn = F.row_number().over(Window.orderBy("pos"))
+    w = a.withColumn("rn", rn).drop("pos").join(b.withColumn("rn", rn), "rn")
+    cols = ["x", "pos", "y"]
+    assert sorted(map(tuple, out.select(cols).collect())) == sorted(
+        map(tuple, w.select(cols).collect())
+    )
 
     j = make_operator("js_merge", {"order_by": ["pos"]})(
         a.withColumn("tuktu_js_field", F.array(F.create_map(F.lit("k"), F.lit("v")))),
@@ -509,14 +514,19 @@ def test_bounded_positional_kernel(spark):
     with _pytest.raises(ValueError, match="column names"):
         _global_row_number_bounded(df, [F.col("k").desc()], "rn")
 
-    # zip_merge exposes it
+    # zip_merge takes it for a plain ascending order
     from tuktu_spark.operators.registry import make_operator
 
     x = spark.range(0, 300).selectExpr("id AS pos", "id * 2 AS a")
     y = spark.range(0, 300).selectExpr("id AS pos", "id * 3 AS b")
-    zb = make_operator("zip_merge", {"order_by": ["pos"], "engine": "bounded"})(x, y)
-    zw = make_operator("zip_merge", {"order_by": ["pos"], "engine": "window"})(x, y)
-    assert sorted(map(tuple, zb.collect())) == sorted(map(tuple, zw.collect()))
+    zb = make_operator("zip_merge", {"order_by": ["pos"]})(x, y)
+    assert "hashpartitioning(__bkt__" in plan_of(zb)
+    rn = F.row_number().over(W.orderBy("pos"))
+    zw = x.withColumn("rn", rn).drop("pos").join(y.withColumn("rn", rn), "rn")
+    cols = ["pos", "a", "b"]
+    assert sorted(map(tuple, zb.select(cols).collect())) == sorted(
+        map(tuple, zw.select(cols).collect())
+    )
 
 
 def test_js_merge_bounded_engine(spark):
@@ -534,9 +544,19 @@ def test_js_merge_bounded_engine(spark):
     )
     key = lambda r: (r["pos"], r["x"], r["y"],
                      tuple(tuple(sorted(m.items())) for m in r["tuktu_js_field"]))
-    jb = make_operator("js_merge", {"order_by": ["pos"], "engine": "bounded"})(a, b)
-    jw = make_operator("js_merge", {"order_by": ["pos"], "engine": "window"})(a, b)
-    assert sorted(map(key, jb.collect())) == sorted(map(key, jw.collect()))
+    jb = make_operator("js_merge", {"order_by": ["pos"]})(a, b)
+    assert "hashpartitioning(__bkt__" in plan_of(jb)
+    # reference: zip on a global row_number window; the js column by hand
+    # (b's "k" key is dropped, its "m" map kept)
+    from pyspark.sql import Window
+
+    rn = F.row_number().over(Window.orderBy("pos"))
+    jw = a.withColumn("rn", rn).drop("pos").join(
+        b.withColumn("rn", rn).drop("tuktu_js_field"), "rn"
+    )
+    js = ((("k", "v"),), (), (("m", "z"),))
+    want = sorted((r["pos"], r["x"], r["y"], js) for r in jw.collect())
+    assert sorted(map(key, jb.collect())) == want and len(want) == 200
 
 
 def test_query_builds_release_prior_positional_persists(spark, sf_dir, registry):

@@ -1,5 +1,6 @@
 """POS tagger + RBEM polarity tests: rule semantics hand-checked, negation
-flips, SQL-oracle generator parity with the Column chain."""
+flips, the Arrow kernels against their pure-Python reference models, and
+SQL-oracle generator parity."""
 
 from __future__ import annotations
 
@@ -146,9 +147,11 @@ class TestRbem:
 
 class TestRbemEngines:
     def test_arrow_and_sql_identical_with_both_flip_directions(self, spark, sf_dir):
+        """The Arrow scorer equals the per-doc reference ``_score_doc``
+        bit for bit, with left and right flips both in play."""
         from pyspark.sql import functions as F
 
-        from tuktu_spark.ml.rbem import rbem_polarity
+        from tuktu_spark.ml.rbem import _score_doc, rbem_polarity
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
             "doc_id", F.split("text", " ").alias("tokens")
@@ -161,13 +164,17 @@ class TestRbemEngines:
         alld = docs.unionByName(extra)
         kw = dict(positive=["fast"], negative=["slow"], left_flips=["not"],
                   right_flips=["the"], decay=2.0, max_distance=20)
-        a = {r["doc_id"]: r["polarity"] for r in
-             rbem_polarity(alld, "tokens", engine="arrow", **kw)
-             .select("doc_id", "polarity").collect()}
-        b = {r["doc_id"]: r["polarity"] for r in
-             rbem_polarity(alld, "tokens", engine="sql", **kw)
-             .select("doc_id", "polarity").collect()}
-        assert a == b and a[9002] == 0.0
+        rows = rbem_polarity(alld, "tokens", **kw).select(
+            "doc_id", "tokens", "polarity"
+        ).collect()
+        sets = [frozenset(kw[k]) for k in
+                ("positive", "negative", "left_flips", "right_flips")]
+        got = {r["doc_id"]: r["polarity"] for r in rows}
+        want = {r["doc_id"]: _score_doc(r["tokens"], *sets, 2.0, 20) for r in rows}
+        assert got == want and len(got) == 153
+        # 9001 by hand: signs (-, +, +, +, -) from the flips at 1 and 3;
+        # emissions 2^-|i-0| + 2^-|i-4| - 2^-|i-2| -> -1.875
+        assert got[9001] == -1.875 and got[9002] == 0.0
 
 
 class TestRbemPerLanguage:
@@ -234,7 +241,8 @@ class TestRbemPerLanguage:
 
 class TestPosEngines:
     def test_arrow_and_sql_identical(self, spark, sf_dir):
-        from tuktu_spark.ml.rbem import pos_tags
+        """The Arrow tagger equals ``pos_tag_python`` token by token."""
+        from tuktu_spark.ml.rbem import pos_tag_python, pos_tags
 
         d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
             "doc_id", F.split("text", " ").alias("toks")
@@ -244,12 +252,12 @@ class TestPosEngines:
                       "fez", "Dogs", "a1B", ""]), (99998, [])],
             "doc_id long, toks array<string>",
         )
-        d = d.unionByName(extra)
-        a = {r["doc_id"]: r["t"] for r in
-             d.select("doc_id", pos_tags(F.col("toks"), engine="arrow").alias("t")).collect()}
-        b = {r["doc_id"]: r["t"] for r in
-             d.select("doc_id", pos_tags(F.col("toks"), engine="sql").alias("t")).collect()}
-        assert a == b
+        rows = d.unionByName(extra).select(
+            "doc_id", "toks", pos_tags(F.col("toks")).alias("t")
+        ).collect()
+        assert len(rows) == 202
+        for r in rows:
+            assert r["t"] == [pos_tag_python(t) for t in r["toks"]], r["doc_id"]
 
     def test_python_mirror_matches_case_sql(self, duck):
         from tuktu_spark.ml.rbem import pos_tag_case_sql, pos_tag_python
@@ -358,15 +366,6 @@ class TestScoreBatchKernel:
         b = {r["doc_id"]: r["polarity"] for r in via_split.collect()}
         assert a == b
 
-    def test_split_rejected_on_sql_engine(self, spark):
-        import pytest as _pytest
-
-        from tuktu_spark.ml.rbem import rbem_polarity
-
-        df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-        with _pytest.raises(ValueError, match="arrow"):
-            rbem_polarity(df, tokens_col="text", engine="sql", split=" ")
-
     def test_trailing_empty_and_none_docs(self):
         """Round-6 review fix: a batch ENDING in empty/None docs used to
         IndexError in seg_incl_cumsum (start offset == flat length)."""
@@ -397,3 +396,61 @@ class TestScoreBatchKernel:
                for r in rbem_polarity(df, positive=["fast"], negative=[],
                                       left_flips=[], right_flips=[]).collect()}
         assert out[1] == 1.5 and out[2] == 0.0 and out[3] == 0.0
+
+
+_OUTSIDE_CWD_SCRIPT = r"""
+import sys
+
+sys.path.insert(0, sys.argv[1])  # the driver finds the package; workers must not
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+from tuktu_spark.ml.rbem import pos_tags
+
+def tag(spark):
+    df = spark.createDataFrame([(["The", "cats", "ran"],)], "toks array<string>")
+    return df.select(pos_tags(F.col("toks")).alias("t")).first()["t"]
+
+if sys.argv[2] == "get_spark":
+    from tuktu_spark.session import get_spark
+
+    spark = get_spark(master="local[1]", shuffle_partitions=1,
+                      extra_conf={"spark.driver.memory": "1g"})
+else:
+    from tuktu_spark.tables import ensure_session_confs
+
+    spark = SparkSession.builder.master("local[1]").getOrCreate()
+    try:
+        tag(spark)
+        print("FOREIGN SESSION TAGGED WITHOUT THE FIX")
+    except Exception as e:
+        assert "No module named 'tuktu_spark'" in str(e), str(e)[-2000:]
+    ensure_session_confs(spark)
+print("TAGS", tag(spark))
+spark.stop()
+"""
+
+
+@pytest.mark.parametrize("how", ["get_spark", "ensure_session_confs"])
+def test_arrow_udf_workers_import_package_from_any_cwd(tmp_path, how):
+    """The Arrow kernels run in Python workers that import ``tuktu_spark``;
+    a session started with its cwd outside the repo must still tag. The
+    foreign-session case first shows the failure without the fix."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ)
+    # no route to the package through the inherited environment
+    keep = [p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+            if p and os.path.abspath(p) != root]
+    env["PYTHONPATH"] = os.pathsep.join(keep)
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", _OUTSIDE_CWD_SCRIPT, root, how],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "TAGS ['DT', 'NNS', 'VBD']" in proc.stdout, proc.stdout
+    assert "WITHOUT THE FIX" not in proc.stdout

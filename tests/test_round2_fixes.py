@@ -303,30 +303,46 @@ class TestRound4AdviceFixes:
 
 
 class TestZipMergeDistributed:
-    """engine='distributed' removes the single-partition funnel while
-    assigning the same positional indices (round-4 perf_weak #1)."""
+    """zip_merge numbers branches with the distributed positional kernel
+    (no single-partition funnel) yet assigns the same positional indices
+    as a global ``row_number() OVER (ORDER BY ...)`` (round-4 perf_weak
+    #1); the references below are built from that window directly."""
 
     def test_identical_to_window_engine(self, spark):
+        from pyspark.sql import Window
+        from pyspark.sql import functions as F
+
         from tuktu_spark.operators import make_operator
 
         a = spark.range(0, 500).selectExpr("id AS k", "id * 2 AS va")
         b = spark.range(0, 500).selectExpr("id AS k2", "id * 3 AS vb")
-        cfg = {"order_by": {"0": ["k"], "1": ["k2"]}}
-        w = make_operator("zip_merge", cfg)(a, b)
-        d = make_operator("zip_merge", {**cfg, "engine": "distributed"})(a, b)
+        d = make_operator("zip_merge", {"order_by": {"0": ["k"], "1": ["k2"]}})(a, b)
+        w = a.withColumn("rn", F.row_number().over(Window.orderBy("k"))).join(
+            b.withColumn("rn", F.row_number().over(Window.orderBy("k2"))), "rn"
+        )
         key = lambda r: (r["k"], r["va"], r["k2"], r["vb"])
         assert sorted(map(key, w.collect())) == sorted(map(key, d.collect()))
+        assert d.count() == 500
 
     def test_padding_engine_equivalence(self, spark):
+        from pyspark.sql import Window
+        from pyspark.sql import functions as F
+
         from tuktu_spark.operators import make_operator
 
         a = spark.range(0, 300).selectExpr("id AS k", "id AS va")
         b = spark.range(0, 120).selectExpr("id AS k", "id * 7 AS vb")
-        cfg = {"order_by": ["k"], "padding": True}
-        w = make_operator("zip_merge", cfg)(a, b)
-        d = make_operator("zip_merge", {**cfg, "engine": "distributed"})(a, b)
+        d = make_operator("zip_merge", {"order_by": ["k"], "padding": True})(a, b)
+        rn = F.row_number().over(Window.orderBy("k"))
+        # padded rows keep the longer branch's fields; b's k wins elsewhere
+        w = (
+            a.withColumn("rn", rn)
+            .join(b.withColumn("rn", rn).withColumnRenamed("k", "kb"), "rn", "full")
+            .select(F.coalesce("kb", "k").alias("k"), "va", "vb")
+        )
         key = lambda r: (r["k"], r["va"], r["vb"])
         assert sorted(map(key, w.collect()), key=str) == sorted(map(key, d.collect()), key=str)
+        assert d.count() == 300
 
     def test_distributed_numbering_is_parallel(self, spark):
         from tuktu_spark.operators.joins import _global_row_number

@@ -420,80 +420,52 @@ def minhash_signatures(
     )
 
 
-def minhash_signature_col(shingles_col, engine: str = "arrow"):
+def minhash_signature_col(shingles_col):
     """The MinHash signature as a COLUMN over an array<long> shingle
     column (optimization r13): lets a pipeline persist ONE
     (id, shingles, signature) table — one cache build, one pass — where
     attaching signatures via ``minhash_signatures_from_hashed`` + join
     took a second persist and an extra join job. Empty arrays yield the
-    sentinel signature (every entry MERSENNE_P), same as before."""
-    if engine == "arrow":
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
+    sentinel signature (every entry MERSENNE_P), same as before.
 
-        p_u = np.uint64(MERSENNE_P)
-        p_i = np.int64(MERSENNE_P)
-        a_vec = np.asarray(HASH_A, dtype=np.uint64)
-        b_vec = np.asarray(HASH_B, dtype=np.uint64)
-        sentinel = [int(MERSENNE_P)] * NUM_HASHES
+    Vectorized numpy inside an Arrow pandas UDF: the
+    (n_shingles x NUM_HASHES) min-hash matrix is one uint64 broadcast
+    multiply (all operands are 31-bit, so products stay under 2^62 —
+    native machine arithmetic, no bignum). Measured 2.3x the Catalyst
+    fold it replaced at sf0.1. (NUM_HASHES separate
+    array_min(transform(...)) columns re-evaluate the shingle pipeline
+    per hash function: 64x the work; rejected by measurement.)"""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
 
-        def np_sig(shingles: pd.Series) -> pd.Series:
-            def one(arr):
-                if arr is None or len(arr) == 0:
-                    return sentinel
-                x = np.asarray(arr, dtype=np.int64) % p_i  # pmod: xxhash64 is signed
-                x = np.where(x < 0, x + p_i, x).astype(np.uint64)
-                m = (x[:, None] * a_vec[None, :] + b_vec[None, :]) % p_u
-                return m.min(axis=0).astype(np.int64).tolist()
+    p_u = np.uint64(MERSENNE_P)
+    p_i = np.int64(MERSENNE_P)
+    a_vec = np.asarray(HASH_A, dtype=np.uint64)
+    b_vec = np.asarray(HASH_B, dtype=np.uint64)
+    sentinel = [int(MERSENNE_P)] * NUM_HASHES
 
-            return shingles.map(one)
+    def np_sig(shingles: pd.Series) -> pd.Series:
+        def one(arr):
+            if arr is None or len(arr) == 0:
+                return sentinel
+            x = np.asarray(arr, dtype=np.int64) % p_i  # pmod: xxhash64 is signed
+            x = np.where(x < 0, x + p_i, x).astype(np.uint64)
+            m = (x[:, None] * a_vec[None, :] + b_vec[None, :]) % p_u
+            return m.min(axis=0).astype(np.int64).tolist()
 
-        np_sig.__annotations__ = {"shingles": pd.Series, "return": pd.Series}
-        sig_udf = pandas_udf("array<long>")(np_sig)
-        return sig_udf(shingles_col)
+        return shingles.map(one)
 
-    ab = F.array(
-        *[
-            F.struct(
-                F.lit(HASH_A[i]).cast("long").alias("a"),
-                F.lit(HASH_B[i]).cast("long").alias("b"),
-            )
-            for i in range(NUM_HASHES)
-        ]
-    )
-    return F.aggregate(
-        shingles_col,
-        F.array_repeat(F.lit(MERSENNE_P).cast("long"), NUM_HASHES),
-        lambda acc, x: F.zip_with(
-            acc,
-            ab,
-            # pmod: xxhash64 values are signed; % would keep the sign
-            lambda m, c: F.least(m, (F.pmod(x, MERSENNE_P) * c["a"] + c["b"]) % MERSENNE_P),
-        ),
-    )
+    np_sig.__annotations__ = {"shingles": pd.Series, "return": pd.Series}
+    sig_udf = pandas_udf("array<long>")(np_sig)
+    return sig_udf(shingles_col)
 
 
-def minhash_signatures_from_hashed(
-    h: DataFrame, id_col: str = "doc_id", engine: str = "arrow"
-) -> DataFrame:
-    """Signatures from a precomputed (id, array<long> shingles) frame.
-
-    engine='arrow' (default): vectorized numpy inside an Arrow pandas UDF
-    — the (n_shingles x NUM_HASHES) min-hash matrix is one uint64
-    broadcast multiply (all operands are 31-bit, so products stay under
-    2^62 — native machine arithmetic, no bignum). Measured 2.3x the
-    Catalyst fold at sf0.1; bit-identical output (pinned in tests).
-
-    engine='sql': the pure-JVM single fold over the shingle array
-    updating all NUM_HASHES minima per step. Kept for UDF-free
-    deployments. (The third option — NUM_HASHES separate
-    array_min(transform(...)) columns — re-evaluates the shingle
-    pipeline per hash function: 64x the work; rejected by measurement.)
-    """
+def minhash_signatures_from_hashed(h: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Signatures from a precomputed (id, array<long> shingles) frame."""
     return h.select(
         F.col(id_col),
-        minhash_signature_col(F.col("shingles"), engine).alias("signature"),
+        minhash_signature_col(F.col("shingles")).alias("signature"),
     )
 
 
@@ -850,23 +822,18 @@ def minhash_batch_vs_corpus_pairs(
 SIMHASH_BITS = 48  # of the 60-bit base hash; stays clear of int64 sign
 
 
-def simhash(text_col, engine: str = "arrow") -> "F.Column":
+def simhash(text_col) -> "F.Column":
     """SimHash over whitespace tokens: per-bit majority vote of token
     hashes, packed into SIMHASH_BITS. A doc with NO tokens gets simhash 0
     (no votes) — per-doc value semantics keep every row, but the pair
     search (simhash_near_pairs) excludes token-less docs so they don't
     all collide on the zero signature.
 
-    engine='arrow' (default): hashlib.md5 (identical to SQL md5) with a
-    per-batch distinct-token memo + one numpy bit matrix per doc —
-    measured 2.6x the interpreted Catalyst fold at sf0.1, bit-identical
-    (pinned in tests). engine='sql': pure-JVM array algebra."""
-    if engine == "arrow":
-        return _simhash_arrow(_tokens(text_col))
-    return _simhash_from_tokens(_tokens(text_col))
-
-
-def _simhash_arrow(toks_col) -> "F.Column":
+    Token hash = the first 15 hex chars of hashlib.md5 (the same value as
+    SQL ``conv(substring(md5(t), 1, 15), 16, 10)``), with a per-batch
+    distinct-token memo + one numpy bit matrix per doc inside an Arrow
+    UDF — measured 2.6x the interpreted Catalyst fold it replaced at
+    sf0.1."""
     import hashlib
 
     import numpy as np
@@ -881,7 +848,6 @@ def _simhash_arrow(toks_col) -> "F.Column":
         def hval(t: str) -> int:
             v = memo.get(t)
             if v is None:
-                # == conv(substring(md5(t),1,15),16,10): first 15 hex chars
                 v = int(hashlib.md5(t.encode()).hexdigest()[:15], 16)
                 memo[t] = v
             return v
@@ -897,41 +863,7 @@ def _simhash_arrow(toks_col) -> "F.Column":
         return toks.map(one)
 
     sh.__annotations__ = {"toks": pd.Series, "return": pd.Series}
-    return pandas_udf("long")(sh)(toks_col)
-
-
-def _simhash_from_tokens(toks) -> "F.Column":
-    """SimHash from an already-materialized token array column (projected
-    once by callers that also need the token count — Catalyst does not CSE
-    the split across lambda boundaries)."""
-    hashes = F.transform(
-        toks, lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
-    )
-    # Single fold updating all SIMHASH_BITS vote counters per token hash —
-    # one md5 per token (vs. SIMHASH_BITS re-evaluations if each bit were
-    # its own F.aggregate over the inlined token pipeline). Bit tests use
-    # literal masks (h & (1<<b)) since shift amounts must be literals.
-    masks = F.array(
-        *[F.lit(1 << b).cast("long") for b in range(SIMHASH_BITS)]
-    )
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS),
-        lambda acc, h: F.zip_with(
-            acc,
-            masks,
-            lambda v, m: v + F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1),
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(
-            votes,
-            masks,
-            lambda v, m: F.when(v > 0, m).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    return pandas_udf("long")(sh)(_tokens(text_col))
 
 
 def simhash_table(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -1153,7 +1085,6 @@ def duplicate_ngram_spans(
     id_col: str = "doc_id",
     n: int = 50,
     min_count: int = 2,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Substring-level duplication signal (Lee et al. 2022, "Deduplicating
     Training Data Makes Language Models Better" — public paper): every
@@ -1163,52 +1094,40 @@ def duplicate_ngram_spans(
     them.
 
     Spark-first topology instead of the paper's suffix array: hashed
-    sliding windows (per-row array algebra, no shuffle) and ONE shuffle
+    sliding windows (a per-row Arrow UDF, no shuffle) and ONE shuffle
     clustering by gram hash, with the count as a window function over
     that same partitioning — no join, no second exchange. Linear in
     corpus tokens and hash-distributed, so it scales to 100 TB where a
     global suffix array cannot."""
+    import hashlib
+    import re as _re
+
+    import pandas as pd
     from pyspark.sql import Window
+    from pyspark.sql.functions import pandas_udf
 
-    if engine == "arrow":
-        # hashlib.md5 == SQL md5, so the window build + hash moves into an
-        # Arrow batch (round-4 lesson: interpreted Catalyst lambdas lose
-        # to vectorized Python for genuine per-element string work;
-        # measured ~3x here at sf0.1). Bit-identical to engine='sql'
-        # (pinned in tests).
-        import hashlib
-        import re as _re
+    # hashlib.md5 == SQL md5: the window build + hash runs in an Arrow
+    # batch (round-4 lesson: interpreted Catalyst lambdas lose to
+    # vectorized Python for genuine per-element string work; measured ~3x
+    # the Catalyst window hash it replaced at sf0.1)
+    ws = _re.compile(r"\s+")
 
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
+    def win_hashes(texts):
+        def one(t):
+            if t is None:
+                return []
+            toks = [x for x in ws.split(t.strip()) if x]
+            if len(toks) < n:
+                return []
+            return [
+                hashlib.md5(" ".join(toks[i : i + n]).encode()).hexdigest()
+                for i in range(len(toks) - n + 1)
+            ]
 
-        ws = _re.compile(r"\s+")
+        return texts.map(one)
 
-        def win_hashes(texts):
-            def one(t):
-                if t is None:
-                    return []
-                toks = [x for x in ws.split(t.strip()) if x]
-                if len(toks) < n:
-                    return []
-                return [
-                    hashlib.md5(" ".join(toks[i : i + n]).encode()).hexdigest()
-                    for i in range(len(toks) - n + 1)
-                ]
-
-            return texts.map(one)
-
-        win_hashes.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-        grams = pandas_udf("array<string>")(win_hashes)(F.col(text_col))
-    else:
-        toks = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: x != "")
-        grams = F.when(
-            F.size(toks) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - n),
-                lambda i: F.md5(F.array_join(F.slice(toks, i + 1, n), " ")),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
+    win_hashes.__annotations__ = {"texts": pd.Series, "return": pd.Series}
+    grams = pandas_udf("array<string>")(win_hashes)(F.col(text_col))
     hashed = df.select(
         F.col(id_col), F.posexplode(grams).alias("start_idx", "gram_hash")
     )
@@ -1227,7 +1146,6 @@ def duplicate_span_intervals(
     id_col: str = "doc_id",
     n: int = 50,
     min_count: int = 2,
-    engine: str = "arrow",
 ) -> DataFrame:
     """MAXIMAL duplicated spans (round 6): merge the flagged n-token
     windows of ``duplicate_ngram_spans`` into per-document maximal
@@ -1242,9 +1160,9 @@ def duplicate_span_intervals(
     the lag window, the island cumsum, and the island groupBy all ride
     the same hashpartitioning(id) (prefix rule; the fold itself is the
     shared merge_start_intervals)."""
-    spans = duplicate_ngram_spans(
-        df, text_col, id_col, n, min_count, engine
-    ).select(id_col, "start_idx")
+    spans = duplicate_ngram_spans(df, text_col, id_col, n, min_count).select(
+        id_col, "start_idx"
+    )
     return merge_start_intervals(spans, id_col, n)
 
 
@@ -1254,7 +1172,6 @@ def remove_duplicate_spans(
     id_col: str = "doc_id",
     n: int = 50,
     min_count: int = 2,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Rewrite each document DROPPING the tokens inside its maximal
     duplicated spans (the Lee et al. substring-removal stage;
@@ -1271,7 +1188,7 @@ def remove_duplicate_spans(
     re-joins the corpus on id and the token filter is per-row array
     algebra — one corpus-scale shuffle for the join beyond the interval
     build."""
-    iv = duplicate_span_intervals(df, text_col, id_col, n, min_count, engine)
+    iv = duplicate_span_intervals(df, text_col, id_col, n, min_count)
     return remove_interval_tokens(df, iv, text_col, id_col)
 
 

@@ -20,8 +20,10 @@ seam for a vector matcher is the `match_expr` hook. decay defaults to 2.0
 (reference: e): dyadic decay makes scores exact binary fractions, so the
 driver oracle can check them bit-for-bit across engines.
 
-Everything is per-row array algebra (transform/aggregate/filter) — zero
-Python in the scan path, embarrassingly parallel at any scale.
+The tagger and the polarity scorer are Arrow pandas UDFs (per-batch
+Python/numpy kernels, no shuffle); ``rbem_emissions`` and the oracle
+generators are per-row Column/SQL algebra. Every path is per-row,
+embarrassingly parallel at any scale.
 """
 
 from __future__ import annotations
@@ -107,54 +109,9 @@ _NNP_RE = "^[A-Z].*"
 _CD_RE = "^[0-9]+([.,][0-9]+)?$"
 
 
-def _pos_tag_pair(tok: Column, low: Column) -> Column:
-    """Tag one token given (token, pre-lowered token): lexicon, then shape,
-    then suffix rules, default NN. Deterministic string algebra only —
-    ``pos_tag_case_sql`` emits the exact same decision chain as an ANSI
-    CASE for the DuckDB oracle.
-
-    The lexicon is a literal-map lookup rather than a 47-branch when
-    chain: HOF lambda bodies are interpreted with no CSE, so the chain
-    form re-evaluated lower(tok) once per branch per token (measured
-    5.7x slower at sf0.1)."""
-    expr = F.lit("NN")
-    # applied in reverse so earlier rules end up outermost (= win)
-    for suffix, tag in _trained()[1][::-1]:
-        expr = F.when(
-            low.endswith(suffix) & (F.length(low) > len(suffix) + 2), F.lit(tag)
-        ).otherwise(expr)
-    # shape rules beat suffixes
-    expr = F.when(tok.rlike(_CD_RE), F.lit("CD")).otherwise(expr)
-    expr = F.when(tok.rlike(_NNP_RE) & (low != tok), F.lit("NNP")).otherwise(expr)
-    # lexicon beats everything (nested first-letter lookup, see
-    # _pos_lexicon_map; missing letter -> null inner map -> null -> expr)
-    return F.coalesce(_pos_lexicon_map()[F.substring(low, 1, 1)][low], expr)
-
-
-def _pos_lexicon_map() -> Column:
-    """First-letter-bucketed nested map literal. GetMapValue on a literal
-    map is a LINEAR key scan; the trained lexicon is ~450 entries, so a
-    flat map costs ~450 string compares per token (measured 2.2x slower
-    at sf0.1). Two nested lookups scan ~26 + ~25 keys instead."""
-    buckets: dict[str, dict[str, str]] = {}
-    for w, t in _trained()[2].items():
-        buckets.setdefault(w[0], {})[w] = t
-    outer_items = []
-    for ch, words in sorted(buckets.items()):
-        inner = F.create_map(*[F.lit(x) for kv in sorted(words.items()) for x in kv])
-        outer_items += [F.lit(ch), inner]
-    return F.create_map(*outer_items)
-
-
-def _pos_tag_one(tok: Column) -> Column:
-    """Single-token form (kept for composability); prefer ``pos_tags`` for
-    arrays — it stages lower(t) once per token through a struct."""
-    return _pos_tag_pair(tok, F.lower(tok))
-
-
 def pos_tag_case_sql(tok: str = "tok") -> str:
     """The tagger's decision chain as a DuckDB CASE expression — generated
-    from the SAME rule tables as the Column version, so the oracle cannot
+    from the SAME rule tables as ``pos_tag_python``, so the oracle cannot
     drift from the implementation."""
     by_tag: dict[str, list[str]] = {}
     for w, t in _trained()[2].items():
@@ -177,9 +134,9 @@ def pos_tag_case_sql(tok: str = "tok") -> str:
 
 
 def pos_tag_python(tok: str) -> str:
-    """Pure-Python mirror of the Column decision chain — the SAME tables,
-    the SAME precedence (lexicon > NNP shape > CD > suffix > NN). Used by
-    the Arrow engine and by tests as the reference model."""
+    """Tag one token: lexicon, then shape, then suffix rules, default NN
+    — the SAME tables and precedence (lexicon > NNP shape > CD > suffix >
+    NN) as ``pos_tag_case_sql``. The per-token kernel of ``pos_tags``."""
     import re
 
     lexicon, suffix_rules, full = _trained()
@@ -197,11 +154,17 @@ def pos_tag_python(tok: str) -> str:
     return "NN"
 
 
-def pos_tags_arrow(tokens_col) -> Column:
-    """Arrow engine for ``pos_tags``: per-batch distinct-token memo + dict
-    lexicon lookup (O(1) vs the nested map literal's ~50 string compares
-    per token; corpora repeat tokens massively so most tokens are one
-    memo hit). Bit-identical to the Column chain (pinned in tests)."""
+def pos_tags(tokens_col) -> Column:
+    """array<string> of heuristic POS tags, aligned with the token array
+    (POSTaggerProcessor contract: tags parallel to tokens). Swap point for
+    a real model: a pandas_udf with the same (array<string>) ->
+    (array<string>) signature.
+
+    Per-batch distinct-token memo + dict lexicon lookup in an Arrow UDF
+    (corpora repeat tokens massively, so most tokens are one memo hit):
+    with the round-5 trained lexicon (~450 entries) this beat the
+    interpreted Catalyst Column chain it replaced ~2x at sf0.1. The DuckDB
+    oracle CASE is generated from the same tables."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -223,28 +186,6 @@ def pos_tags_arrow(tokens_col) -> Column:
 
     tag_all.__annotations__ = {"arrs": pd.Series, "return": pd.Series}
     return pandas_udf("array<string>")(tag_all)(tokens_col)
-
-
-def pos_tags(tokens_col, engine: str = "arrow") -> Column:
-    """array<string> of heuristic POS tags, aligned with the token array
-    (POSTaggerProcessor contract: tags parallel to tokens). Swap point for
-    a real model: a pandas_udf with the same (array<string>) ->
-    (array<string>) signature.
-
-    engine='arrow' (default): per-batch memoized dict lookup — with the
-    round-5 trained lexicon (~450 entries) this beats the interpreted
-    Column chain ~2x at sf0.1. engine='sql': pure-JVM Column algebra;
-    lower(t) is materialized ONCE per token via a staged struct (Catalyst
-    interprets HOF lambda bodies without CSE, so inlining it would
-    recompute the lowering for every rule branch). Both engines are
-    pinned identical; the DuckDB oracle CASE is generated from the same
-    tables either way."""
-    if engine == "arrow":
-        return pos_tags_arrow(tokens_col)
-    staged = F.transform(
-        tokens_col, lambda t: F.struct(t.alias("t"), F.lower(t).alias("l"))
-    )
-    return F.transform(staged, lambda s: _pos_tag_pair(s["t"], s["l"]))
 
 
 def with_pos_tags(df: DataFrame, tokens_col: str = "tokens", out_col: str = "pos") -> DataFrame:
@@ -317,109 +258,57 @@ def rbem_polarity(
     max_distance: int = 20,
     discretize: bool = False,
     out_col: str = "polarity",
-    engine: str = "arrow",
     split: str | None = None,
 ) -> DataFrame:
     """RBEMPolarityProcessor (Sentiment.scala:20-75): polarity score =
     sum(positive emissions) - sum(negative emissions); ``discretize``
     maps to the sign, matching the reference's option (:123-127).
 
-    ``split`` (arrow engine only): treat ``tokens_col`` as RAW TEXT and
-    split on the literal separator INSIDE the Arrow kernel — identical
-    tokens to ``F.split(text, sep)`` (str.split keeps empty fields the
-    same way; pinned in tests). Ships one string per doc instead of a
-    list<string> column: measured NEUTRAL on the 54-token bench corpus
-    (Arrow list overhead is small at that length) — use it for
-    long-document corpora where the per-token offsets dominate the
-    transfer.
+    ``split``: treat ``tokens_col`` as RAW TEXT and split on the literal
+    separator INSIDE the Arrow kernel — identical tokens to
+    ``F.split(text, sep)`` (str.split keeps empty fields the same way;
+    pinned in tests). Ships one string per doc instead of a list<string>
+    column: measured NEUTRAL on the 54-token bench corpus (Arrow list
+    overhead is small at that length) — use it for long-document corpora
+    where the per-token offsets dominate the transfer.
 
-    engine='arrow' (default): one numpy |positions| x |seeds| decay
-    matrix per doc. With decay=2 every emission is a dyadic rational, so
-    partial sums are EXACT doubles in any summation order — the Arrow
-    result is bit-identical to the Catalyst fold (pinned in tests)
-    despite the different reduction order; measured 2x at sf0.1.
-    engine='sql': pure-JVM fold. In that path the match-position arrays
-    are MATERIALIZED in their own projection before the per-position
-    fold: Catalyst does not CSE across lambda boundaries, so referencing
-    an inline filter(zip_with(...)) from inside transform would
-    recompute it once per position — O(n^2) re-tokenization per row
-    (measured 10x on the driver corpus)."""
+    The score is one ``_score_batch`` call per Arrow batch. With decay=2
+    every emission is a dyadic rational, so partial sums are EXACT
+    doubles in any summation order — bit-identical to the per-doc
+    reference ``_score_doc`` and the DuckDB oracle (pinned in tests);
+    measured 2x the Catalyst fold it replaced at sf0.1."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
     positive = positive if positive is not None else DEFAULT_POSITIVE
     negative = negative if negative is not None else DEFAULT_NEGATIVE
     left_flips = left_flips if left_flips is not None else []
     right_flips = right_flips if right_flips is not None else DEFAULT_NEGATORS
-
     if split is not None:
         _validate_literal_split(split)
-    if engine == "arrow":
-        return _rbem_polarity_arrow(
-            df, tokens_col, positive, negative, left_flips, right_flips,
-            decay, max_distance, discretize, out_col, split,
-        )
-    if split is not None:
-        raise ValueError("split= is supported by the arrow engine only")
 
-    toks = F.transform(F.col(tokens_col), lambda t: F.lower(t))
-    n = F.size("__toks")
-    idx = F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)))
+    pos, neg = frozenset(positive), frozenset(negative)
+    lf, rf = frozenset(left_flips), frozenset(right_flips)
+    base = float(decay)
+    maxd = int(max_distance)
 
-    def positions_of(words: list[str]) -> Column:
-        arr = (
-            F.array(*[F.lit(w) for w in words])
-            if words
-            else F.array().cast("array<string>")
-        )
-        return F.filter(
-            F.zip_with(
-                F.col("__toks"),
-                F.col("__idx"),
-                lambda t, i: F.when(F.array_contains(arr, t), i),
-            ),
-            lambda x: x.isNotNull(),
+    def score(toks: pd.Series) -> pd.Series:
+        arrs = toks.to_numpy()
+        if split is not None:
+            # literal split, empty fields kept — token-identical to
+            # F.split(text, split) on the JVM side
+            arrs = [None if t is None else t.split(split) for t in arrs]
+        return pd.Series(
+            _score_batch(arrs, pos, neg, lf, rf, base, maxd),
+            index=toks.index,
         )
 
-    staged = (
-        df.withColumn("__toks", toks)
-        .withColumn("__idx", F.when(n == 0, F.array().cast("array<int>")).otherwise(idx))
-        .withColumns(
-            {
-                "__sp": positions_of(positive),
-                "__sn": positions_of(negative),
-                "__lf": positions_of(left_flips),
-                "__rf": positions_of(right_flips),
-            }
-        )
-    )
-    base = F.lit(float(decay))
-
-    def score_at(seed_col: str):
-        def at(i: Column) -> Column:
-            raw = F.aggregate(
-                F.col(seed_col),
-                F.lit(0.0),
-                lambda acc, s: acc
-                + F.pow(
-                    base,
-                    -F.least(F.abs(i - s), F.lit(int(max_distance))).cast("double"),
-                ),
-            )
-            n_right = F.size(F.filter(F.col("__rf"), lambda f: f <= i))
-            n_left = F.size(F.filter(F.col("__lf"), lambda f: f >= i))
-            sign = F.when(
-                F.pmod(n_right + n_left, F.lit(2)) == 1, F.lit(-1.0)
-            ).otherwise(F.lit(1.0))
-            return raw * sign
-
-        return F.aggregate(
-            F.transform(F.col("__idx"), at), F.lit(0.0), lambda acc, x: acc + x
-        )
-
-    score = score_at("__sp") - score_at("__sn")
+    score.__annotations__ = {"toks": pd.Series, "return": pd.Series}
+    u = pandas_udf("double")(score)
+    out = df.withColumn(out_col, u(F.col(tokens_col)))
     if discretize:
-        score = F.signum(score)
-    return staged.withColumn(out_col, score).drop(
-        "__toks", "__idx", "__sp", "__sn", "__lf", "__rf"
-    )
+        out = out.withColumn(out_col, F.signum(F.col(out_col)))
+    return out
 
 
 def _validate_literal_split(split: str) -> None:
@@ -443,8 +332,7 @@ def _score_doc(arr, pos, neg, lf, rf, base, maxd) -> float:
     """Score ONE token array — the per-doc REFERENCE implementation. The
     production Arrow paths use ``_score_batch`` (same arithmetic,
     batch-vectorized lowering/membership); tests pin the two equal row by
-    row. Dyadic decay keeps the result bit-identical to the Catalyst
-    fold."""
+    row."""
     import numpy as np
 
     if arr is None or len(arr) == 0:
@@ -500,9 +388,9 @@ def _score_batch(arrs, pos, neg, lf, rf, base: float, maxd: int):
 
     With dyadic decay (default 2.0) every pair term is an exact multiple
     of 2^-maxd, so the reordered summation is bit-identical to
-    ``_score_doc`` and the Catalyst fold (pinned in tests); for
-    non-dyadic decay the result may differ from the fold by float
-    rounding, as any reduction-order change would.
+    ``_score_doc`` (pinned in tests); for non-dyadic decay the result may
+    differ from it by float rounding, as any reduction-order change
+    would.
 
     Pair expansion is chunked (~4M pairs) so worst-case seed-dense docs
     cannot blow batch memory. Returns float64 aligned with ``arrs``."""
@@ -576,46 +464,6 @@ def _score_batch(arrs, pos, neg, lf, rf, base: float, maxd: int):
             np.repeat(seed_doc[lo:hi], r), weights=contrib, minlength=n_docs
         )
         lo = hi
-    return out
-
-
-def _rbem_polarity_arrow(
-    df: DataFrame,
-    tokens_col: str,
-    positive: list[str],
-    negative: list[str],
-    left_flips: list[str],
-    right_flips: list[str],
-    decay: float,
-    max_distance: int,
-    discretize: bool,
-    out_col: str,
-    split: str | None = None,
-) -> DataFrame:
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    pos, neg = frozenset(positive), frozenset(negative)
-    lf, rf = frozenset(left_flips), frozenset(right_flips)
-    base = float(decay)
-    maxd = int(max_distance)
-
-    def score(toks: pd.Series) -> pd.Series:
-        arrs = toks.to_numpy()
-        if split is not None:
-            # literal split, empty fields kept — token-identical to
-            # F.split(text, split) on the JVM side
-            arrs = [None if t is None else t.split(split) for t in arrs]
-        return pd.Series(
-            _score_batch(arrs, pos, neg, lf, rf, base, maxd),
-            index=toks.index,
-        )
-
-    score.__annotations__ = {"toks": pd.Series, "return": pd.Series}
-    u = pandas_udf("double")(score)
-    out = df.withColumn(out_col, u(F.col(tokens_col)))
-    if discretize:
-        out = out.withColumn(out_col, F.signum(F.col(out_col)))
     return out
 
 

@@ -13,7 +13,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .registry import operator
+from .registry import operator, reject_removed_keys
 
 _HOW = {
     "inner": "inner",
@@ -344,70 +344,63 @@ def _global_prefix_sum(
     )
 
 
+def _zip_branches(dfs, order_by, padding: bool, rename=None) -> DataFrame:
+    """Number every branch with the positional kernel, then zip them on
+    the row number — later branches overwrite shared fields. ``rename``
+    maps (branch index, numbered frame) to the frame that joins the zip
+    (js_merge moves its js column aside there). Keeps ``__rn__``."""
+    numbered = []
+    for i, df in enumerate(dfs):
+        ob = order_by[str(i)] if isinstance(order_by, dict) else order_by
+        num = _global_row_number_auto(df, ob, "__rn__")
+        numbered.append(rename(i, num) if rename else num)
+    how = "full" if padding else "inner"
+    out = numbered[0]
+    for nxt in numbered[1:]:
+        dup = [c for c in nxt.columns if c in out.columns and c != "__rn__"]
+        if padding:
+            # zipAll pads the shorter branch with an EMPTY row map, so
+            # on padded rows the surviving branch's fields must win:
+            # keep the earlier value where the later branch has no row.
+            renames = {c: f"__prev_{c}__" for c in dup}
+            prev = out
+            for c, r in renames.items():
+                prev = prev.withColumnRenamed(c, r)
+            joined = prev.join(nxt, "__rn__", how)
+            for c, r in renames.items():
+                joined = joined.withColumn(
+                    c, F.coalesce(F.col(c), F.col(r))
+                ).drop(r)
+            out = joined
+        else:
+            out = out.drop(*dup).join(nxt, "__rn__", how)
+    return out
+
+
 @operator("zip_merge", "simple_merge")
 def zip_merge(config: dict):
     """SimpleMerger (merge/BaseMergers.scala:14-21): positional zip-union of
     branch rows, later branches overwrite shared fields, via row_number
     equi-join over an explicit per-branch order.
 
-    SCALE NOTE: positional zip requires a GLOBAL row order. The default
-    ``engine='distributed'`` (round 6 — previously 'window') numbers each
-    branch with the distributed positional kernel: a range-partitioned
-    sort + per-partition row_number + broadcast cumulative partition
-    offsets assigns the same indices with every stage parallel (see
-    _global_row_number) — no branch ever collapses to one task.
-    ``engine='window'`` remains the explicit small-data opt-in: a global
-    window (single-partition, like the reference's single-actor
-    SimpleMerger) with one fewer exchange — fine only for branch sizes
-    that fit one executor. ``engine='bounded'`` (ascending plain-column
-    orders only) is the fault-tolerant persist-free kernel: literal range
-    boundaries make the bucket id a pure function of the data
-    (_global_row_number_bounded). For truly huge data prefer a keyed
-    join on a real key.
+    SCALE NOTE: positional zip requires a GLOBAL row order. Each branch is
+    numbered with the distributed positional kernel — no branch ever
+    collapses to one task, unlike the reference's single-actor
+    SimpleMerger. Plain ascending column orders take the fault-tolerant
+    persist-free kernel (literal range boundaries make the bucket id a
+    pure function of the data, _global_row_number_bounded); desc or
+    expression orders take the persist-pinned range-partitioned kernel
+    (_global_row_number). Both assign the same indices as
+    ``row_number() OVER (ORDER BY ...)``. For truly huge data prefer a
+    keyed join on a real key.
 
-    config.order_by: {branch_index(str): [cols]} or a single list for all.
+    config: {order_by: {branch_index(str): [cols]} or a single list for
+    all, padding (PaddingMerger: keep the longer side)}.
     """
+    reject_removed_keys("zip_merge", config, "engine")
     order_by = config["order_by"]
-    padding = bool(config.get("padding", False))  # PaddingMerger: keep longer side
-    engine = config.get("engine", "distributed")
-
-    def transform(*dfs: DataFrame) -> DataFrame:
-        numbered = []
-        for i, df in enumerate(dfs):
-            ob = order_by[str(i)] if isinstance(order_by, dict) else order_by
-            if engine == "distributed":
-                # auto: plain ascending orders take the persist-free
-                # bounded kernel (round 7), others the persist kernel
-                numbered.append(_global_row_number_auto(df, ob, "__rn__"))
-                continue
-            if engine == "bounded":
-                numbered.append(_global_row_number_bounded(df, ob, "__rn__"))
-                continue
-            w = Window.orderBy(*ob)
-            numbered.append(df.withColumn("__rn__", F.row_number().over(w)))
-        how = "full" if padding else "inner"
-        out = numbered[0]
-        for nxt in numbered[1:]:
-            dup = [c for c in nxt.columns if c in out.columns and c != "__rn__"]
-            if padding:
-                # zipAll pads the shorter branch with an EMPTY row map, so
-                # on padded rows the surviving branch's fields must win:
-                # keep the earlier value where the later branch has no row.
-                renames = {c: f"__prev_{c}__" for c in dup}
-                prev = out
-                for c, r in renames.items():
-                    prev = prev.withColumnRenamed(c, r)
-                joined = prev.join(nxt, "__rn__", how)
-                for c, r in renames.items():
-                    joined = joined.withColumn(
-                        c, F.coalesce(F.col(c), F.col(r))
-                    ).drop(r)
-                out = joined
-            else:
-                out = out.drop(*dup).join(nxt, "__rn__", how)
-        return out.drop("__rn__")
-
-    return transform
+    padding = bool(config.get("padding", False))
+    return lambda *dfs: _zip_branches(dfs, order_by, padding).drop("__rn__")
 
 
 @operator("js_merge")
@@ -423,10 +416,11 @@ def js_merge(config: dict):
     (flatten/map_keys to collect seen keys, map_filter to drop them).
 
     config: {order_by (as zip_merge), js_field (default 'tuktu_js_field'),
-    padding}. Shares zip_merge's engine choice (default 'distributed';
-    'window' is the explicit small-data opt-in)."""
+    padding}. Numbers branches with zip_merge's positional kernel."""
+    reject_removed_keys("js_merge", config, "engine")
     js_field = config.get("js_field", "tuktu_js_field")
-    base = zip_merge({k: v for k, v in config.items() if k != "js_field"})
+    order_by = config["order_by"]
+    padding = bool(config.get("padding", False))
 
     def merge_js(a, b):
         seen = F.flatten(F.transform(a, lambda m: F.map_keys(m)))
@@ -443,49 +437,18 @@ def js_merge(config: dict):
     def transform(*dfs: DataFrame) -> DataFrame:
         have = [df for df in dfs if js_field in df.columns]
         if len(have) < 2:
-            return base(*dfs)
-        # zip-merge everything but the js column, then fold the js columns
-        # positionally with the key-precedence concat
-        order_by = config["order_by"]
-        padding = bool(config.get("padding", False))
-        engine = config.get("engine", "distributed")
-        numbered = []
-        for i, df in enumerate(dfs):
-            ob = order_by[str(i)] if isinstance(order_by, dict) else order_by
-            if engine == "distributed":
-                num = _global_row_number_auto(df, ob, "__rn__")
-            elif engine == "bounded":
-                num = _global_row_number_bounded(df, ob, "__rn__")
-            else:
-                num = df.withColumn(
-                    "__rn__", F.row_number().over(Window.orderBy(*ob))
-                )
-            numbered.append(
-                num.withColumnRenamed(js_field, f"__js{i}__")
-                if js_field in df.columns
-                else num
-            )
-        how = "full" if padding else "inner"
-        out = numbered[0]
-        for nxt in numbered[1:]:
-            dup = [
-                c
-                for c in nxt.columns
-                if c in out.columns and c != "__rn__" and not c.startswith("__js")
-            ]
-            if padding:
-                renames = {c: f"__prev_{c}__" for c in dup}
-                prev = out
-                for c, r in renames.items():
-                    prev = prev.withColumnRenamed(c, r)
-                joined = prev.join(nxt, "__rn__", how)
-                for c, r in renames.items():
-                    joined = joined.withColumn(
-                        c, F.coalesce(F.col(c), F.col(r))
-                    ).drop(r)
-                out = joined
-            else:
-                out = out.drop(*dup).join(nxt, "__rn__", how)
+            return _zip_branches(dfs, order_by, padding).drop("__rn__")
+        # zip-merge everything but the js column (each branch's moves to
+        # its own __js<i>__, so it never counts as a shared field), then
+        # fold the js columns positionally with the key-precedence concat
+        out = _zip_branches(
+            dfs,
+            order_by,
+            padding,
+            lambda i, num: num.withColumnRenamed(js_field, f"__js{i}__")
+            if js_field in num.columns
+            else num,
+        )
         js_cols = [f"__js{i}__" for i in range(len(dfs)) if f"__js{i}__" in out.columns]
         # A padded full join (or a plain NULL cell) leaves NULL js columns;
         # the reference zipAll-pads with empty lists, keeping the surviving

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from ..llm import dedup as D
 from ..llm import text as T
-from .registry import operator
+from .registry import operator, reject_removed_keys
 
 
 @operator("exact_dedup")
@@ -629,14 +629,14 @@ def media_frame_timestamps(config: dict):
 def duplicate_span_intervals_op(config: dict):
     """Maximal duplicated-span intervals (merged n-gram windows — the
     Lee et al. removal unit). config: {text_field, id_field, n,
-    min_count, engine}."""
+    min_count}."""
+    reject_removed_keys("duplicate_span_intervals", config, "engine")
     return lambda df: D.duplicate_span_intervals(
         df,
         config.get("text_field", "text"),
         config.get("id_field", "doc_id"),
         int(config.get("n", 50)),
         int(config.get("min_count", 2)),
-        config.get("engine", "arrow"),
     )
 
 
@@ -644,14 +644,14 @@ def duplicate_span_intervals_op(config: dict):
 def remove_duplicate_spans_op(config: dict):
     """Substring-removal stage: rewrite documents dropping tokens inside
     maximal duplicated spans; fully-duplicated docs are dropped.
-    config: {text_field, id_field, n, min_count, engine}."""
+    config: {text_field, id_field, n, min_count}."""
+    reject_removed_keys("remove_duplicate_spans", config, "engine")
     return lambda df: D.remove_duplicate_spans(
         df,
         config.get("text_field", "text"),
         config.get("id_field", "doc_id"),
         int(config.get("n", 50)),
         int(config.get("min_count", 2)),
-        config.get("engine", "arrow"),
     )
 
 

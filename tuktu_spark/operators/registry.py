@@ -42,6 +42,18 @@ def source(name: str, *aliases: str):
     return deco
 
 
+def reject_removed_keys(op: str, config: dict, *keys: str) -> None:
+    """Raise ValueError if ``config`` still sets a key that ``op`` no
+    longer reads — a flow written for the old option would otherwise run
+    silently with a behaviour other than the one it asked for."""
+    for k in keys:
+        if k in config:
+            raise ValueError(
+                f"operator {op!r}: config key {k!r} has been removed; "
+                f"delete it from the flow config"
+            )
+
+
 def make_operator(name: str, config: dict[str, Any] | None = None) -> Transform:
     if name not in OPERATORS:
         raise UnknownOperatorError(

@@ -24,6 +24,12 @@ rename over a file), so the first attempt's state stays (FLOWSPEC.md,
 "Streaming flows"). Sessions on HDFS or an object store keep Spark's
 default; an explicit ``spark.sql.streaming.checkpointFileManagerClass``
 always wins.
+
+The Arrow kernels (POS tags, RBEM polarity, MinHash, SimHash, n-gram
+spans, ...) run as pandas UDFs whose Python workers import
+``tuktu_spark``. ``add_package_to_worker_path`` puts the directory holding
+the package on the workers' PYTHONPATH, so they import it whatever the
+driver's working directory is.
 """
 
 from __future__ import annotations
@@ -38,6 +44,19 @@ LOCAL_CHECKPOINT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def add_package_to_worker_path(sc) -> None:
+    """Prepend ``PACKAGE_PARENT`` to ``sc.environment["PYTHONPATH"]``.
+    Every Python UDF created afterwards carries that environment to its
+    workers (a plain dict update: no conf access, no session state).
+    Idempotent. On a cluster whose executors do not share the driver's
+    filesystem, ship the package with ``addPyFile`` as usual."""
+    env = sc.environment
+    parts = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PACKAGE_PARENT not in parts:
+        env["PYTHONPATH"] = os.pathsep.join([PACKAGE_PARENT, *parts])
 
 
 def local_checkpoint_conf(default_fs: str, conf: Mapping[str, str]) -> dict[str, str]:
@@ -111,4 +130,5 @@ def get_spark(
     caller = {**dict(sc_conf.getAll()), **(extra_conf or {})}
     for k, v in local_checkpoint_conf(hadoop_default_fs(spark), caller).items():
         sc_conf.set(k, v)
+    add_package_to_worker_path(spark.sparkContext)
     return spark

@@ -14,7 +14,11 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .session import apply_local_checkpoint_conf, hadoop_default_fs
+from .session import (
+    add_package_to_worker_path,
+    apply_local_checkpoint_conf,
+    hadoop_default_fs,
+)
 
 # Confs the query layer depends on, applied to ANY session (the driver
 # passes its own SparkSession, not ours — see session.py for the rationale
@@ -74,7 +78,8 @@ def ensure_session_confs(spark: SparkSession) -> None:
 
     Idempotent and cheap; called from ``load_table`` and the query registry
     so the driver's vanilla session behaves like ``session.get_spark()``'s,
-    streaming checkpoint manager included (``session.local_checkpoint_conf``).
+    streaming checkpoint manager (``session.local_checkpoint_conf``) and
+    worker PYTHONPATH (``session.add_package_to_worker_path``) included.
     """
     for k, v in _SESSION_CONFS.items():
         try:
@@ -83,6 +88,7 @@ def ensure_session_confs(spark: SparkSession) -> None:
         except Exception:
             spark.conf.set(k, v)
     apply_local_checkpoint_conf(spark)
+    add_package_to_worker_path(spark.sparkContext)
 
 
 TABLES = (
