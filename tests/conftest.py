@@ -130,6 +130,17 @@ def spark():
     yield spark
 
 
+@pytest.fixture(autouse=True)
+def _release_persists():
+    """Drop the persists a test's library calls left behind
+    (tables.persist): outside run_flow and query builds nothing releases
+    them, and the session is shared by the whole suite."""
+    yield
+    from tuktu_spark.tables import release
+
+    release()
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

@@ -268,6 +268,6 @@ class TestPersistFeaturesKnob:
             assert sorted(map(tuple, cached.collect())) == base
         finally:
             spark.conf.unset("spark.tuktu.dsir.persistFeatures")
-            from tuktu_spark.llm.dedup import release_persisted
+            from tuktu_spark.tables import release
 
-            release_persisted()
+            release()

@@ -1089,3 +1089,120 @@ def test_build_jobs_carry_their_node_id(spark, tmp_path):
     nodes = {"node src (json)", "node keep (filter)", "node sink (parquet_sink)"}
     assert labels and set(labels) <= nodes
     assert {"node src (json)", "node sink (parquet_sink)"} <= set(labels)
+
+
+# --- persist lifetime (tables.persist / tables.release) ---------------------
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _cached_relations(df) -> int:
+    return df._jdf.queryExecution().withCachedData().toString().count(
+        "InMemoryRelation"
+    )
+
+
+def test_two_dedup_nodes_keep_both_caches_until_the_action(spark, sf_dir):
+    """A flow with two dedup-family nodes on one source: building the
+    second node must not drop the first node's caches before the action
+    (each node's plan reads the same caches as when built alone)."""
+    def flow(*nodes):
+        procs = {
+            "jac": {"id": "jac", "name": "jaccard_dedup",
+                    "config": {"threshold": 0.5}, "next": []},
+            "mh": {"id": "mh", "name": "minhash_dedup",
+                   "config": {"threshold": 0.5}, "next": []},
+        }
+        return {
+            "generators": [{
+                "id": "src", "name": "parquet",
+                "config": {"path": f"{sf_dir}/documents.parquet"},
+                "next": list(nodes),
+            }],
+            "processors": [procs[n] for n in nodes],
+        }
+
+    alone, want = {}, {}
+    for n in ("jac", "mh"):
+        df = run_flow(spark, flow(n))[n]
+        alone[n] = _cached_relations(df)
+        want[n] = sorted(map(tuple, df.collect()))
+    assert alone["jac"] > 0 and alone["mh"] > 0
+    both = run_flow(spark, flow("jac", "mh"))
+    assert {n: _cached_relations(df) for n, df in both.items()} == alone
+    assert {n: sorted(map(tuple, df.collect())) for n, df in both.items()} == want
+
+
+def test_cached_node_persists_do_not_pile_up_across_runs(spark):
+    """Five runs of an inline-fed flow with a ``cache: true`` node hold at
+    most one run's cache; release() returns to the baseline."""
+    from tuktu_spark.tables import release
+
+    flow = {
+        "generators": [{
+            "id": "g", "name": "inline", "cache": True,
+            "config": {"rows": [[1], [2], [3]], "columns": ["v"]},
+            "next": ["keep"],
+        }],
+        "processors": [
+            {"id": "keep", "name": "filter", "config": {"expression": "${v} > 1"},
+             "next": []},
+        ],
+    }
+    release()
+    baseline = len(_persistent_rdd_ids(spark))
+    for _ in range(5):
+        assert run_flow(spark, flow)["keep"].count() == 2
+    assert len(_persistent_rdd_ids(spark)) <= baseline + 1
+    release()
+    assert len(_persistent_rdd_ids(spark)) == baseline
+
+
+def test_rerun_of_cached_fanout_recomputes(spark, sf_dir):
+    """A re-run of a cached fan-out over an unchanged parquet source
+    builds its own cache instead of reading the previous run's."""
+    flow = {
+        "generators": [{
+            "id": "src", "name": "parquet",
+            "config": {"path": f"{sf_dir}/orders.parquet"}, "next": ["big"],
+        }],
+        "processors": [
+            {"id": "big", "name": "filter", "cache": True,
+             "config": {"expression": "${o_totalprice} > 1000"},
+             "next": ["n_open", "n_done"]},
+            {"id": "n_open", "name": "filter",
+             "config": {"expression": "${o_orderstatus} == 'O'"}, "next": []},
+            {"id": "n_done", "name": "filter",
+             "config": {"expression": "${o_orderstatus} == 'F'"}, "next": []},
+        ],
+    }
+    counts, ids = [], []
+    for _ in range(2):
+        before = _persistent_rdd_ids(spark)
+        out = run_flow(spark, flow)
+        counts.append({n: df.count() for n, df in out.items()})
+        ids.append(_persistent_rdd_ids(spark) - before)
+    assert counts[0] == counts[1]
+    assert len(ids[1]) == 1  # the second run materialized a fresh cache
+    assert not (ids[0] & _persistent_rdd_ids(spark))  # the first run's is gone
+
+
+def test_cache_operator_released_by_next_run_flow(spark):
+    from pyspark import StorageLevel
+
+    def flow(op):
+        return {
+            "generators": [{
+                "id": "g", "name": "inline",
+                "config": {"rows": [[1], [2]], "columns": ["v"]}, "next": ["c"],
+            }],
+            "processors": [{"id": "c", "name": op, "config": {}, "next": []}],
+        }
+
+    cached = run_flow(spark, flow("cache"))["c"]
+    assert cached.count() == 2
+    assert cached.storageLevel != StorageLevel.NONE
+    run_flow(spark, flow("distinct"))
+    assert cached.storageLevel == StorageLevel.NONE

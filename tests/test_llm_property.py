@@ -145,13 +145,13 @@ def test_global_row_number_matches_enumerate(spark, vals, parts):
     from tuktu_spark.operators.joins import _global_row_number
 
     df = spark.createDataFrame([(v,) for v in vals], "k long").repartition(parts)
-    from tuktu_spark.operators.joins import release_positional_persisted
+    from tuktu_spark.tables import release
 
     try:
         got = {r["k"]: r["rn"]
                for r in _global_row_number(df, ["k"], "rn").collect()}
     finally:
-        release_positional_persisted()
+        release()
     want = {v: i + 1 for i, v in enumerate(sorted(vals))}
     assert got == want
 
@@ -167,13 +167,13 @@ def test_global_prefix_sum_matches_running_total(spark, rows, parts):
     from tuktu_spark.operators.joins import _global_prefix_sum
 
     df = spark.createDataFrame(rows, "k long, v long").repartition(parts)
-    from tuktu_spark.operators.joins import release_positional_persisted
+    from tuktu_spark.tables import release
 
     try:
         got = {r["k"]: r["c"]
                for r in _global_prefix_sum(df, ["k"], "v", "c").collect()}
     finally:
-        release_positional_persisted()
+        release()
     cum, want = 0, {}
     for k, v in sorted(rows):
         cum += v

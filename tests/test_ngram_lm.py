@@ -263,9 +263,9 @@ class TestPlanShape:
         from tests.test_plans import plan_of
         from tuktu_spark.tables import load_table
 
-        from tuktu_spark.llm.dedup import release_persisted
+        from tuktu_spark.tables import release
 
-        release_persisted()
+        release()
         d = load_table(spark, sf_dir, "documents").select(
             "doc_id", F.split("text", " ").alias("tokens")
         )
@@ -286,7 +286,7 @@ class TestPlanShape:
         # window, and all five broadcast sides are filters over it.
         assert plan.count("hashpartitioning(doc_id") == 1
         assert plan.count("InMemoryRelation") >= 5  # 5 refs to the cache
-        release_persisted()
+        release()
 
 
 class TestArpa:

@@ -246,29 +246,3 @@ class TestBm25EdgeSemantics:
         idf = math.log(1 + (2 - 2 + 0.5) / (2 + 0.5))
         norm = 1 * 2.2 / (1 + 1.2 * (0.25 + 0.75 * 4 / 2.5))
         assert abs(r["bm25"] - idf * norm) < 1e-12
-
-    def test_persist_dl_engine_bit_identical_and_conf_driven(self, spark):
-        # r14: persist_dl=True (the cluster-scale 2-scan shape) must be
-        # bit-identical to the default lineage shape, and the
-        # spark.tuktu.bm25.persistDl conf must drive the default
-        from tuktu_spark.ml.nlp import bm25
-
-        docs = spark.createDataFrame(
-            [(1, "apple banana apple"), (1, "cherry date"), (2, ""), (3, "apple fig")],
-            "doc_id long, text string",
-        )
-        key = lambda r: (r["doc_id"], r["term"])  # noqa: E731
-        base = sorted(map(tuple, bm25(docs).collect()))
-        assert sorted(map(tuple, bm25(docs, persist_dl=True).collect())) == base
-        spark.conf.set("spark.tuktu.bm25.persistDl", "true")
-        try:
-            cached = bm25(docs)  # default now resolves to the persist path
-            assert any(
-                "InMemoryTableScan" in l
-                for l in cached._sc._jvm.PythonSQLUtils.explainString(
-                    cached._jdf.queryExecution(), "simple"
-                ).splitlines()
-            )
-            assert sorted(map(tuple, cached.collect())) == base
-        finally:
-            spark.conf.unset("spark.tuktu.bm25.persistDl")

@@ -476,20 +476,20 @@ class TestSources:
         cache, and dropping every cached block between two full
         evaluations (the recompute simulation available in local mode)
         must select the same lines."""
-        from tuktu_spark.operators.joins import _POSITIONAL_PERSISTED
+        from tuktu_spark import tables as T
 
         for i in range(4):
             (tmp_path / f"part-{i}.txt").write_text(
                 "".join(f"f{i}l{j}\n" for j in range(25))
             )
-        before = len(_POSITIONAL_PERSISTED)
+        before = len(T._PERSISTS)
         df = make_source(
             spark,
             "line",
             {"path": str(tmp_path), "start_line": 10, "end_line": 79, "result": "line"},
         )
         first = sorted(r["line"] for r in df.collect())
-        assert len(_POSITIONAL_PERSISTED) == before, "bounded kernel must not persist"
+        assert len(T._PERSISTS) == before, "bounded kernel must not persist"
         assert len(first) == 70
         # drop every cached/shuffle-cached block, then re-evaluate the SAME
         # DataFrame: all stages recompute from the file scan

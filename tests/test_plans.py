@@ -467,10 +467,8 @@ def test_bounded_positional_kernel(spark):
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    from tuktu_spark.operators.joins import (
-        _global_row_number_bounded,
-        release_positional_persisted,
-    )
+    from tuktu_spark import tables as T
+    from tuktu_spark.operators.joins import _global_row_number_bounded
 
     # skewed + tied keys across many partitions
     df = (
@@ -494,13 +492,10 @@ def test_bounded_positional_kernel(spark):
     }
 
     # no persist registered, no InMemoryRelation in the plan
-    release_positional_persisted()
-    from tuktu_spark.operators import joins as J
-
-    before = len(J._POSITIONAL_PERSISTED)
+    T.release()
     out = _global_row_number_bounded(df, ["k", "payload"], "rn")
     out.count()
-    assert len(J._POSITIONAL_PERSISTED) == before
+    assert not T._PERSISTS
     assert "InMemoryRelation" not in plan_of(out)
 
     # two independent builds agree exactly (value-determined boundaries)
@@ -563,17 +558,18 @@ def test_query_builds_release_prior_positional_persists(spark, sf_dir, registry)
     """r5 ADVICE (medium): building a query releases the positional
     persists pinned by PREVIOUS query builds, so driver/bench loops
     cannot accumulate cached sorted copies."""
-    from tuktu_spark.operators import joins as J
+    from tuktu_spark import tables as T
 
     q = registry["zip_merge_branches"].fn
     q(spark, sf_dir).count()
-    n_after_first = len(J._POSITIONAL_PERSISTED)
-    assert n_after_first > 0  # the kernel did pin this build's sort
+    pinned = list(T._PERSISTS)
+    assert pinned  # the kernel did pin this build's sort
     q(spark, sf_dir).count()
     # second build released the first build's pins before adding its own
-    assert len(J._POSITIONAL_PERSISTED) <= n_after_first
-    J.release_positional_persisted()
-    assert not J._POSITIONAL_PERSISTED
+    assert len(T._PERSISTS) == len(pinned)
+    assert not any(p is df for p in pinned for df in T._PERSISTS)
+    T.release()
+    assert not T._PERSISTS
 
 
 def test_plan_audit_covers_live_bench_set(registry):

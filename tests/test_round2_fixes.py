@@ -185,21 +185,34 @@ class TestDummyVariablesCap:
 
 class TestScopedPersist:
     def test_no_cache_leak_across_runs(self, spark, sf_dir):
-        """Cache count is DELTA-stable across repeated pipeline runs (other
+        """Cache count is DELTA-stable across repeated flow runs and query
+        builds: each entry releases the previous run's persists (other
         tests in the shared session may hold their own caches)."""
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(50)
+        from tuktu_spark.flow import run_flow
+        from tuktu_spark.queries import load_all
+        from tuktu_spark.tables import release
+
         jvm_sc = spark.sparkContext._jsc.sc()
-        D.release_persisted()
+        release()
         baseline = jvm_sc.getPersistentRDDs().size()
-        for _ in range(3):
-            D.minhash_dedup_pairs(docs).count()
-        # each run released the previous run's persists: at most one run's
-        # worth outstanding (minhash persists shingles + signatures)
-        assert jvm_sc.getPersistentRDDs().size() <= baseline + 2
-        for _ in range(3):
-            D.ngram_jaccard_pairs(docs).count()
-        assert jvm_sc.getPersistentRDDs().size() <= baseline + 2
-        D.release_persisted()
+        flow = {
+            "generators": [{
+                "id": "src", "name": "parquet",
+                "config": {"path": f"{sf_dir}/documents.parquet"}, "next": ["mh"],
+            }],
+            "processors": [
+                {"id": "mh", "name": "minhash_dedup", "config": {}, "next": []},
+            ],
+        }
+        q = load_all()["dedup_ngram_jaccard"].fn
+        for build in (lambda: run_flow(spark, flow)["mh"], lambda: q(spark, sf_dir)):
+            build().count()
+            one_run = jvm_sc.getPersistentRDDs().size()
+            assert one_run > baseline
+            for _ in range(2):
+                build().count()
+            assert jvm_sc.getPersistentRDDs().size() == one_run
+        release()
         assert jvm_sc.getPersistentRDDs().size() <= baseline
 
 

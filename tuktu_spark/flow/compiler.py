@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..expressions import substitute_config, substitute_meta
 from ..operators import make_operator, make_source
+from ..tables import persist, release
 
 
 class FlowError(ValueError):
@@ -123,7 +124,7 @@ def compile_flow(
             e.add_note(label)
             raise
         if g.get("cache"):
-            outputs[gid] = outputs[gid].cache()
+            outputs[gid] = persist(outputs[gid])
 
     # --- processors in topological order ---
     remaining = set(reachable)
@@ -154,7 +155,7 @@ def compile_flow(
                     f"operator {node['name']!r} at node {nid!r} returned no DataFrame"
                 )
             if node.get("cache"):
-                out = out.cache()
+                out = persist(out)
             outputs[nid] = out
             remaining.discard(nid)
             progressed = True
@@ -172,12 +173,10 @@ def run_flow(
     """Compile and return the flow's terminal outputs ({leaf_id: DataFrame}).
     Sink operators (parquet_sink, console, ...) execute as they compile.
 
-    Positional-kernel persists from PREVIOUS flow runs are released on
-    entry (ADVICE r5: repeated flow runs must not accumulate cached sorted
-    copies); this run's persists stay pinned for its returned DataFrames."""
-    from ..operators.joins import release_positional_persisted
-
-    release_positional_persisted()
+    Persists from PREVIOUS flow runs and query builds are released on
+    entry (tables.release); this run's stay pinned for its returned
+    DataFrames."""
+    release()
     spec = substitute_meta(substitute_config(_load(flow), params or {}), meta or {})
     outputs = compile_flow(spark, spec, _substituted=True)
     leaves = {}

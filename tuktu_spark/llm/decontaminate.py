@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import tables
 from .dedup import _shingles_from_tokens, _tokens
 
 
@@ -192,18 +193,13 @@ def fuzzy_contamination_pairs(
             "contamination"
         )
 
-    from .dedup import (
-        _persist_scoped,
-        minhash_signature_col,
-        release_persisted,
-    )
+    from .dedup import minhash_signature_col
 
-    release_persisted()
     # ONE persisted (eval_id, shingles, signature) table (optimization
     # r13, the dedup family's single-cache shape): the signature is a
     # pure column over the shingle array, so attaching it via a second
     # persist + self-join was an extra cache build and join job per run.
-    eval_tbl = _persist_scoped(
+    eval_tbl = tables.persist(
         _fuzzy_shingled(eval_set, eval_text, eval_id, n, normalize)
         .withColumn("signature", minhash_signature_col(F.col("shingles")))
         .select(eval_id, "shingles", "signature")
@@ -276,17 +272,15 @@ def _fuzzy_pairs_against(
     points; this tail takes only the resolved literal.
 
     ``persist=True`` (the batch entry point) caches the corpus shingle
-    table under the dedup family's scoped-cache protocol
-    (_persist_scoped / release_persisted): the corpus chain feeds BOTH
-    the banding branch and the verification branch, so uncached it is
-    tokenized + minhashed twice per action. The streaming processor
-    leaves it off — its per-micro-batch corpus is batch-sized, and a
-    scoped cache would accumulate across batches with no release
-    point."""
+    table (tables.persist, held until the next run_flow or query build):
+    the corpus chain feeds BOTH the banding branch and the verification
+    branch, so uncached it is tokenized + minhashed twice per action.
+    The streaming processor leaves it off — its per-micro-batch corpus
+    is batch-sized, and a stream has no run_flow or query build between
+    batches to release the caches, so they would pile up."""
     from .dedup import (
         MERSENNE_P,
         _banded_buckets,
-        _persist_scoped,
         minhash_signatures_from_hashed,
     )
 
@@ -298,7 +292,7 @@ def _fuzzy_pairs_against(
     hint = F.broadcast if engine == "broadcast" else (lambda df: df)
     h_c = _fuzzy_shingled(corpus, corpus_text, corpus_id, n, normalize)
     if persist:
-        h_c = _persist_scoped(h_c)
+        h_c = tables.persist(h_c)
     sig_c = minhash_signatures_from_hashed(h_c, corpus_id)
     b_c = _banded_buckets(
         sig_c.filter(F.col("signature")[0] != MERSENNE_P), corpus_id

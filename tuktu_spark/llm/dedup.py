@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..tables import memo_column
+from ..tables import memo_column, persist
 
 # Mersenne prime 2^31-1: (p-1)^2 + b < 2^63, so the universal-hash product
 # never overflows int64 (Spark runs ANSI mode; overflow would throw).
@@ -41,30 +41,6 @@ def _coeffs(n: int, seed: int) -> list[int]:
 
 HASH_A = _coeffs(NUM_HASHES, 7)
 HASH_B = _coeffs(NUM_HASHES, 13)
-
-# Scoped persist: pipelines persist the shared shingle scan so signatures /
-# candidate join / sizes reuse it, but DataFrame persist() is never GC'd by
-# Spark's ContextCleaner — in a long session each run would leak one cache
-# entry. Each pipeline releases the previous run's entries on entry, keeping
-# the outstanding cache count bounded at one pipeline's worth; callers can
-# also call release_persisted() explicitly after materializing results.
-_PERSISTED: list[DataFrame] = []
-
-
-def _persist_scoped(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _PERSISTED.append(df)
-    return df
-
-
-def release_persisted() -> None:
-    """Unpersist every cache entry from prior dedup pipeline runs."""
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-        except Exception:
-            pass  # session already stopped
-
 
 def base_hash(col):
     """md5-prefix 60-bit integer hash of a string column (engine-portable:
@@ -228,11 +204,11 @@ def _distinct_content_pairs(
     when the caller materialized it for the 'auto' dispatch probe
     (optimization r14) — same definition, built once instead of
     twice."""
-    t = prebuilt_t if prebuilt_t is not None else _persist_scoped(
+    t = prebuilt_t if prebuilt_t is not None else persist(
         df.select(F.col(id_col), F.col(text_col).alias("__t"))
         .withColumn("__h", F.md5("__t"))
     )
-    rep = _persist_scoped(
+    rep = persist(
         t.groupBy("__h").agg(
             F.min(id_col).alias("__rid"), F.min("__t").alias("__t")
         )
@@ -313,7 +289,6 @@ def ngram_jaccard_pairs(
             "positive threshold — at 0 every pair qualifies, which is an "
             "all-pairs enumeration, not a similarity query"
         )
-    release_persisted()
     prebuilt_t = None
     if distinct_content == "auto":
         # Fused dispatch probe (optimization r14, r13 verdict #2 — guide
@@ -332,7 +307,7 @@ def ngram_jaccard_pairs(
         # hashes; md5 here, xxhash64 before — both are content
         # cardinality, and the OUTPUT is flag-independent, so the probe
         # only ever picks between bit-identical plans).
-        prebuilt_t = _persist_scoped(
+        prebuilt_t = persist(
             df.select(F.col(id_col), F.col(text_col).alias("__t"))
             .withColumn("__h", F.md5("__t"))
         )
@@ -375,10 +350,9 @@ def ngram_jaccard_pairs(
 def _ngram_jaccard_pairs_core(
     df: DataFrame, text_col: str, id_col: str, n: int, threshold: float
 ) -> DataFrame:
-    """The prefix-filtered pair join itself (no persist release — the
-    public wrapper owns scope so distinct_content's tables survive)."""
+    """The prefix-filtered pair join itself."""
     h = hashed_shingles(df, text_col, id_col, n)
-    s = _persist_scoped(
+    s = persist(
         h.select(
             F.col(id_col),
             F.array_sort("shingles").alias("sh"),
@@ -561,7 +535,6 @@ def minhash_dedup_pairs(
     source — or pass ``'auto'`` (r10) to probe the corpus duplication
     ratio once and dispatch at the measured crossover (see
     _resolve_distinct_content)."""
-    release_persisted()
     distinct_content = _resolve_distinct_content(df, text_col, distinct_content)
     if distinct_content:
         # one representative per distinct text: the pipeline's output
@@ -571,7 +544,7 @@ def minhash_dedup_pairs(
         # nonempty shingle set, matching the id-level empty-shingle drop
 
         def core(rep_df):
-            h_rep = _persist_scoped(
+            h_rep = persist(
                 hashed_shingles(rep_df, text_col, id_col, n).withColumn(
                     "signature", minhash_signature_col(F.col("shingles"))
                 )
@@ -596,7 +569,7 @@ def minhash_dedup_pairs(
     # arrays. The signature rides the SAME cache (r13 single-cache
     # shape): one build job materializes shingles + signatures together
     # instead of a second signature persist reading the first cache.
-    h_all = _persist_scoped(
+    h_all = persist(
         hashed_shingles(df, text_col, id_col, n).withColumn(
             "signature", minhash_signature_col(F.col("shingles"))
         )
@@ -726,7 +699,7 @@ def _minhash_pairs_from_hashed(
     if "signature" in h_all.columns:
         sigs = h_all.select(id_col, "signature")
     else:
-        sigs = _persist_scoped(minhash_signatures_from_hashed(h, id_col))
+        sigs = persist(minhash_signatures_from_hashed(h, id_col))
     cands = minhash_lsh_candidates(sigs, id_col)
     return _verify_jaccard_pairs(cands, h, h, id_col, threshold)
 
@@ -764,7 +737,6 @@ def minhash_dedup_pairs_from_index(
     by ``write_shingle_index`` — identical output to
     ``minhash_dedup_pairs`` (pinned in tests) with zero text re-scans:
     the plan contains no tokenize/xxhash at all."""
-    release_persisted()
     return _minhash_pairs_from_hashed(spark.table(table), id_col, threshold)
 
 
@@ -784,11 +756,10 @@ def minhash_batch_vs_corpus_pairs(
     batch signatures against corpus signatures (never corpus x corpus),
     so work scales with |batch| x collision rate, not corpus^2; the
     Jaccard verify touches only candidate corpus rows."""
-    release_persisted()
-    hb_all = _persist_scoped(hashed_shingles(batch, text_col, id_col, n))
+    hb_all = persist(hashed_shingles(batch, text_col, id_col, n))
     hb = hb_all.filter(F.size("shingles") > 0)
     hc = corpus_hashed.filter(F.size("shingles") > 0)
-    sig_b = _persist_scoped(minhash_signatures_from_hashed(hb, id_col))
+    sig_b = persist(minhash_signatures_from_hashed(hb, id_col))
     sig_c = minhash_signatures_from_hashed(hc, id_col)
 
     def banded(sigs: DataFrame, out_id: str) -> DataFrame:
@@ -897,7 +868,6 @@ def simhash_near_pairs(
     pinned in tests). Same fix as minhash/jaccard/edit distance.
     ``'auto'`` probes the corpus duplication ratio once and dispatches
     at the measured crossover (see _resolve_distinct_content)."""
-    release_persisted()
     distinct_content = _resolve_distinct_content(df, text_col, distinct_content)
     if distinct_content:
 
@@ -922,8 +892,7 @@ def simhash_near_pairs(
 def _simhash_near_pairs_core(
     df: DataFrame, text_col: str, id_col: str, max_hamming: int
 ) -> DataFrame:
-    """The banded Hamming join itself (no persist release — the public
-    wrapper owns scope so distinct_content's tables survive)."""
+    """The banded Hamming join itself."""
     chunks = max_hamming + 1
     width = SIMHASH_BITS // chunks
     # The zero-token filter is `text RLIKE '\S'` — EXACTLY equivalent to
@@ -937,7 +906,7 @@ def _simhash_near_pairs_core(
     # it, and without the persist each side re-runs tokenize+simhash over
     # the corpus (measured ~1.1 s/side at sf0.1 — same shape as the
     # persisted MinHash signature table).
-    sh = _persist_scoped(
+    sh = persist(
         simhash_table(df.filter(F.col(text_col).rlike(r"\S")), text_col, id_col)
     )
     pieces = F.explode(
@@ -1450,13 +1419,12 @@ def edit_distance_pairs(
     both output-proportional, nothing quadratic off the output size."""
     if method not in ("prefix", "count"):
         raise ValueError(f"method={method!r}: expected 'prefix' or 'count'")
-    release_persisted()
-    s = _persist_scoped(
+    s = persist(
         df.select(F.col(id_col), F.col(text_col).alias("__s"))
         .withColumn("__len", F.length("__s"))
     )
     # the filter pipeline's working set: one row per DISTINCT string
-    sd = _persist_scoped(s.select("__s", "__len").distinct())
+    sd = persist(s.select("__s", "__len").distinct())
     d = int(max_dist)
     short_max = q + d * q - 1  # below this, the count bound is vacuous
 

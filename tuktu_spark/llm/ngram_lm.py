@@ -42,6 +42,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import tables
 from ..exactness import dsum
 
 
@@ -64,28 +65,26 @@ class NgramLM:
         return self.counts[k - 1]
 
     def persist(self) -> "NgramLM":
-        """Pin the count tables via the dedup pipelines' scoped registry
-        (released on the next pipeline's entry / run_flow boundary) so a
-        train-then-score plan computes each order ONCE — unpinned, c1 and
-        c2 are each rebuilt for their gram AND context join roles, i.e.
-        the corpus is re-scanned 2n-1 times for training counts. A fused
+        """Pin the count tables (tables.persist, held until the next
+        run_flow or query build) so a train-then-score plan computes each
+        order ONCE — unpinned, c1 and c2 are each rebuilt for their gram
+        AND context join roles, i.e. the corpus is re-scanned 2n-1 times
+        for training counts. A fused
         model pins the ONE parent table (a single cache-build job; the
         per-order tables become in-memory filters). No-op on a model
         already pinned by ``train_ngram_lm(..., persist=True)``."""
-        from .dedup import _persist_scoped
-
         if self.persisted:
             return self
         self.persisted = True
         if self.fused is not None:
-            f = _persist_scoped(self.fused)
+            f = tables.persist(self.fused)
             self.fused = f
             self.counts = [
                 f.filter(F.col("k") == k).select("gram", "cnt")
                 for k in range(1, self.n + 1)
             ]
         else:
-            self.counts = [_persist_scoped(c) for c in self.counts]
+            self.counts = [tables.persist(c) for c in self.counts]
         return self
 
 
@@ -252,8 +251,8 @@ def train_ngram_lm(
     exploded corpus costs more memory than it saves, so the bench query
     deliberately does NOT use it.
 
-    ``persist=True`` (optimization r13): pin the model via the scoped
-    cache registry AND, on the fused path, derive ``total`` from the
+    ``persist=True`` (optimization r13): pin the model via
+    tables.persist AND, on the fused path, derive ``total`` from the
     fused table's k=0 sentinel row (_fused_counts with_total) so the
     whole training is one corpus scan + one shuffle — no separate
     sum(size(tokens)) scan job. Prefer this over calling ``.persist()``
@@ -270,9 +269,7 @@ def train_ngram_lm(
             # training is ONE corpus scan + one shuffle total, with no
             # separate sum(size(tokens)) scan job. Bit-identical model:
             # the sentinel count is exactly the pre-prune position count.
-            from .dedup import _persist_scoped
-
-            fused = _persist_scoped(
+            fused = tables.persist(
                 _fused_counts(df, tokens_col, n, min_count, with_total=True)
             )
             total = (
@@ -486,9 +483,7 @@ class ArpaLM:
     unk_log10: float
 
     def persist(self) -> "ArpaLM":
-        from .dedup import _persist_scoped
-
-        self.tables = [_persist_scoped(t) for t in self.tables]
+        self.tables = [tables.persist(t) for t in self.tables]
         return self
 
 

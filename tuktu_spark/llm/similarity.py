@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..tables import persist
+
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
@@ -668,22 +670,18 @@ def semdedup(
 
     Scale shape: the O(nlist x dim) centroid-assignment fold and
     cent_sim run ONCE over the corpus — the assignment table
-    (id, v, cluster, cent_sim) is persisted via the dedup pipelines'
-    scoped registry (released on the next pipeline's entry, same
-    contract as hashed_shingles) and both self-join sides plus the
-    output read it; the corpus shuffles ONCE on cluster_id for the
-    self-join; pair work is quadratic only within a cluster and the
+    (id, v, cluster, cent_sim) is persisted (tables.persist, held
+    until the next run_flow or query build) and both self-join sides
+    plus the output read it; the corpus shuffles ONCE on cluster_id for
+    the self-join; pair work is quadratic only within a cluster and the
     paper scales nlist with the corpus (50k clusters for LAION) so
     cluster sizes stay bounded; centroids travel as plan literals
     (kilobytes). Engine-portable: assignment distance, cent_sim, and
     pair cosines are sequential folds — bit-identical in the DuckDB
     oracle."""
-    from .dedup import _persist_scoped, release_persisted
-
-    release_persisted()
     vv = _as_double(F.col(vec_col))
     cents = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in centroids])
-    base = _persist_scoped(
+    base = persist(
         vectors.select(
             F.col(id_col).alias("__sid"),
             vv.alias("__sv"),

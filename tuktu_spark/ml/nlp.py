@@ -113,7 +113,6 @@ def bm25(
     k1: float = 1.2,
     b: float = 0.75,
     use_log: bool = True,
-    persist_dl: bool | None = None,
 ) -> DataFrame:
     """Exact corpus BM25 (Robertson/Sparck Jones, public): per (doc,
     term) score idf(t) * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl)).
@@ -133,29 +132,14 @@ def bm25(
     on the doc key the tf table already carries — a broadcast at
     dimension scale, a doc-keyed shuffle at corpus scale).
 
-    ``persist_dl`` (optimization r14, guide §1.2 fewer passes / §8
-    "decide with small rows"): the (doc, dl) aggregate has two
-    consumers — the dl join side and the corpus-stats scalar — and
-    without a cache each consumer re-scans and re-tokenizes the whole
-    corpus (the plan reads the input three times; exchange reuse
-    cannot collapse the two subtrees because the join side's
-    pushed-down null filter makes them canonically different).
-    ``persist_dl=True`` pins the aggregate (one small row per doc, NOT
-    a corpus-payload cache): 3 -> 2 corpus scans. Output is
-    bit-identical either way (pinned by the edge-semantics tests:
-    zero-token docs still enter n_docs with dl=0, duplicate ids still
-    take the id's max row length). Default ``None`` reads the
-    ``spark.tuktu.bm25.persistDl`` conf (default false): on the local
-    bench the cache-build job costs MORE than the third scan of a
-    small hot file (focused interleaved A/B, 8 cells x 7 runs: median
-    1.295 -> 1.399 s, min 0.876 -> 1.015 s — both directions agree),
-    while at corpus scale a full scan+tokenize dwarfs materializing
-    one row per doc, so set the conf true on a real cluster."""
+    The (doc, dl) aggregate has two consumers — the dl join side and
+    the corpus-stats scalar — so the plan reads the input three times.
+    Pinning it (3 -> 2 corpus scans) measured slower on the local bench
+    (the cache-build job costs more than a third scan of a small hot
+    file: interleaved A/B, 8 cells x 7 runs, median 1.295 -> 1.399 s)
+    and its cluster-scale benefit is unmeasured, so it is not pinned."""
     from pyspark.sql import Window
 
-    from ..llm.dedup import _persist_scoped, release_persisted
-
-    release_persisted()
     toks = remove_stopwords(tokenize(F.col(text_col)), stopwords)
     exploded = df.select(F.col(id_col), F.explode(toks).alias("term"))
     tf = (
@@ -165,22 +149,12 @@ def bm25(
     )
     df_t = F.count(F.lit(1)).over(Window.partitionBy("term"))
     scored = tf.withColumn("df_t", df_t)
-    if persist_dl is None:
-        persist_dl = (
-            df.sparkSession.conf.get(
-                "spark.tuktu.bm25.persistDl", "false"
-            ).lower()
-            == "true"
-        )
-    # doc length (post-stopword token count) + corpus stats; one corpus
-    # pass feeds both consumers below when persist_dl is on
+    # doc length (post-stopword token count) + corpus stats
     dl = (
         df.select(F.col(id_col), F.size(toks).alias("dl"))
         .groupBy(id_col)
         .agg(F.max("dl").alias("dl"))
     )
-    if persist_dl:
-        dl = _persist_scoped(dl)
     stats = dl.agg(
         F.countDistinct(id_col).alias("n_docs"),
         F.sum("dl").alias("dl_sum"),

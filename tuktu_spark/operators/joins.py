@@ -13,6 +13,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..tables import persist
 from .registry import operator, reject_removed_keys
 
 _HOW = {
@@ -68,53 +69,6 @@ def union_merge(config: dict):
         )
 
     return transform
-
-
-
-# Scoped persist registry for the distributed positional helpers (same
-# pattern as llm/dedup, but PRIVATE: a dedup pipeline's release must not
-# unpersist a zip_merge plan mid-flight). The persist pins the range-sort
-# partition assignment so the offsets table and the data window agree;
-# within one action the broadcast job materializes the cache and the main
-# job reuses it (MEMORY_AND_DISK — eviction spills, never recomputes).
-_POSITIONAL_PERSISTED: list[DataFrame] = []
-
-
-# Cap for standalone callers (make_operator('zip_merge')(...) outside
-# run_flow/query builds, which release explicitly): beyond this many
-# outstanding pins the OLDEST is evicted — in a long session the oldest
-# plans have long been materialized, and unbounded growth is worse than
-# the recompute-determinism caveat below.
-_POSITIONAL_PERSIST_CAP = 64
-
-
-def release_positional_persisted() -> None:
-    """Unpersist cache entries from prior positional-numbering calls.
-
-    CAVEAT: a previously RETURNED but not-yet-materialized DataFrame that
-    used the persist-pinned kernel will recompute from lineage after
-    release. For deterministic upstreams (file scans) the recomputed
-    range sort reproduces the same partition assignment (RangePartitioner
-    samples with per-partition-index seeds), so indices are unchanged;
-    for NONdeterministic upstreams the _global_row_number docstring's
-    hazard applies — materialize (collect/write) before triggering a
-    release, or use the recompute-safe bounded kernel."""
-    while _POSITIONAL_PERSISTED:
-        try:
-            _POSITIONAL_PERSISTED.pop().unpersist()
-        except Exception:
-            pass  # session already stopped
-
-
-def _persist_positional(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _POSITIONAL_PERSISTED.append(df)
-    while len(_POSITIONAL_PERSISTED) > _POSITIONAL_PERSIST_CAP:
-        try:
-            _POSITIONAL_PERSISTED.pop(0).unpersist()
-        except Exception:
-            pass
-    return df
 
 
 def _order_boundaries(df: DataFrame, ob: list[str], buckets: int) -> list[tuple]:
@@ -240,14 +194,22 @@ def _global_row_number(df: DataFrame, ob: list, out_col: str) -> DataFrame:
 
     The persist pins one materialization of the sort so the offsets table
     and the data window see the SAME partition assignment (range-boundary
-    sampling is not guaranteed stable across recomputes). Where the order
+    sampling is not guaranteed stable across recomputes; MEMORY_AND_DISK,
+    so eviction spills instead of recomputing). Where the order
     keys are ascending plain columns, ``_global_row_number_bounded``
     (round 6) is the fault-tolerant/persist-free form: literal boundary
     tuples make the bucket id a pure function of the data, so lineage
-    recompute cannot desynchronize offsets from the window."""
+    recompute cannot desynchronize offsets from the window.
+
+    The pin is held until the next run_flow or query build
+    (tables.persist). A returned DataFrame not materialized by then
+    recomputes from lineage: for deterministic upstreams (file scans)
+    the range sort reproduces the same partition assignment, so indices
+    are unchanged; for nondeterministic upstreams materialize (collect or
+    write) first, or use the bounded kernel."""
     sorted_df = df.orderBy(*ob).withColumn("__pid__", F.spark_partition_id())
     # pin the partition assignment so offsets and the window agree
-    sorted_df = _persist_positional(sorted_df)
+    sorted_df = persist(sorted_df)
     tiny = Window.orderBy("__pid__").rowsBetween(Window.unboundedPreceding, -1)
     offsets = (
         sorted_df.groupBy("__pid__")
@@ -325,7 +287,7 @@ def _global_prefix_sum(
     `SUM(v) OVER (ORDER BY ob ROWS UNBOUNDED PRECEDING)` without the
     single-partition funnel."""
     sorted_df = df.orderBy(*ob).withColumn("__pid__", F.spark_partition_id())
-    sorted_df = _persist_positional(sorted_df)
+    sorted_df = persist(sorted_df)
     tiny = Window.orderBy("__pid__").rowsBetween(Window.unboundedPreceding, -1)
     offsets = (
         sorted_df.groupBy("__pid__")

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..tables import persist
 from .registry import operator
 
 
@@ -143,11 +144,9 @@ def noop_sink(config: dict):
 @operator("cache")
 def cache(config: dict):
     """CachingProcessor / CacheTableProcessor (cache/CachingProcessor.scala:
-    24-91) -> df.persist; reused by every downstream branch."""
-    def transform(df: DataFrame) -> DataFrame:
-        return df.cache()
-
-    return transform
+    24-91) -> df.persist; reused by every downstream branch, released by
+    the next run_flow or query build (tables.persist)."""
+    return persist
 
 
 @operator("view_delete")

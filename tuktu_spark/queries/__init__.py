@@ -15,7 +15,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from tuktu_spark.tables import ensure_session_confs
+from tuktu_spark.tables import ensure_session_confs, release
 
 
 @dataclass
@@ -40,18 +40,9 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = (), benc
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the driver supplies its OWN session; normalize it first
             ensure_session_confs(spark)
-            # Release positional-kernel persists pinned by PREVIOUS query
-            # builds (ADVICE r5: without this, every positional query in a
-            # long driver/bench session accumulates a cached sorted copy of
-            # its input for the session lifetime). Safe at query BUILD
-            # time: the prior query's action has completed in the
-            # build-run-build-run driver/bench loop; a caller that batches
-            # builds before collecting recomputes from lineage instead
-            # (deterministic for deterministic upstreams — see
-            # _global_row_number's docstring for the nondeterministic case).
-            from tuktu_spark.operators.joins import release_positional_persisted
-
-            release_positional_persisted()
+            # drop the persists of PREVIOUS builds (tables.persist): the
+            # prior query's action has completed in the build-run loop
+            release()
             return fn(spark, sf_dir)
 
         REGISTRY[name] = QueryDef(name=name, fn=wrapped, oracle=oracle, tags=tags, bench=bench)
@@ -383,7 +374,8 @@ _TOUCHED = frozenset(
         #   (plan-identical, but executed code changed) — minhash/LSH,
         #   keep-best, incremental-batch and the fuzzy decontamination
         #   family all execute them;
-        # - bm25(): persist_dl knob (default path plan-identical);
+        # - bm25(): a dl-persist conf, since removed (default path
+        #   plan-identical);
         # - mix_dsir_select: persistFeatures conf branch;
         # - text_ngram_lm_score: partition_by_keys width derivation.
         #
@@ -416,14 +408,6 @@ _TOUCHED = frozenset(
     }
 )
 
-# Queries that failed a past driver round before being fixed (the round-1
-# rollup/cube/pivot/asof/range family) — RETIRED r10: each member has now
-# been driver-green in five separate windows (r2, r4, r5, r7/r8, r9)
-# since the r1 fixes; pinning them at the window's front forever costs
-# slots the stale tail needs. The set stays defined (empty) so the rank
-# function keeps its seam for future regressions.
-_REVERIFY_PRIORITY = frozenset()
-
 
 def load_all() -> dict[str, QueryDef]:
     """Import all query modules (idempotent) and return the registry ordered
@@ -439,8 +423,6 @@ def load_all() -> dict[str, QueryDef]:
             return (0, 0 if qd.oracle else 1)
         if name in _TOUCHED:
             return (1, 0)
-        if name in _REVERIFY_PRIORITY:
-            return (1, 1)
         return (2, _VERIFIED_ROUND[name])
 
     return dict(sorted(REGISTRY.items(), key=rank))

@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..llm import text as T
-from ..tables import load_table
+from ..tables import load_table, persist
 from . import query
 
 # ---------------------------------------------------------------------------
@@ -697,10 +697,7 @@ GROUP BY doc_id
 
 @query("text_ngram_lm_score", oracle=_NGRAM_LM_ORACLE, tags=("llm", "text"), bench=True)
 def text_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..llm.dedup import release_persisted
     from ..llm.ngram_lm import score_ngram_lm, train_ngram_lm
-
-    release_persisted()
     from ..tables import partition_by_keys
 
     # Optimization r13: hash-partition the corpus by doc_id BEFORE
@@ -818,10 +815,8 @@ GROUP BY doc_id
 
 @query("text_arpa_lm_score", oracle=_ARPA_ORACLE, tags=("llm", "text"))
 def text_arpa_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..llm.dedup import release_persisted
     from ..llm.ngram_lm import read_arpa, score_arpa
 
-    release_persisted()
     lm = read_arpa(spark, _arpa_path()).persist()
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", " ").alias("tokens")
@@ -925,10 +920,7 @@ def mix_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.get("spark.tuktu.dsir.persistFeatures", "false").lower()
         == "true"
     ):
-        from ..llm.dedup import _persist_scoped, release_persisted
-
-        release_persisted()
-        feats = _persist_scoped(feats)
+        feats = persist(feats)
     llr = train_dsir_llr_flagged(feats, _DSIR_B)
     out = dsir_select_topk(dsir_weights(feats, llr), _DSIR_K)
     return out.select("doc_id", "n_feats", "logw_q")
@@ -1024,10 +1016,8 @@ def text_arpa_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     lm_score_buckets_exact). Shuffle inventory: the ARPA scoring
     pipeline's one doc-keyed shuffle + the id-keyed lang join; the
     tercile machinery runs on distinct-value rows only."""
-    from ..llm.dedup import release_persisted
     from ..llm.ngram_lm import lm_score_buckets_exact, read_arpa, score_arpa
 
-    release_persisted()
     lm = read_arpa(spark, _arpa_path()).persist()
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.split("text", " ").alias("tokens")

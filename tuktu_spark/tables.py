@@ -73,6 +73,34 @@ def memo_column(key: tuple, builder):
     return col
 
 
+# Every DataFrame the package persists while building a plan (the dedup
+# family's shared scans, the positional kernels' sort pins, flow-node
+# ``cache: true`` and the ``cache`` operator). Spark's ContextCleaner
+# never drops a DataFrame persist, so each lives until ``release()``,
+# which only ``run_flow`` and the query wrapper call, on entry: a persist
+# serves the build that made it and that build's actions, and a later
+# run over the same plan recomputes instead of reading a stale cache.
+# Library calls outside a flow run or query keep their persists until
+# the caller calls ``release()``.
+_PERSISTS: list[DataFrame] = []
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()``, held until the next ``release()``."""
+    df = df.persist()
+    _PERSISTS.append(df)
+    return df
+
+
+def release() -> None:
+    """Unpersist every DataFrame recorded by ``persist``."""
+    while _PERSISTS:
+        try:
+            _PERSISTS.pop().unpersist()
+        except Exception:
+            pass  # session already stopped
+
+
 def ensure_session_confs(spark: SparkSession) -> None:
     """Make an externally-supplied session able to run every query.
 
