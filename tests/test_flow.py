@@ -319,6 +319,58 @@ def test_removed_engine_key_fails_loudly(spark, name, config):
     assert f"node p ({name})" in info.value.__notes__
 
 
+# --- boolean config keys (operators.registry.flag) ---------------------------
+
+
+@pytest.mark.parametrize("value, kept", [("false", [3, 4]), ("TRUE", [1, 2]), (False, [3, 4])])
+def test_filter_negate_from_string_param(spark, value, kept):
+    """A ``#{param}`` filled with the string "false" leaves the filter as
+    it is; it used to read as true and invert it."""
+    flow = _one_node_flow("filter", {"expression": "${a} > 2", "negate": "#{neg}"})
+    flow["generators"][0]["config"]["rows"] = [[1], [2], [3], [4]]
+    out = run_flow(spark, flow, params={"neg": value})
+    assert sorted(r["a"] for r in out["p"].collect()) == kept
+
+
+@pytest.mark.parametrize("value, header", [("false", False), ("true", True)])
+def test_csv_sink_header_from_string_param(spark, tmp_path, value, header):
+    flow = _one_node_flow("csv_sink", {"path": str(tmp_path / "out"), "header": "#{hdr}"})
+    run_flow(spark, flow, params={"hdr": value})
+    lines = [
+        line
+        for part in (tmp_path / "out").glob("part-*.csv")
+        for line in part.read_text().splitlines()
+    ]
+    assert lines.count("1") == 1
+    assert ("a" in lines) == header  # the header line names the column
+
+
+@pytest.mark.parametrize("value, hinted", [("false", False), ("true", True)])
+def test_join_broadcast_from_string_param(spark, value, hinted):
+    flow = {
+        "generators": [
+            {"id": "l", "name": "inline", "config": {"rows": [[1, "x"]], "columns": ["k", "a"]},
+             "next": ["j"]},
+            {"id": "r", "name": "inline", "config": {"rows": [[1, "y"]], "columns": ["k", "b"]},
+             "next": ["j"]},
+        ],
+        "processors": [
+            {"id": "j", "name": "join", "config": {"on": ["k"], "broadcast": "#{bc}"}, "next": []},
+        ],
+    }
+    out = run_flow(spark, flow, params={"bc": value})["j"]
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert ("strategy=broadcast" in plan) == hinted
+    assert [tuple(r) for r in out.collect()] == [(1, "x", "y")]
+
+
+def test_non_boolean_flag_fails_loudly(spark):
+    flow = _one_node_flow("filter", {"expression": "${a} > 0", "negate": "no"})
+    with pytest.raises(ValueError, match="'negate' must be true or false, got 'no'") as info:
+        compile_flow(spark, flow)
+    assert "node p (filter)" in info.value.__notes__
+
+
 @pytest.mark.parametrize("node", ["nope", "dead"])
 def test_run_stream_flow_unknown_or_pruned_node(spark, node):
     """Asking for a node that is not compiled (unknown, or pruned as

@@ -7,8 +7,13 @@ reference's execution (SURVEY.md §3.1):
 
 - The "physical plan" IS DataFrame lineage: Catalyst does analysis,
   optimization and physical planning; there are no actors to place.
-- Fan-out (multiple ``next``) = reusing one DataFrame (shared lineage; add
-  ``"cache": true`` on the node to materialize the diamond once).
+- Fan-out (multiple ``next``) = one packet stream pushed to every branch
+  (Dispatcher.scala:313-330). A batch node whose plan has a shuffle runs
+  its exchanges once while it builds, and every branch reads the same
+  shuffle files and broadcasts; only its last stage runs per branch. A
+  node without a shuffle (scans, filters, broadcast joins) is re-run per
+  branch, so each branch keeps its own pushdown and pruning. Streaming
+  flows are not shared. ``"cache": true`` persists the node instead.
 - Fan-in (a node referenced by several parents) = the node's operator
   receives all parent DataFrames (mergers/joins); EOF reference counting
   (api.scala:189-216) has no analogue — barriers are action boundaries.
@@ -28,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..expressions import substitute_config, substitute_meta
 from ..operators import make_operator, make_source
+from ..operators.registry import flag
 from ..tables import persist, release
 
 
@@ -56,6 +62,35 @@ def _job_description(spark: SparkSession, text: str):
         sc.setLocalProperty("spark.job.description", caller)
 
 
+def _holds_shuffle(df: DataFrame) -> bool:
+    """Whether ``df``'s physical plan has a shuffle exchange (looking inside
+    AQE's wrapper, not inside cached relations, which do not re-run)."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "ShuffleExchangeExec":
+            return True
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(node.initialPlan())
+            continue
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return False
+
+
+def _share(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """Run ``df``'s exchanges now and return a DataFrame over the executed
+    RDD: every action on it (or on a plan built over it) reads the same
+    shuffle files and broadcasts and re-runs only the last stage. Nothing
+    is persisted; the shuffle files live as long as the RDD is referenced."""
+    jvm, jdf = spark._jvm, df._jdf
+    rdd = jdf.queryExecution().toRdd()
+    logical_rdd = getattr(getattr(jvm.org.apache.spark.sql.execution, "LogicalRDD$"), "MODULE$")
+    plan = logical_rdd.fromDataset(rdd, jdf, False)
+    return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, plan), spark)
+
+
 def compile_flow(
     spark: SparkSession,
     flow: dict | str,
@@ -66,7 +101,9 @@ def compile_flow(
     """Compile a flow spec; returns {node_id: DataFrame} for every compiled
     node (sinks excluded — use run_flow to execute them). Spark jobs run
     while a node builds (schema inference, sinks, eager probes) carry the
-    job description ``node <id> (<operator>)``.
+    job description ``node <id> (<operator>)``; a shared fan-out node's
+    exchanges run here too, as ``node <id> (<operator>): shared by <n>
+    branches``.
 
     ``params`` fills ``#{}`` (config-time); ``meta`` fills ``%{}``
     (dispatch-time — supplied by an including flow or the caller).
@@ -120,11 +157,12 @@ def compile_flow(
         try:
             with _job_description(spark, label):
                 outputs[gid] = make_source(spark, g["name"], g.get("config", {}))
+            if flag(g, "cache", False):
+                outputs[gid] = persist(outputs[gid])
         except Exception as e:
             e.add_note(label)
             raise
-        if g.get("cache"):
-            outputs[gid] = persist(outputs[gid])
+    batch = not any(df.isStreaming for df in outputs.values())
 
     # --- processors in topological order ---
     remaining = set(reachable)
@@ -136,6 +174,7 @@ def compile_flow(
             node = processors[nid]
             inputs = [outputs[p] for p in preds[nid]]
             label = f"node {nid} ({node['name']})"
+            branches = len(set(node.get("next", [])))
             try:
                 with _job_description(spark, label):
                     transform = make_operator(node["name"], node.get("config", {}))
@@ -146,16 +185,19 @@ def compile_flow(
                             f"operator {node['name']!r} at node {nid!r} got "
                             f"{len(inputs)} input(s): {e}"
                         ) from e
+                if out is None:
+                    raise FlowError(
+                        f"operator {node['name']!r} at node {nid!r} returned no DataFrame"
+                    )
+                if flag(node, "cache", False):
+                    out = persist(out)
+                elif batch and branches > 1 and _holds_shuffle(out):
+                    with _job_description(spark, f"{label}: shared by {branches} branches"):
+                        out = _share(spark, out)
             except Exception as e:
                 # name the failing node but keep the type callers match on
                 e.add_note(label)
                 raise
-            if out is None:
-                raise FlowError(
-                    f"operator {node['name']!r} at node {nid!r} returned no DataFrame"
-                )
-            if node.get("cache"):
-                out = persist(out)
             outputs[nid] = out
             remaining.discard(nid)
             progressed = True

@@ -25,7 +25,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .registry import operator, source
+from .registry import flag, operator, source
 
 
 def _opts(reader, options: dict):
@@ -474,7 +474,7 @@ def xls_source(spark: SparkSession, config: dict) -> DataFrame:
         from .xls_biff import read_xls_rows
 
         rows = read_xls_rows(path, sheet=int(config.get("sheet", 1)))
-    return _sheet_rows_to_df(spark, rows, bool(config.get("header", True)))
+    return _sheet_rows_to_df(spark, rows, flag(config, "header", True))
 
 
 @operator("smtp_sink")
@@ -606,8 +606,8 @@ def mongo_update(config: dict):
     collection, query, update, upsert, multi, writer}."""
     query_t = config["query"]
     update_t = config["update"]
-    upsert = bool(config.get("upsert", False))
-    multi = bool(config.get("multi", False))
+    upsert = flag(config, "upsert", False)
+    multi = flag(config, "multi", False)
     writer = config.get("writer")
     db, coll, uri = config["database"], config["collection"], config.get("uri")
 
@@ -654,7 +654,7 @@ def mongo_remove(config: dict):
     bulk shape and injectable ``writer`` as mongo_update. config: {uri,
     database, collection, query, just_one, writer}."""
     query_t = config["query"]
-    just_one = bool(config.get("just_one", False))
+    just_one = flag(config, "just_one", False)
     writer = config.get("writer")
     db, coll, uri = config["database"], config["collection"], config.get("uri")
 

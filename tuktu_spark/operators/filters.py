@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..expressions import predicate_column
-from .registry import operator
+from .registry import flag, operator
 
 
 @operator("filter", "packet_filter")
@@ -23,7 +23,7 @@ def packet_filter(config: dict):
     part 2); implemented as a windowed conditional count, no extra join.
     """
     expr = config["expression"]
-    negate = bool(config.get("negate", False))
+    negate = flag(config, "negate", False)
     eps = config.get("epsilon")
     batch_by = config.get("batch_by")
     batch_min = int(config.get("batch_min_count", 1))

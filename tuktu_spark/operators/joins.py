@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..tables import persist
-from .registry import operator, reject_removed_keys
+from .registry import flag, operator, reject_removed_keys
 
 _HOW = {
     "inner": "inner",
@@ -41,7 +41,7 @@ def join(config: dict):
     """
     how = _HOW[config.get("how", "inner")]
     on = config["on"]
-    broadcast_right = bool(config.get("broadcast", False))
+    broadcast_right = flag(config, "broadcast", False)
 
     def transform(left: DataFrame, right: DataFrame | None = None) -> DataFrame:
         if right is None:
@@ -61,7 +61,7 @@ def join(config: dict):
 def union_merge(config: dict):
     """SerialMerger (merge/BaseMergers.scala:90-97): UNION ALL of branches;
     missing columns padded with nulls (Tuktu rows are schemaless maps)."""
-    allow_missing = bool(config.get("allow_missing_columns", True))
+    allow_missing = flag(config, "allow_missing_columns", True)
 
     def transform(*dfs: DataFrame) -> DataFrame:
         return reduce(
@@ -361,7 +361,7 @@ def zip_merge(config: dict):
     """
     reject_removed_keys("zip_merge", config, "engine")
     order_by = config["order_by"]
-    padding = bool(config.get("padding", False))
+    padding = flag(config, "padding", False)
     return lambda *dfs: _zip_branches(dfs, order_by, padding).drop("__rn__")
 
 
@@ -382,7 +382,7 @@ def js_merge(config: dict):
     reject_removed_keys("js_merge", config, "engine")
     js_field = config.get("js_field", "tuktu_js_field")
     order_by = config["order_by"]
-    padding = bool(config.get("padding", False))
+    padding = flag(config, "padding", False)
 
     def merge_js(a, b):
         seen = F.flatten(F.transform(a, lambda m: F.map_keys(m)))
@@ -444,7 +444,7 @@ def lookup_join(config: dict):
 def intersect_merge(config: dict):
     """Set intersection of branches — absent in the reference (SURVEY §2.6
     note); Spark-native. ``all=True`` keeps duplicates (INTERSECT ALL)."""
-    keep_dups = bool(config.get("all", False))
+    keep_dups = flag(config, "all", False)
 
     def transform(*dfs: DataFrame) -> DataFrame:
         out = dfs[0]
@@ -458,7 +458,7 @@ def intersect_merge(config: dict):
 @operator("except_merge")
 def except_merge(config: dict):
     """Set difference of branches (first minus the rest) — Spark-native."""
-    keep_dups = bool(config.get("all", False))
+    keep_dups = flag(config, "all", False)
 
     def transform(*dfs: DataFrame) -> DataFrame:
         out = dfs[0]

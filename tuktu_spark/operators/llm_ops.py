@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from ..llm import dedup as D
 from ..llm import text as T
-from .registry import operator, reject_removed_keys
+from .registry import flag, operator, reject_removed_keys
 
 
 @operator("exact_dedup")
@@ -129,7 +129,7 @@ def contamination_attribution_op(config: dict):
             ),
             eval_id=config.get("eval_id_field", "eval_id"),
             n=int(config.get("n", 13)),
-            normalize=bool(config.get("normalize", False)),
+            normalize=flag(config, "normalize", False),
         )
 
     return transform
@@ -168,7 +168,7 @@ def fuzzy_decontaminate_op(config: dict):
             ),
             n=int(config.get("n", 3)),
             threshold=float(config.get("threshold", 0.8)),
-            normalize=bool(config.get("normalize", False)),
+            normalize=flag(config, "normalize", False),
             engine=str(config.get("engine", "broadcast")),
         )
         if config.get("suite_field"):
@@ -231,7 +231,7 @@ def decontaminate_op(config: dict):
                     "eval_text_field", config.get("text_field", "text")
                 ),
                 n=int(config.get("n", 13)),
-                normalize=bool(config.get("normalize", False)),
+                normalize=flag(config, "normalize", False),
             )
             if config.get("report"):
                 if config.get("max_frac") is not None:
@@ -262,7 +262,7 @@ def decontaminate_op(config: dict):
             corpus_id=config.get("id_field", "doc_id"),
             eval_text=config.get("eval_text_field", config.get("text_field", "text")),
             n=int(config.get("n", 13)),
-            normalize=bool(config.get("normalize", False)),
+            normalize=flag(config, "normalize", False),
         )
         engine = config.get("engine")
         if engine in ("bloom", "auto") and not config.get("report"):
@@ -450,8 +450,8 @@ def normalize_text_op(config: dict):
         df,
         config.get("text_field", "text"),
         config.get("form", "NFC"),
-        bool(config.get("collapse_whitespace", True)),
-        bool(config.get("strip_control", True)),
+        flag(config, "collapse_whitespace", True),
+        flag(config, "strip_control", True),
         config.get("as"),
     )
 
@@ -783,7 +783,7 @@ def write_eval_grams(config: dict):
             df, config["path"],
             text_col=config.get("text_field", "text"),
             n=int(config.get("n", 13)),
-            normalize=bool(config.get("normalize", False)),
+            normalize=flag(config, "normalize", False),
             eval_id=config.get("eval_id_field"),
         )
         return df
@@ -809,7 +809,7 @@ def write_eval_fuzzy(config: dict):
             text_col=config.get("text_field", "text"),
             eval_id=config.get("eval_id_field", "eval_id"),
             n=int(config.get("n", 3)),
-            normalize=bool(config.get("normalize", False)),
+            normalize=flag(config, "normalize", False),
         )
         return df
 
@@ -881,7 +881,7 @@ def decontaminate_ingest_batch(config: dict):
 
     def transform(df: DataFrame, _artifact_gate: DataFrame | None = None) -> DataFrame:
         n = int(config.get("n", 13))
-        normalize = bool(config.get("normalize", False))
+        normalize = flag(config, "normalize", False)
         bloom, bloom_k = None, 7
         if config.get("bloom_path"):
             from ..llm.decontaminate import load_gram_bloom
@@ -1120,7 +1120,7 @@ def ngram_lm_score_op(config: dict):
             min_count=int(config.get("min_count", 2)),
             # persist=True also folds the token-total scan into the
             # fused-counts job (one corpus pass; optimization r13)
-            persist=bool(config.get("persist_model", True)),
+            persist=flag(config, "persist_model", True),
         )
         return score_ngram_lm(
             d,
@@ -1294,7 +1294,7 @@ def arpa_lm_score_op(config: dict):
             lm,
             tokens_col=tokens,
             id_col=config.get("id_field", "doc_id"),
-            broadcast_tables=bool(config.get("broadcast", True)),
+            broadcast_tables=flag(config, "broadcast", True),
         )
 
     return transform
@@ -1441,7 +1441,7 @@ def semantic_decontaminate_op(config: dict):
             corpus_vec=config.get("vec_field", "embedding"),
             corpus_id=config.get("id_field", "doc_id"),
             eval_vec=config.get("eval_vec_field", config.get("vec_field", "embedding")),
-            report=bool(config.get("report", False)),
+            report=flag(config, "report", False),
         )
 
     return transform
@@ -1919,7 +1919,7 @@ def url_blocklist_filter_op(config: dict):
         df,
         url_col=config.get("url_field", "url"),
         blocklist=config.get("blocklist", []),
-        match_subdomains=bool(config.get("match_subdomains", True)),
+        match_subdomains=flag(config, "match_subdomains", True),
     )
 
 

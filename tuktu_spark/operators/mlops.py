@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from .registry import operator
+from .registry import flag, operator
 
 
 @operator("hmm_viterbi")
@@ -184,8 +184,8 @@ def summarize_op(config: dict):
         num_lines=int(config.get("num_lines", 3)),
         optimal_length=int(config.get("optimal_sentence_length", 11)),
         base=float(config.get("base", 2.0)),
-        preserve_order=bool(config.get("preserve_order", True)),
-        as_text=bool(config.get("return_plain_text", True)),
+        preserve_order=flag(config, "preserve_order", True),
+        as_text=flag(config, "return_plain_text", True),
         out_col=config.get("result", "summary"),
     )
 
@@ -224,7 +224,7 @@ def rbem_polarity_op(config: dict):
             models=config.get("models"),
             decay=float(config.get("decay", 2.0)),
             max_distance=int(config.get("max_distance", 20)),
-            discretize=bool(config.get("discretize", False)),
+            discretize=flag(config, "discretize", False),
             out_col=config.get("result", "polarity"),
         )
     return lambda df: rbem_polarity(
@@ -236,7 +236,7 @@ def rbem_polarity_op(config: dict):
         right_flips=config.get("right_flips"),
         decay=float(config.get("decay", 2.0)),
         max_distance=int(config.get("max_distance", 20)),
-        discretize=bool(config.get("discretize", False)),
+        discretize=flag(config, "discretize", False),
         out_col=config.get("result", "polarity"),
     )
 
@@ -294,7 +294,7 @@ def fasttext_vectors_op(config: dict):
             config["model_path"],
             tokens_col=config.get("tokens_field", "tokens"),
             id_col=config.get("id_field", "doc_id"),
-            normalize_words=bool(config.get("normalize_words", True)),
+            normalize_words=flag(config, "normalize_words", True),
         )
 
     return transform
@@ -401,7 +401,7 @@ def pmi_op(config: dict):
             config.get("tokens_field", "tokens"),
             list(config["seeds"]),
             config.get("label_field"),
-            log=bool(config.get("log", True)),
+            log=flag(config, "log", True),
         )
 
     return transform

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..expressions import predicate_column, template_column
-from .registry import operator
+from .registry import flag, operator
 
 
 @operator("skip", "identity")
@@ -153,7 +153,7 @@ def template_add(config: dict):
     """Tuktu-string computed field (utils.scala:48-191)."""
     name = config["field"]
     tmpl = config["template"]
-    null_on_missing = bool(config.get("null_on_missing", False))
+    null_on_missing = flag(config, "null_on_missing", False)
     return lambda df: df.withColumn(
         name, template_column(tmpl, null_on_missing=null_on_missing)
     )

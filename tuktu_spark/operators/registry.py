@@ -42,6 +42,18 @@ def source(name: str, *aliases: str):
     return deco
 
 
+def flag(config: dict, key: str, default: bool) -> bool:
+    """A boolean config key: a bool, or the string true/false in any case
+    (as a ``#{param}`` filled from a string gives); anything else is a
+    config error, so the string "false" never reads as true."""
+    value = config.get(key, default)
+    if isinstance(value, bool):
+        return value
+    if isinstance(value, str) and value.lower() in ("true", "false"):
+        return value.lower() == "true"
+    raise ValueError(f"{key!r} must be true or false, got {value!r}")
+
+
 def reject_removed_keys(op: str, config: dict, *keys: str) -> None:
     """Raise ValueError if ``config`` still sets a key that ``op`` no
     longer reads — a flow written for the old option would otherwise run

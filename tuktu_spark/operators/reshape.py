@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .registry import operator
+from .registry import flag, operator
 
 
 @operator("explode", "sequence_explode")
@@ -84,7 +84,7 @@ def string_split(config: dict):
     field = config["field"]
     sep = config["separator"]
     out = config.get("as", field)
-    drop_empty = bool(config.get("drop_empty", False))
+    drop_empty = flag(config, "drop_empty", False)
 
     def transform(df: DataFrame) -> DataFrame:
         col = F.split(F.col(field), sep)
@@ -422,7 +422,7 @@ def datum_merge(config: dict):
     'last'), deep: bool}."""
     group = list(config.get("group", []))
     order_by = config.get("order_by")
-    deep = bool(config.get("deep", False))
+    deep = flag(config, "deep", False)
 
     def transform(df: DataFrame) -> DataFrame:
         if order_by is None:
@@ -492,7 +492,7 @@ def document_build(config: dict):
     group = list(config.get("group", []))
     order_by = config.get("order_by")
     sep = config.get("separator", " ")
-    drop_empty = bool(config.get("remove_empty_lines", True))
+    drop_empty = flag(config, "remove_empty_lines", True)
     result = config.get("result", "document")
 
     def transform(df: DataFrame) -> DataFrame:

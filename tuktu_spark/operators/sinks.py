@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..tables import persist
-from .registry import operator
+from .registry import flag, operator
 
 
 @operator("parquet_sink")
@@ -63,10 +63,11 @@ def csv_sink(config: dict):
     FileStreamProcessor (FileProcessors.scala:25-59): field/line separators
     = csv options; dynamic filename -> partition_by."""
     path = config["path"]
+    header = flag(config, "header", True)
 
     def sink(df: DataFrame):
         writer = df.write.mode(config.get("mode", "overwrite")).options(
-            header=str(bool(config.get("header", True))).lower(),
+            header=header,
             sep=config.get("separator", ","),
         )
         if config.get("partition_by"):
@@ -112,7 +113,7 @@ def jdbc_sink(config: dict):
 def console(config: dict):
     """ConsoleWriterProcessor (BaseProcessors.scala:641-663)."""
     n = int(config.get("n", 20))
-    truncate = bool(config.get("truncate", True))
+    truncate = flag(config, "truncate", True)
 
     def sink(df: DataFrame):
         df.show(n, truncate=truncate)

@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import listing_signature, memo_put, schema_memo_of
-from .registry import source
+from .registry import flag, source
 
 # Session confs that change the schema Spark infers, per format.
 _FILE_INFERENCE_CONFS = (
@@ -38,7 +38,7 @@ _INFERENCE_CONFS = {
 
 
 def read_inferred(
-    spark: SparkSession, fmt: str, path: str, options: dict[str, str] | None = None
+    spark: SparkSession, fmt: str, path: str, options: dict | None = None
 ) -> DataFrame:
     """``spark.read.options(**options).format(fmt).load(path)``, with the
     schema inference job run only once per unchanged input.
@@ -67,17 +67,6 @@ def read_inferred(
     return df
 
 
-def _flag(config: dict, key: str, default: bool) -> str:
-    """A boolean option as Spark's "true"/"false": a bool, or the string
-    true/false in any case; anything else is a config error."""
-    value = config.get(key, default)
-    if isinstance(value, str) and value.lower() in ("true", "false"):
-        return value.lower()
-    if isinstance(value, bool):
-        return str(value).lower()
-    raise ValueError(f"{key!r} must be true or false, got {value!r}")
-
-
 @source("parquet")
 def parquet(spark: SparkSession, config: dict) -> DataFrame:
     """Parquet file/directory source (predicate pushdown + column pruning).
@@ -94,12 +83,12 @@ def csv(spark: SparkSession, config: dict) -> DataFrame:
     explicit `schema`, the inferred one is reused while the input is
     unchanged (FLOWSPEC.md "Schema reuse")."""
     options = {
-        "header": _flag(config, "header", True),
+        "header": flag(config, "header", True),
         "sep": config.get("separator", ","),
         "quote": config.get("quote", '"'),
         "escape": config.get("escape", "\\"),
         "mode": config.get("mode", "PERMISSIVE"),  # error tolerance (:198)
-        "inferSchema": _flag(config, "infer_schema", True),
+        "inferSchema": flag(config, "infer_schema", True),
     }
     schema = config.get("schema")
     if schema:
