@@ -10,12 +10,14 @@ Usage: python scripts/plan_audit.py [sf_dir]
        python scripts/plan_audit.py --all [sf_dir]
 
 ``--all`` (r11 verdict #7, the full-registry guard): explain EVERY
-registry query — not just the bench set — and enforce two invariants:
-CartesianProduct count is zero everywhere, and every query whose plan
-contains a BroadcastNestedLoopJoin is on BNLJ_ALLOWLIST with a written
-scalar/query-size justification. A stray cartesian or an unadjudicated
-bnlj anywhere in the registry fails the run (exit 1) instead of shipping
-unnoticed; the findings and the allowlist are appended to PLAN_AUDIT.md.
+registry query — not just the bench set — together with every plan the
+query hands to a lineage cut while it builds (``audit_build``), and
+enforce two invariants: CartesianProduct count is zero everywhere, and
+every query whose plans contain a BroadcastNestedLoopJoin is on
+BNLJ_ALLOWLIST with a written scalar/query-size justification. A stray
+cartesian or an unadjudicated bnlj anywhere in the registry fails the
+run (exit 1) instead of shipping unnoticed; the findings and the
+allowlist are appended to PLAN_AUDIT.md.
 Also runnable as an opt-in pytest (tests/test_plan_guard.py,
 SPARK_GRAFT_PLAN_GUARD=1).
 """
@@ -122,6 +124,37 @@ def audit(plan: str) -> dict:
     }
 
 
+def audit_build(build) -> dict:
+    """``audit`` of the plan ``build()`` returns, summed with the audits of
+    every plan that ``build`` hands to a lineage cut while it runs: a
+    ``tables.checkpoint`` round or a flow fan-out node that
+    ``flow.compiler._share`` runs once. Plans past a cut read
+    ``Scan ExistingRDD``, so a cartesian product or nested-loop join
+    inside a cut is invisible in the returned plan alone."""
+    from tuktu_spark import tables
+    from tuktu_spark.flow import compiler
+
+    cut_plans: "list[str]" = []
+
+    def watch(cut):
+        def audited(*args):
+            cut_plans.append(plan_of(args[-1]))  # the DataFrame to cut
+            return cut(*args)
+        return audited
+
+    saved = tables.checkpoint, compiler._share
+    tables.checkpoint, compiler._share = watch(saved[0]), watch(saved[1])
+    try:
+        final = plan_of(build())
+    finally:
+        tables.checkpoint, compiler._share = saved
+    audits = [audit(p) for p in [final] + cut_plans]
+    return {
+        k: (any if isinstance(v, bool) else sum)(a[k] for a in audits)
+        for k, v in audits[0].items()
+    }
+
+
 # Every registry query whose physical plan may contain a
 # BroadcastNestedLoopJoin, with the scalar/query-size justification that
 # makes it acceptable at 100 TB (the broadcast side is O(1) or O(query)
@@ -206,8 +239,7 @@ def guard_all(spark, sf_dir: str) -> int:
     rows: "list[tuple[str, dict]]" = []
     for name, qd in sorted(reg.items()):
         try:
-            df = qd.fn(spark, sf_dir)
-            rows.append((name, audit(plan_of(df))))
+            rows.append((name, audit_build(lambda: qd.fn(spark, sf_dir))))
         except Exception as e:  # pragma: no cover - audit tool
             rows.append((name, {"error": str(e).splitlines()[0]}))
 

@@ -41,7 +41,6 @@ _SLOW_TESTS = {
     "test_flow.py::test_web_corpus_refinement_flow",  # 17.3
     "test_hmm.py::TestSparkHmm::test_baum_welch_monotone_loglik",  # 6.4
     "test_iterative.py::test_connected_components_long_path_converges",  # 9.4
-    "test_iterative.py::test_star_components_equal_label_propagation",  # 45.6
     "test_llm.py::TestAnnIvf::test_kmeans_ivf_recall_rises_with_probes",  # 6.5
     "test_llm.py::TestBloomDecontamination::test_report_equals_broadcast_form",  # 6.0
     "test_llm.py::TestBloomDecontamination::test_staged_fold_partitioning_invariant",  # 6.9

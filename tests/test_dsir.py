@@ -247,27 +247,3 @@ class TestFlaggedFit:
             buckets=B,
         )
         assert one_pass == two_pass
-
-
-class TestPersistFeaturesKnob:
-    def test_conf_on_equals_off_and_caches(self, spark, sf_dir):
-        """r14 (r13 verdict #6): spark.tuktu.dsir.persistFeatures=true
-        (the mid-scale single-pass shape) must be bit-identical to the
-        default two-pass shape and must actually cache the matrix."""
-        from tuktu_spark.queries import load_all
-
-        fn = load_all()["mix_dsir_select"].fn
-        base = sorted(map(tuple, fn(spark, sf_dir).collect()))
-        spark.conf.set("spark.tuktu.dsir.persistFeatures", "true")
-        try:
-            cached = fn(spark, sf_dir)
-            plan = cached._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-            )
-            assert "InMemoryTableScan" in plan
-            assert sorted(map(tuple, cached.collect())) == base
-        finally:
-            spark.conf.unset("spark.tuktu.dsir.persistFeatures")
-            from tuktu_spark.tables import release
-
-            release()

@@ -4,6 +4,7 @@ concurrent repartition, sub-flow inclusion."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -48,6 +49,69 @@ def test_connected_components_long_path_converges(spark):
     )
     out = connected_components(edges)
     assert set(r["component"] for r in out.collect()) == {0}
+
+
+def test_connected_components_round_cap_raises(spark, monkeypatch):
+    """Reaching the round cap without convergence raises instead of
+    returning partial labels."""
+    from tuktu_spark.operators import iterative
+
+    monkeypatch.setattr(iterative, "MAX_ROUNDS", 1)
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(8)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="not converged after 1 rounds"):
+        connected_components(edges)
+
+
+@pytest.mark.parametrize(
+    "config", [{"algorithm": "star"}, {"algorithm": "label"}, {"max_iterations": 40}]
+)
+def test_connected_components_removed_keys_fail_loudly(spark, config):
+    from tuktu_spark.flow.compiler import compile_flow
+
+    key = next(iter(config))
+    flow = {
+        "generators": [{
+            "id": "g", "name": "inline",
+            "config": {"rows": [[1, 2]], "columns": ["id_a", "id_b"]},
+            "next": ["cc"],
+        }],
+        "processors": [
+            {"id": "cc", "name": "connected_components", "config": config, "next": []}
+        ],
+    }
+    with pytest.raises(ValueError, match=f"'connected_components'.*'{key}'") as info:
+        compile_flow(spark, flow)
+    assert "node cc (connected_components)" in info.value.__notes__
+
+
+def _persistent_rdds(spark) -> dict:
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(i): rdds.get(i) for i in rdds.keySet()}
+
+
+def test_dedup_flow_checkpoints_released_by_next_run(spark, sf_dir):
+    """The connected-components rounds of one run_flow do not outlive the
+    next run: once a second run has built and run its action, no
+    checkpoint RDD of the first run is still persisted."""
+    from tuktu_spark.flow import run_flow
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "flows", "examples", "dedup_documents.json",
+    )
+    before = set(_persistent_rdds(spark))
+    first = run_flow(spark, path, params={"dir": sf_dir})["groups"]
+    rows = sorted(map(tuple, first.collect()))
+    checkpoints = {
+        i for i, rdd in _persistent_rdds(spark).items()
+        if i not in before and rdd.isCheckpointed()
+    }
+    assert checkpoints
+    second = run_flow(spark, path, params={"dir": sf_dir})["groups"]
+    assert sorted(map(tuple, second.collect())) == rows
+    assert not checkpoints & set(_persistent_rdds(spark))
 
 
 def test_concurrent_repartitions_by_anchor(spark):
@@ -136,38 +200,3 @@ def test_salted_join_equals_plain_join(spark):
     a = sorted((r["k"], r["v"], r["label"]) for r in salted.collect())
     b = sorted((r["k"], r["v"], r["label"]) for r in plain.collect())
     assert a == b
-
-
-def test_star_components_equal_label_propagation(spark):
-    """large-star/small-star must produce the same components as
-    min-label propagation on adversarial shapes: long path, star,
-    clique, disjoint mix, random graphs."""
-    import random
-
-    from tuktu_spark.operators.iterative import connected_components_star
-
-    cases = [
-        [(i, i + 1) for i in range(15)],                       # long chain
-        [(0, i) for i in range(1, 8)],                         # star
-        [(i, j) for i in range(6) for j in range(i + 1, 6)],   # clique
-        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)],        # disjoint
-    ]
-    rng = random.Random(7)
-    for _ in range(3):
-        n = 25
-        cases.append(
-            [(rng.randrange(n), rng.randrange(n)) for _ in range(30)]
-        )
-    for edges_py in cases:
-        edges_py = [(a, b) for a, b in edges_py if a != b]
-        if not edges_py:
-            continue
-        df = spark.createDataFrame(edges_py, "id_a long, id_b long")
-        want = {
-            r["id"]: r["component"] for r in connected_components(df).collect()
-        }
-        got = {
-            r["id"]: r["component"]
-            for r in connected_components_star(df).collect()
-        }
-        assert got == want, f"mismatch for edges {edges_py}"

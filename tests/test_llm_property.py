@@ -703,10 +703,9 @@ def test_normalized_spans_match_python_reference(spark, texts, ev_picks, n):
     assert got == want
 
 
-def _py_keep_representatives(ids_scores, edges):
-    """Naive reference: union-find components over edges, keep argmax
-    (score, then min id) per component among ids present in the corpus;
-    docs outside any component pass through."""
+def _py_components(edges):
+    """Naive reference: union-find over edges -> {node: min node of its
+    component} for every node an edge names."""
     parent = {}
 
     def find(x):
@@ -726,6 +725,16 @@ def _py_keep_representatives(ids_scores, edges):
     comps = {}
     for node in parent:
         comps.setdefault(find(node), []).append(node)
+    return {m: min(members) for members in comps.values() for m in members}
+
+
+def _py_keep_representatives(ids_scores, edges):
+    """Naive reference: union-find components over edges, keep argmax
+    (score, then min id) per component among ids present in the corpus;
+    docs outside any component pass through."""
+    comps = {}
+    for node, root in _py_components(edges).items():
+        comps.setdefault(root, []).append(node)
     scores = dict(ids_scores)
     losers = set()
     for members in comps.values():
@@ -739,6 +748,44 @@ def _py_keep_representatives(ids_scores, edges):
         )
         losers.update(m for m in present if m != win)
     return {i for i, _ in ids_scores if i not in losers}
+
+
+@settings(max_examples=2, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    graphs=st.lists(
+        st.lists(
+            st.tuples(
+                st.integers(min_value=0, max_value=11),
+                st.integers(min_value=0, max_value=11),
+            ),
+            min_size=1, max_size=14,
+        ),
+        min_size=1, max_size=6,
+    ),
+    chain_seed=st.integers(min_value=0, max_value=2**16),
+)
+def test_connected_components_match_union_find(spark, graphs, chain_seed):
+    """connected_components equals a naive union-find on random graphs with
+    self-loops, duplicate and reversed edges and disconnected parts, plus a
+    star, a clique and a 45-node chain in shuffled id order (some node is
+    over 20 hops from the chain's min). Each graph gets its own id range,
+    so one call checks them all."""
+    import random
+
+    from tuktu_spark.operators.iterative import connected_components
+
+    star = [(0, i) for i in range(1, 8)]
+    clique = [(i, j) for i in range(6) for j in range(i + 1, 6)]
+    edges = []
+    for k, g in enumerate(graphs + [star, clique]):
+        g = [(a + 100 * k, b + 100 * k) for a, b in g]
+        edges += g + [(b, a) for a, b in g[::3]] + g[:1]
+    chain = list(range(1000, 1045))
+    random.Random(chain_seed).shuffle(chain)
+    edges += list(zip(chain, chain[1:]))
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    got = {r["id"]: r["component"] for r in connected_components(df).collect()}
+    assert got == _py_components(edges)
 
 
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))

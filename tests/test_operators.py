@@ -693,17 +693,10 @@ class TestColumnMemo:
 
 def test_partition_by_keys_width_is_default_parallelism(spark):
     """r14 (r13 advice #4): partition_by_keys must not physically plan the
-    input per call (df.rdd) — width comes from defaultParallelism or the
-    spark.tuktu.partition.width override."""
+    input per call (df.rdd) — width comes from defaultParallelism."""
     from tuktu_spark.tables import partition_by_keys
 
     df = spark.range(100).selectExpr("id as doc_id", "id * 2 as v")
     out = partition_by_keys(df, "doc_id")
     assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     assert sorted(r["doc_id"] for r in out.collect()) == list(range(100))
-
-    spark.conf.set("spark.tuktu.partition.width", "7")
-    try:
-        assert partition_by_keys(df, "doc_id").rdd.getNumPartitions() == 7
-    finally:
-        spark.conf.unset("spark.tuktu.partition.width")

@@ -1270,10 +1270,11 @@ def keep_cluster_representatives(
     This is the "keep best, not first" policy public pipelines apply
     after fuzzy clustering (quality-ranked representative selection).
 
-    Pass EITHER ``pairs`` (built into components via min-label
-    propagation, operators/iterative.py:66) or a prebuilt ``components``
-    table ((comp_id_col, comp_col), e.g. connected_components output —
-    how a pipeline reuses one clustering across policies). NULL scores
+    Pass EITHER ``pairs`` (built into components by large-star/small-star
+    contraction, operators/iterative.connected_components) or a prebuilt
+    ``components`` table ((comp_id_col, comp_col), e.g.
+    connected_components output — how a pipeline reuses one clustering
+    across policies). NULL scores
     rank below every real score; a doc in ``components`` but absent
     from ``corpus`` can't win (it has no score row) and can't lose
     anything (it has no corpus row to drop).

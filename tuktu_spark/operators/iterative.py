@@ -2,9 +2,12 @@
 
 Reference: RecursiveLookup (modules/nosql/app/tuktu/nosql/processors/sql/
 RecursiveLookup.scala) iterates parent->child SQL lookups. On Spark the
-iteration is a driver-side loop of DataFrame joins with ``localCheckpoint``
-to cut lineage (else the plan doubles per round and Catalyst analysis
-blows up long before the data does).
+iteration is a driver-side loop of DataFrame joins. Each round is
+materialized with ``tables.checkpoint`` (a ``localCheckpoint``) to cut
+lineage, else the plan doubles per round and Catalyst analysis blows up
+long before the data does. A round is unpersisted as soon as the next
+one is materialized; only the rounds the returned DataFrame reads stay,
+until the next ``run_flow`` or query build (``tables.release``).
 
 ``connected_components`` is the natural completion of pair-producing dedup
 (minhash/simhash/embedding near-dup all emit edges; turning edges into
@@ -16,7 +19,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .registry import operator
+from .. import tables
+from .registry import operator, reject_removed_keys
+
+# Large-star/small-star rounds before ``connected_components`` gives up.
+# Rounds grow with log(n) (Kiveris et al.), not with a component's
+# diameter: chains of 31, 200 and 2000 nodes converge in 6, 8 and 10.
+MAX_ROUNDS = 25
 
 
 def bfs_expand(
@@ -28,23 +37,29 @@ def bfs_expand(
     max_iterations: int = 10,
 ) -> DataFrame:
     """Breadth-first descendant traversal: rows of ``seed`` (with ``key``)
-    expand through parent->child edges, emitting (key, node, depth).
-    Each round is one equi-join shuffle on the frontier — frontier size,
-    not graph size, bounds the per-round cost."""
+    expand through parent->child edges, emitting (key, node, depth) down
+    to depth ``max_iterations``. Each round is one equi-join shuffle on
+    the frontier — frontier size, not graph size, bounds the per-round
+    cost."""
     frontier = seed.select(F.col(key).alias("root"), F.col(key).alias("node"))
     acc = frontier.withColumn("depth", F.lit(0))
     for depth in range(1, max_iterations + 1):
-        nxt = (
+        nxt = tables.checkpoint(
             frontier.join(edges, frontier.node == edges[parent_col])
             .select("root", F.col(child_col).alias("node"))
             .distinct()
+            .join(acc.select("root", "node"), ["root", "node"], "left_anti")
         )
-        nxt = nxt.join(acc.select("root", "node"), ["root", "node"], "left_anti")
-        nxt = nxt.localCheckpoint()
         if nxt.isEmpty():
+            tables.unpersist(nxt)
             break
-        acc = acc.unionByName(nxt.withColumn("depth", F.lit(depth))).localCheckpoint()
-        frontier = nxt
+        grown = tables.checkpoint(
+            acc.unionByName(nxt.withColumn("depth", F.lit(depth)))
+        )
+        tables.unpersist(acc)
+        tables.unpersist(frontier)
+        acc, frontier = grown, nxt
+    tables.unpersist(frontier)
     return acc.select(F.col("root").alias(key), "node", "depth")
 
 
@@ -63,72 +78,96 @@ def recursive_lookup(config: dict):
     return transform
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iterations: int = 20,
-) -> DataFrame:
-    """(node, component) where component = min node id reachable via edges.
+def _canonical_edges(df: DataFrame) -> DataFrame:
+    return df.select(
+        F.greatest("u", "v").alias("hi"), F.least("u", "v").alias("lo")
+    ).filter(F.col("hi") != F.col("lo")).distinct()
 
-    Min-label propagation: each round every node takes the min of its own
-    and its neighbors' labels; stops at fixpoint. Rounds needed = graph
-    diameter — near-dup clusters are shallow, so a handful. Each round is
-    one join + one groupBy, both shuffling on node id; at web scale swap in
-    the large-star/small-star contraction (Kiveris et al.) which this API
-    deliberately matches.
+
+def connected_components(
+    edges: DataFrame, src: str = "id_a", dst: str = "id_b"
+) -> DataFrame:
+    """(id, component) where component = min node id reachable via edges,
+    for every node named by an edge (self-loops included).
+
+    Alternating large-star/small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond"): O(log n) rounds
+    whatever the components' diameter, so long transitive near-dup chains
+    cost no more rounds than shallow clusters. Each round is two
+    checkpointed edge sets and one convergence action. The (src, dst)
+    input is persisted once and both the edge set and the node list read
+    that copy, so the caller's lineage runs once. The result is itself a
+    checkpoint: actions on it, and plans that read it twice, read the
+    materialized table, and the rounds and the input copy are unpersisted
+    before it is returned. Raises RuntimeError if the edge set has not
+    converged after ``MAX_ROUNDS`` rounds.
     """
-    sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).unionByName(
-        edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+    pairs = tables.persist(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     )
-    labels = (
-        sym.select(F.col("u").alias("id"))
-        .distinct()
-        .withColumn("comp", F.col("id"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iterations):
-        neigh = (
-            sym.join(labels, sym.v == labels.id)
-            .groupBy("u")
-            .agg(F.min("comp").alias("neigh_min"))
+    e = tables.checkpoint(_canonical_edges(pairs))
+    for _ in range(MAX_ROUNDS):
+        # large-star: every neighbor v > u links to min(N(u) + {u})
+        sym = e.select(F.col("hi").alias("a"), F.col("lo").alias("b")).unionByName(
+            e.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
         )
-        new_labels = (
-            labels.join(neigh, labels.id == neigh.u, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("neigh_min"), F.col("comp"))
-                ).alias("comp"),
-            )
-            .localCheckpoint()
+        mins = sym.groupBy("a").agg(F.least(F.min("b"), F.first("a")).alias("m"))
+        large = (
+            sym.join(mins, "a")
+            .filter(F.col("b") > F.col("a"))
+            .select(F.col("b").alias("u"), F.col("m").alias("v"))
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.comp") != F.col("o.comp"))
+        e1 = tables.checkpoint(_canonical_edges(large))
+        # small-star: group parent pointers by hi; all los + hi link to min
+        mins2 = e1.groupBy("hi").agg(F.min("lo").alias("m"))
+        with_m = e1.join(mins2, "hi")
+        small = with_m.select(F.col("lo").alias("u"), F.col("m").alias("v")).unionByName(
+            with_m.select(F.col("hi").alias("u"), F.col("m").alias("v"))
+        )
+        e2 = tables.checkpoint(_canonical_edges(small))
+        tables.unpersist(e1)
+        # converged when a full large+small round leaves the edge set fixed.
+        # ONE action: both sets are distinct, so an edge present in only one
+        # of them shows up as a (hi, lo) group with a single tag — isEmpty
+        # short-circuits on the first such group.
+        converged = (
+            e.withColumn("__t", F.lit(1))
+            .unionByName(e2.withColumn("__t", F.lit(2)))
+            .groupBy("hi", "lo")
+            .agg(F.count_distinct("__t").alias("__nt"))
+            .filter(F.col("__nt") < 2)
             .isEmpty()
         )
-        labels = new_labels
-        if changed:
+        tables.unpersist(e)
+        e = e2
+        if converged:
             break
-    return labels.select(F.col("id"), F.col("comp").alias("component"))
+    else:
+        raise RuntimeError(
+            f"connected_components: edge set not converged after {MAX_ROUNDS} rounds"
+        )
+    # star edges: (hi=node, lo=root); roots map to themselves
+    nodes = pairs.select(F.col("u").alias("id")).unionByName(
+        pairs.select(F.col("v").alias("id"))
+    ).distinct()
+    comp = e.select(F.col("hi").alias("id"), F.col("lo").alias("component"))
+    out = tables.checkpoint(
+        nodes.join(comp, "id", "left")
+        .select("id", F.coalesce("component", F.col("id")).alias("component"))
+    )
+    tables.unpersist(e)
+    tables.unpersist(pairs)
+    return out
 
 
 @operator("connected_components")
 def connected_components_op(config: dict):
-    """Edges (src,dst) -> (node, component=min reachable id).
-    config: {"src", "dst", "max_iterations", "algorithm": "label"|"star"} —
-    "label" (default) = min-label propagation (O(diameter) rounds, right
-    for shallow near-dup clusters); "star" = large-star/small-star
-    contraction (O(log n) rounds, right for long-chain components)."""
+    """Edges (src,dst) -> (id, component=min reachable id) by
+    large-star/small-star contraction. config: {"src", "dst"}."""
+    reject_removed_keys("connected_components", config, "algorithm", "max_iterations")
     src = config.get("src", "id_a")
     dst = config.get("dst", "id_b")
-    max_iter = int(config.get("max_iterations", 20))
-    algo = config.get("algorithm", "label")
-    if algo == "star":
-        return lambda df: connected_components_star(df, src, dst, max_iter)
-    return lambda df: connected_components(df, src, dst, max_iter)
+    return lambda df: connected_components(df, src, dst)
 
 
 @operator("concurrent", "repartition")
@@ -151,70 +190,3 @@ def concurrent(config: dict):
         return df
 
     return transform
-
-
-def _canonical_edges(df: DataFrame) -> DataFrame:
-    return df.select(
-        F.greatest("u", "v").alias("hi"), F.least("u", "v").alias("lo")
-    ).filter(F.col("hi") != F.col("lo")).distinct()
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iterations: int = 25,
-) -> DataFrame:
-    """Alternating large-star/small-star contraction (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", public literature):
-    converges in O(log n) rounds vs. the label-propagation variant's
-    O(diameter) — the right choice when components can be long chains
-    (e.g. transitive near-dup clusters at web scale). Same output contract
-    as connected_components: (id, component=min reachable id).
-    """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    e = _canonical_edges(e).localCheckpoint()
-    for _ in range(max_iterations):
-        # large-star: every neighbor v > u links to min(N(u) + {u})
-        sym = e.select(F.col("hi").alias("a"), F.col("lo").alias("b")).unionByName(
-            e.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
-        )
-        mins = sym.groupBy("a").agg(F.least(F.min("b"), F.first("a")).alias("m"))
-        large = (
-            sym.join(mins, "a")
-            .filter(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("u"), F.col("m").alias("v"))
-        )
-        e1 = _canonical_edges(large).localCheckpoint()
-        # small-star: group parent pointers by hi; all los + hi link to min
-        mins2 = e1.groupBy("hi").agg(F.min("lo").alias("m"))
-        with_m = e1.join(mins2, "hi")
-        small = with_m.select(F.col("lo").alias("u"), F.col("m").alias("v")).unionByName(
-            with_m.select(F.col("hi").alias("u"), F.col("m").alias("v"))
-        )
-        e2 = _canonical_edges(small).localCheckpoint()
-        # converged when a full large+small round leaves the edge set fixed.
-        # ONE action: both sets are distinct, so an edge present in only one
-        # of them shows up as a (hi, lo) group with a single tag — isEmpty
-        # short-circuits on the first such group (the previous
-        # count + 2x exceptAll version cost up to 4 driver round-trips).
-        changed = (
-            e.withColumn("__t", F.lit(1))
-            .unionByName(e2.withColumn("__t", F.lit(2)))
-            .groupBy("hi", "lo")
-            .agg(F.count_distinct("__t").alias("__nt"))
-            .filter(F.col("__nt") < 2)
-        )
-        converged = changed.isEmpty()
-        e = e2
-        if converged:
-            break
-    # star edges: (hi=node, lo=root); roots map to themselves
-    nodes = edges.select(F.col(src).alias("id")).unionByName(
-        edges.select(F.col(dst).alias("id"))
-    ).distinct()
-    comp = e.select(F.col("hi").alias("id"), F.col("lo").alias("component"))
-    return (
-        nodes.join(comp, "id", "left")
-        .select("id", F.coalesce("component", F.col("id")).alias("component"))
-    )

@@ -376,7 +376,8 @@ _TOUCHED = frozenset(
         #   family all execute them;
         # - bm25(): a dl-persist conf, since removed (default path
         #   plan-identical);
-        # - mix_dsir_select: persistFeatures conf branch;
+        # - mix_dsir_select: persistFeatures conf branch, since removed
+        #   (default path plan-identical);
         # - text_ngram_lm_score: partition_by_keys width derivation.
         #
         # load_table's plan memo also changed and is on EVERY query's

@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..llm import text as T
-from ..tables import load_table, persist
+from ..tables import load_table
 from . import query
 
 # ---------------------------------------------------------------------------
@@ -905,22 +905,6 @@ def mix_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both bucket distributions, so the corpus featurizes twice total
     # (fit + weights) instead of three times (bit-identical llr, pinned)
     feats = hashed_ngram_features(d, buckets=_DSIR_B, keep_cols=("is_target",))
-    # spark.tuktu.dsir.persistFeatures (optimization r14, r13 verdict
-    # #6): persist the (doc, is_target, bucket) matrix so the corpus
-    # featurizes ONCE (fit reads the cache, weights read the cache).
-    # Interleaved A/B, identical output both SFs: sf0.1 two-pass 1.6-1.7 s
-    # vs single-pass 2.0-2.1 s (cache build > saved pass on a small hot
-    # file) but 5x corpus two-pass med 3.13 / min 2.65 vs single-pass
-    # med 2.07 / min 1.89 — the crossover sits just above the bench SF.
-    # Default false: keeps the driver bench at the measured-faster local
-    # shape, and at EXTREME scale an exploded per-occurrence matrix can
-    # outgrow cluster memory (spill converts the saved pass into disk
-    # traffic) — flip it on when the matrix fits aggregate memory.
-    if (
-        spark.conf.get("spark.tuktu.dsir.persistFeatures", "false").lower()
-        == "true"
-    ):
-        feats = persist(feats)
     llr = train_dsir_llr_flagged(feats, _DSIR_B)
     out = dsir_select_topk(dsir_weights(feats, llr), _DSIR_K)
     return out.select("doc_id", "n_feats", "logw_q")

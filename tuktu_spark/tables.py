@@ -73,15 +73,16 @@ def memo_column(key: tuple, builder):
     return col
 
 
-# Every DataFrame the package persists while building a plan (the dedup
-# family's shared scans, the positional kernels' sort pins, flow-node
-# ``cache: true`` and the ``cache`` operator). Spark's ContextCleaner
-# never drops a DataFrame persist, so each lives until ``release()``,
-# which only ``run_flow`` and the query wrapper call, on entry: a persist
-# serves the build that made it and that build's actions, and a later
-# run over the same plan recomputes instead of reading a stale cache.
-# Library calls outside a flow run or query keep their persists until
-# the caller calls ``release()``.
+# Every DataFrame the package persists or local-checkpoints while building
+# a plan (the dedup family's shared scans, the positional kernels' sort
+# pins, flow-node ``cache: true``, the ``cache`` operator and the rounds
+# of the iterative operators). Spark's ContextCleaner never drops a
+# DataFrame persist, and drops a checkpoint only when the JVM collects its
+# RDD, so each lives until ``release()``, which only ``run_flow`` and the
+# query wrapper call, on entry: a persist serves the build that made it
+# and that build's actions, and a later run over the same plan recomputes
+# instead of reading a stale cache. Library calls outside a flow run or
+# query keep their persists until the caller calls ``release()``.
 _PERSISTS: list[DataFrame] = []
 
 
@@ -92,11 +93,41 @@ def persist(df: DataFrame) -> DataFrame:
     return df
 
 
+def checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint()``, materialized now and held until the next
+    ``release()`` or an ``unpersist`` of the result. A DataFrame that reads
+    a released checkpoint fails at its action instead of recomputing."""
+    df = df.localCheckpoint()
+    _PERSISTS.append(df)
+    return df
+
+
+def _free(df: DataFrame) -> None:
+    df.unpersist()
+    # DataFrame.unpersist() leaves a local checkpoint's RDD persisted;
+    # a checkpoint's plan is a LogicalRDD over that RDD.
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        rdd = plan.rdd()
+        if rdd.isCheckpointed():
+            rdd.unpersist(True)
+
+
+def unpersist(df: DataFrame) -> None:
+    """Release one DataFrame recorded by ``persist`` or ``checkpoint`` now
+    (e.g. a superseded round of an iteration); a no-op for any other."""
+    for i, held in enumerate(_PERSISTS):
+        if held is df:
+            del _PERSISTS[i]
+            _free(df)
+            return
+
+
 def release() -> None:
-    """Unpersist every DataFrame recorded by ``persist``."""
+    """Unpersist every DataFrame recorded by ``persist`` or ``checkpoint``."""
     while _PERSISTS:
         try:
-            _PERSISTS.pop().unpersist()
+            _free(_PERSISTS.pop())
         except Exception:
             pass  # session already stopped
 
@@ -344,21 +375,13 @@ def partition_by_keys(df: DataFrame, *keys: str) -> DataFrame:
     repartition(col) is an AQE-coalescible shuffle: on a small input AQE
     folds it to ONE partition and serializes every downstream stage.
 
-    Width derivation (r14, r13 advice #4): ``defaultParallelism``, one
-    cheap py4j property read. The r13 form max'd it with
-    ``df.rdd.getNumPartitions()``, which physically plans the query over
-    py4j on EVERY invocation — the same per-build driver-overhead class
-    the reader memo removed (~40-60 ms per call on the bench host). At
-    cluster scale defaultParallelism is the executor-core count — the
-    natural exchange width for a keyed corpus shuffle; a deployment that
-    wants wider keyed exchanges (e.g. giant docs, tight memory) sets
-    ``spark.tuktu.partition.width`` instead of relying on the input's
-    accidental split count."""
-    spark = df.sparkSession
-    try:
-        n = int(spark.conf.get("spark.tuktu.partition.width", ""))
-    except (TypeError, ValueError):
-        n = spark.sparkContext.defaultParallelism
+    The width is ``defaultParallelism``, one cheap py4j property read.
+    Deriving it from ``df.rdd.getNumPartitions()`` would physically plan
+    the query over py4j on every call (~40-60 ms of driver time each,
+    measured in optimization r14). At cluster scale defaultParallelism is
+    the executor-core count, the natural exchange width for a keyed
+    corpus shuffle."""
+    n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, *[F.col(k) for k in keys])
 
 
