@@ -67,3 +67,23 @@ def test_cdc_operators(spark):
     assert chunks.count() > 2
     stats = make_operator("cdc_dedup_stats", {})(chunks).collect()[0]
     assert stats["saved_bytes"] >= 0
+
+
+def test_cdc_query_persists_released_by_next_build(spark, sf_dir):
+    """multimodal_cdc_dedup's chunk cache and result checkpoint live on the
+    persist lifecycle: once the query is built again and its action has
+    run, no persistent RDD of the first build is left."""
+    from tuktu_spark.queries import load_all
+
+    build = load_all()["multimodal_cdc_dedup"].fn
+
+    def persistent():
+        return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+    before = persistent()
+    first_df = build(spark, sf_dir)
+    rows = sorted(map(tuple, first_df.collect()))
+    first = persistent() - before
+    assert first
+    assert sorted(map(tuple, build(spark, sf_dir).collect())) == rows
+    assert not first & persistent()

@@ -609,7 +609,7 @@ def test_ann_index_compaction_preserves_probes(spark, sf_dir, tmp_path):
 
     before_rows = probe()
     before_files = parquet_files(index_dir)
-    stats = compact_ann_index(spark, index_dir, keep_latest=1)
+    stats = compact_ann_index(spark, index_dir)
     assert stats["folded_batches"] == [0, 1, 2, 3]
     assert stats["kept_batches"] == [4]
     after_files = parquet_files(index_dir)
@@ -634,16 +634,9 @@ def test_ann_index_compaction_preserves_probes(spark, sf_dir, tmp_path):
         "vec_id", F.col("vec_id") + 1000
     ), 5)
     with_new = probe()
-    stats2 = compact_ann_index(spark, index_dir, keep_latest=1)
+    stats2 = compact_ann_index(spark, index_dir)
     assert stats2["folded_batches"] == [4]
     assert probe() == with_new
-    # guards
-    import pytest
-
-    with pytest.raises(ValueError, match="keep_latest"):
-        compact_ann_index(spark, index_dir, keep_latest=0)
-    with pytest.raises(ValueError, match="compact_label"):
-        compact_ann_index(spark, index_dir, compact_label=7)
 
 
 def test_ann_compaction_multiplicity_and_crash_recovery(spark, sf_dir, tmp_path):
@@ -677,7 +670,7 @@ def test_ann_compaction_multiplicity_and_crash_recovery(spark, sf_dir, tmp_path)
         return spark.read.parquet(index_dir).count()
 
     assert count() == true_count
-    stats = compact_ann_index(spark, index_dir, keep_latest=1)
+    stats = compact_ann_index(spark, index_dir)
     assert stats["folded_batches"] == [0, 1]
     assert count() == true_count  # cross-epoch multiplicity PRESERVED
     compacted = spark.read.parquet(index_dir).filter(F.col("batch_id") == -1)
@@ -695,7 +688,7 @@ def test_ann_compaction_multiplicity_and_crash_recovery(spark, sf_dir, tmp_path)
     # partition, SAME src_batch
     proc(emb.filter(F.col("vec_id") < 10), 1)
     assert count() == true_count + 10
-    stats2 = compact_ann_index(spark, index_dir, keep_latest=1)
+    stats2 = compact_ann_index(spark, index_dir)
     assert stats2["folded_batches"] == [1]
     assert count() == true_count  # crash copies removed, nothing else
 
@@ -793,7 +786,7 @@ def test_ann_probe_built_before_compaction_survives(spark, sf_dir, tmp_path):
     before = sorted(
         (r["query_id"], r["neighbor_id"], r["rank"]) for r in probe_df.collect()
     )
-    stats = compact_ann_index(spark, index_dir, keep_latest=1)
+    stats = compact_ann_index(spark, index_dir)
     assert stats["folded_batches"] == [0, 1]
     # the SAME pre-built plan, collected after the fold deleted its files
     after = sorted(
@@ -848,8 +841,8 @@ def test_generic_compaction_exact_dedup_store(spark, sf_dir, tmp_path):
 
     ids0, hashes0 = kept_ids(), stored_hashes()
     files_before = _parquet_files(out) + _parquet_files(hash_store)
-    s1 = compact_batch_store(spark, out, keep_latest=1, target_files=1)
-    s2 = compact_batch_store(spark, hash_store, keep_latest=1, target_files=1)
+    s1 = compact_batch_store(spark, out, target_files=1)
+    s2 = compact_batch_store(spark, hash_store, target_files=1)
     assert s1["folded_batches"] == [0, 1] and s2["folded_batches"] == [0, 1]
     # (a) store equality
     assert kept_ids() == ids0 and stored_hashes() == hashes0
@@ -888,7 +881,7 @@ def test_generic_compaction_exact_dedup_store(spark, sf_dir, tmp_path):
         .parquet(hash_store)
     )
     assert spark.read.parquet(hash_store).count() == n_total + n_dup
-    compact_batch_store(spark, hash_store, keep_latest=1, target_files=1)
+    compact_batch_store(spark, hash_store, target_files=1)
     assert spark.read.parquet(hash_store).count() == n_total
     import hashlib
 
@@ -929,8 +922,8 @@ def test_generic_compaction_minhash_store(spark, sf_dir, tmp_path):
     pairs0 = pair_set()
     assert pairs0  # the corpus has near-dups by construction (TESTDATA)
     files_before = _parquet_files(sig_store)
-    compact_batch_store(spark, sig_store, keep_latest=1, target_files=1)
-    compact_batch_store(spark, pairs, keep_latest=1, target_files=1)
+    compact_batch_store(spark, sig_store, target_files=1)
+    compact_batch_store(spark, pairs, target_files=1)
     assert pair_set() == pairs0
     assert _parquet_files(sig_store) < files_before
     # a post-compaction batch carrying an exact clone of an early doc must
@@ -982,7 +975,7 @@ def test_generic_compaction_dsir_score_store(spark, sf_dir, tmp_path):
 
     w0 = weights()
     files_before = _parquet_files(out)
-    stats = compact_batch_store(spark, out, keep_latest=1, target_files=1)
+    stats = compact_batch_store(spark, out, target_files=1)
     assert stats["folded_batches"] == [0, 1]
     assert weights() == w0 and _parquet_files(out) < files_before
 
@@ -1010,7 +1003,7 @@ def test_batch_store_compact_operator(spark, sf_dir, tmp_path):
     piped = spark.range(3)
     out = make_operator(
         "batch_store_compact",
-        {"store_dir": store, "keep_latest": 1, "target_files": 1},
+        {"store_dir": store, "target_files": 1},
     )(piped)
     assert out.count() == 3  # passthrough
     after = spark.read.option("mergeSchema", "true").parquet(store)
@@ -1067,8 +1060,8 @@ def test_generic_compaction_paragraph_store(spark, sf_dir, tmp_path):
 
     before = state()
     n_files = _parquet_files(out) + _parquet_files(hash_store)
-    s1 = compact_batch_store(spark, out, keep_latest=1, target_files=1)
-    s2 = compact_batch_store(spark, hash_store, keep_latest=1, target_files=1)
+    s1 = compact_batch_store(spark, out, target_files=1)
+    s2 = compact_batch_store(spark, hash_store, target_files=1)
     assert s1["folded_batches"] == [0, 1] and s2["folded_batches"] == [0, 1]
     assert state() == before
     assert _parquet_files(out) + _parquet_files(hash_store) < n_files
@@ -1124,8 +1117,8 @@ def test_generic_compaction_media_store(spark, sf_dir, tmp_path):
 
     ids0 = kept()
     n_files = _parquet_files(out) + _parquet_files(sig_store)
-    s1 = compact_batch_store(spark, out, keep_latest=1, target_files=1)
-    s2 = compact_batch_store(spark, sig_store, keep_latest=1, target_files=1)
+    s1 = compact_batch_store(spark, out, target_files=1)
+    s2 = compact_batch_store(spark, sig_store, target_files=1)
     assert s1["folded_batches"] == [0, 1] and s2["folded_batches"] == [0, 1]
     assert kept() == ids0
     assert _parquet_files(out) + _parquet_files(sig_store) < n_files
@@ -2095,3 +2088,160 @@ def test_attribution_reserved_eval_id_columns_rejected(spark, sf_dir, tmp_path):
             make_attribution_batch_processor(
                 spark, grams_dir, str(tmp_path / f"out_{bad}"), None, 2, n=5
             )
+
+
+def _persistent_rdd_ids(spark) -> set:
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def test_minhash_processor_releases_signatures_when_a_write_fails(
+    spark, sf_dir, tmp_path
+):
+    """The batch's persisted signatures are released even when a store
+    write raises: a failed batch must not pin its cache for the life of
+    the stream. The pairs write fails here (its directory is an existing
+    regular file)."""
+    from tuktu_spark.streaming.llm import make_minhash_batch_processor
+
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") < 20)
+    )
+    pairs = tmp_path / "pairs"
+    pairs.write_text("not a directory")
+    proc = make_minhash_batch_processor(spark, str(tmp_path / "store"), str(pairs))
+    before = _persistent_rdd_ids(spark)
+    with pytest.raises(Exception):
+        proc(docs, 0)
+    assert _persistent_rdd_ids(spark) == before
+
+
+def _store_case(spark, sf_dir, tmp_path, kind):
+    """(processor, store directories, batch 0, batch 1) for one store."""
+    import os
+
+    from tuktu_spark.streaming import llm as L
+
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") < 24)
+    )
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    if kind in ("exact", "paragraph"):
+        make = {
+            "exact": (L.make_exact_dedup_batch_processor, "content_md5"),
+            "paragraph": (L.make_paragraph_dedup_batch_processor, "paragraph_md5"),
+        }
+        fn, state = make[kind]
+        proc, dirs = fn(spark, store, out), [out, os.path.join(store, state)]
+    elif kind == "media":
+        from tuktu_spark.llm.multimodal import make_png
+
+        # batch 1 (odd ids) brings one new image and one seen in batch 0
+        dx = [3, 101, 253, 3]
+        docs = spark.createDataFrame(
+            [(i, make_png(6, 5, gradient=(40, dx[i % 4], 7))) for i in range(8)],
+            "doc_id long, media binary",
+        )
+        proc = L.make_media_dedup_batch_processor(spark, store, out)
+        dirs = [out, os.path.join(store, "media_sigs")]
+    elif kind == "lm":
+        from tuktu_spark.llm.ngram_lm import train_ngram_lm
+
+        docs = docs.select("doc_id", F.split("text", " ").alias("tokens"))
+        lm = train_ngram_lm(docs, n=2, min_count=1)
+        proc, dirs = L.make_lm_score_batch_processor(spark, lm, out), [out]
+    elif kind == "dsir":
+        from tuktu_spark.llm.dsir import hashed_ngram_features, train_dsir_llr
+
+        docs = docs.select("doc_id", F.split("text", " ").alias("tokens"))
+        feats = hashed_ngram_features(docs, buckets=64)
+        llr = train_dsir_llr(
+            feats.filter(F.col("doc_id") % 2 == 0), feats, buckets=64
+        )
+        proc = L.make_dsir_weight_batch_processor(spark, llr, out, buckets=64)
+        dirs = [out]
+    elif kind == "classify":
+        from tuktu_spark.llm.multimodal import make_png
+        from tuktu_spark.ml.deeplearn import _default_embedder
+
+        docs = spark.createDataFrame(
+            [(i, make_png(8, 8, shade=10 + 33 * i)) for i in range(8)],
+            "doc_id long, media binary",
+        )
+        cents = {
+            f"shade{s}": _default_embedder(make_png(8, 8, shade=s))
+            for s in (10, 240)
+        }
+        proc = L.make_classify_batch_processor(
+            spark, out, cents, _default_embedder
+        )
+        dirs = [out]
+    else:  # decontamination report
+        from tuktu_spark.llm.decontaminate import write_eval_gram_table
+
+        grams = str(tmp_path / "grams")
+        write_eval_gram_table(docs.filter(F.col("doc_id") % 5 == 0), grams, n=5)
+        proc = L.make_decontaminate_batch_processor(spark, grams, out, n=5)
+        dirs = [out]
+    return (
+        proc, dirs,
+        docs.filter(F.col("doc_id") % 2 == 0), docs.filter(F.col("doc_id") % 2 == 1),
+    )
+
+
+@pytest.mark.parametrize(
+    "kind",
+    ["exact", "paragraph", "media", "lm", "dsir", "classify", "report"],
+)
+def test_store_replay_and_empty_batch(spark, sf_dir, tmp_path, kind):
+    """The micro-batch store contract, per store: processing batch k a
+    second time leaves every directory of the store with the same rows
+    (a commit-last store skips it, an overwrite store rewrites its own
+    partition), and an empty batch writes no partition."""
+    import os
+
+    proc, dirs, b0, b1 = _store_case(spark, sf_dir, tmp_path, kind)
+
+    def rows():
+        return [
+            sorted(map(repr, spark.read.parquet(d).collect())) for d in dirs
+        ]
+
+    try:
+        proc(b0, 0)
+        proc(b1, 1)
+        first = rows()
+        assert all(os.path.exists(os.path.join(d, "batch_id=1")) for d in dirs)
+        proc(b1, 1)
+        proc(b1.limit(0), 2)
+        assert rows() == first
+        assert not any(os.path.exists(os.path.join(d, "batch_id=2")) for d in dirs)
+    finally:
+        getattr(proc, "unpersist_eval", lambda: None)()
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "dedup_ingest_batch", "ann_ingest_batch", "decontaminate_ingest_batch",
+        "ann_index_compact", "batch_store_compact",
+    ],
+)
+@pytest.mark.parametrize("key", ["keep_latest", "compact_label"])
+def test_store_ops_removed_compaction_keys_fail_loudly(spark, op, key):
+    from tuktu_spark.flow.compiler import compile_flow
+
+    flow = {
+        "generators": [{
+            "id": "g", "name": "inline",
+            "config": {"rows": [[1]], "columns": ["doc_id"]},
+            "next": ["s"],
+        }],
+        "processors": [{"id": "s", "name": op, "config": {key: 1}, "next": []}],
+    }
+    with pytest.raises(ValueError, match=f"'{op}'.*'{key}'") as info:
+        compile_flow(spark, flow)
+    assert f"node s ({op})" in info.value.__notes__

@@ -474,6 +474,26 @@ def _banded_buckets(sigs: DataFrame, id_col: str) -> DataFrame:
     )
 
 
+def _band_join(sig_a: DataFrame, sig_b: DataFrame, id_col: str) -> DataFrame:
+    """(id_a, id_b) — one row per LSH band bucket a doc of ``sig_a``
+    shares with a doc of ``sig_b``, not deduplicated: the banded join of
+    the batch-vs-corpus pipeline and of the streaming MinHash store
+    (within a micro-batch and against the stored signatures). Sentinel
+    signatures are filtered as in minhash_lsh_candidates."""
+
+    def side(sigs: DataFrame, out_id: str) -> DataFrame:
+        sigs = sigs.filter(F.col("signature")[0] != MERSENNE_P)
+        return _banded_buckets(sigs, id_col).select(
+            F.col(id_col).alias(out_id), "band", "bucket"
+        )
+
+    return (
+        side(sig_a, "id_a")
+        .join(side(sig_b, "id_b"), ["band", "bucket"])
+        .select("id_a", "id_b")
+    )
+
+
 def minhash_lsh_candidates(
     sigs: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
@@ -762,31 +782,7 @@ def minhash_batch_vs_corpus_pairs(
     sig_b = persist(minhash_signatures_from_hashed(hb, id_col))
     sig_c = minhash_signatures_from_hashed(hc, id_col)
 
-    def banded(sigs: DataFrame, out_id: str) -> DataFrame:
-        sigs = sigs.filter(F.col("signature")[0] != MERSENNE_P)
-        bands = F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.slice(
-                            "signature", b * ROWS_PER_BAND + 1, ROWS_PER_BAND
-                        ).alias("bucket"),
-                    )
-                    for b in range(BANDS)
-                ]
-            )
-        )
-        return sigs.select(F.col(id_col).alias(out_id), bands.alias("bb")).select(
-            out_id, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-        )
-
-    cands = (
-        banded(sig_b, "id_a")
-        .join(banded(sig_c, "id_b"), ["band", "bucket"])
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    cands = _band_join(sig_b, sig_c, id_col).distinct()
     return _verify_jaccard_pairs(cands, hb, hc, id_col, threshold)
 
 

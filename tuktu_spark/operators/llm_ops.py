@@ -842,11 +842,10 @@ def decontaminate_ingest_batch(config: dict):
     beyond-broadcast regime; without it the stored table is cached +
     broadcast-hinted for the batch and released right after (each flow
     node is self-contained; a long-lived stream keeps the cache and
-    exposes unpersist_eval instead). ``compact_every``/``keep_latest``
-    fold the store in-flow exactly as the other ingest ops. config:
-    {eval_grams_dir, out_dir, batch_id, where, mode, max_frac,
-    threshold, n, normalize, bloom_path, text_field, id_field,
-    compact_every, keep_latest}."""
+    exposes unpersist_eval instead). ``compact_every`` folds the store
+    in-flow exactly as the other ingest ops. config: {eval_grams_dir,
+    out_dir, batch_id, where, mode, max_frac, threshold, n, normalize,
+    bloom_path, text_field, id_field, compact_every}."""
     from ..streaming.llm import (
         auto_compacting,
         make_attribution_batch_processor,
@@ -856,6 +855,9 @@ def decontaminate_ingest_batch(config: dict):
         make_fuzzy_decontaminate_batch_processor,
     )
 
+    reject_removed_keys(
+        "decontaminate_ingest_batch", config, "keep_latest", "compact_label"
+    )
     mode = config.get("mode", "report")
     if mode not in ("report", "spans", "policy", "attribution", "fuzzy"):
         raise ValueError(
@@ -922,7 +924,6 @@ def decontaminate_ingest_batch(config: dict):
         proc = auto_compacting(
             proc, df.sparkSession, [(config["out_dir"], ())],
             config.get("compact_every"),
-            keep_latest=int(config.get("keep_latest", 1)),
         )
         batch = df.filter(config["where"]) if config.get("where") else df
         try:
@@ -943,11 +944,12 @@ def ann_ingest_batch(config: dict):
     make_ann_ingest_batch_processor). Passthrough: returns the input so
     a flow can chain. ``compact_every`` (r10, verdict #8) folds the
     (batch_id, list_id) index after every Nth committed batch via
-    auto_compacting — the in-flow form of ann_index_compact;
-    ``keep_latest`` >= 1 preserves replay safety. config: {index_dir,
-    centroids: [[...]], batch_id, id_field, vec_field, compact_every,
-    keep_latest}."""
+    auto_compacting — the in-flow form of ann_index_compact. config:
+    {index_dir, centroids: [[...]], batch_id, id_field, vec_field,
+    compact_every}."""
     from ..streaming.llm import auto_compacting, make_ann_ingest_batch_processor
+
+    reject_removed_keys("ann_ingest_batch", config, "keep_latest", "compact_label")
 
     def transform(df: DataFrame) -> DataFrame:
         proc = make_ann_ingest_batch_processor(
@@ -961,7 +963,6 @@ def ann_ingest_batch(config: dict):
             proc, df.sparkSession,
             [(config["index_dir"], ("list_id",))],
             config.get("compact_every"),
-            keep_latest=int(config.get("keep_latest", 1)),
         )
         proc(df, int(config.get("batch_id", 0)))
         return df
@@ -998,16 +999,13 @@ def ann_index_compact(config: dict):
     into the compacted partition (streaming/llm.compact_ann_index — the
     small-files maintenance stage for long-running ingestion flows).
     Passthrough: the piped DataFrame flows on unchanged. config:
-    {index_dir, keep_latest, compact_label}."""
+    {index_dir}."""
     from ..streaming.llm import compact_ann_index
 
+    reject_removed_keys("ann_index_compact", config, "keep_latest", "compact_label")
+
     def transform(df: DataFrame) -> DataFrame:
-        compact_ann_index(
-            df.sparkSession,
-            config["index_dir"],
-            int(config.get("keep_latest", 1)),
-            int(config.get("compact_label", -1)),
-        )
+        compact_ann_index(df.sparkSession, config["index_dir"])
         return df
 
     return transform
@@ -1028,13 +1026,13 @@ def dedup_ingest_batch(config: dict):
     auto_compacting: both store directories fold themselves after every
     Nth committed batch — the flow-level expression of in-stream
     small-files maintenance, no explicit batch_store_compact node
-    needed; ``keep_latest`` (default 1, must stay >= 1 for replay
-    safety) bounds how many newest real batches stay un-folded. config:
-    {store_dir, out_dir, batch_id, where, text_field, id_field,
-    compact_every, keep_latest}."""
+    needed. config: {store_dir, out_dir, batch_id, where, text_field,
+    id_field, compact_every}."""
     import os
 
     from ..streaming.llm import auto_compacting, make_exact_dedup_batch_processor
+
+    reject_removed_keys("dedup_ingest_batch", config, "keep_latest", "compact_label")
 
     def transform(df: DataFrame) -> DataFrame:
         proc = make_exact_dedup_batch_processor(
@@ -1051,7 +1049,6 @@ def dedup_ingest_batch(config: dict):
                 (os.path.join(config["store_dir"], "content_md5"), ()),
             ],
             config.get("compact_every"),
-            keep_latest=int(config.get("keep_latest", 1)),
         )
         batch = df.filter(config["where"]) if config.get("where") else df
         proc(batch, int(config.get("batch_id", 0)))
@@ -1066,16 +1063,16 @@ def batch_store_compact(config: dict):
     streaming store (dedup hash stores, kept-doc outputs, score stores;
     streaming/llm.compact_batch_store — r9 generalization of
     ann_index_compact) into the compacted partition. Passthrough: the
-    piped DataFrame flows on unchanged. config: {store_dir, keep_latest,
-    compact_label, partition_cols, target_files}."""
+    piped DataFrame flows on unchanged. config: {store_dir,
+    partition_cols, target_files}."""
     from ..streaming.llm import compact_batch_store
+
+    reject_removed_keys("batch_store_compact", config, "keep_latest", "compact_label")
 
     def transform(df: DataFrame) -> DataFrame:
         compact_batch_store(
             df.sparkSession,
             config["store_dir"],
-            keep_latest=int(config.get("keep_latest", 1)),
-            compact_label=int(config.get("compact_label", -1)),
             extra_partition_cols=tuple(config.get("partition_cols", ())),
             target_files=(
                 int(config["target_files"])

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import tables
 from ..llm import multimodal as MM
 from ..tables import load_table
 from . import query
@@ -2924,58 +2925,56 @@ def multimodal_cdc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents", parallel=True).select("doc_id")
     media = docs.select("doc_id", synth_udf(F.col("doc_id")).alias("media"))
-    chunks = cdc_chunk_table(media, "doc_id", "media").persist()
-    try:
-        w = Window.partitionBy("id").orderBy("chunk_idx")
-        tiled = chunks.withColumn(
-            "__contig",
-            F.col("offset")
-            == F.coalesce(
-                F.lag(F.col("offset") + F.col("length")).over(w), F.lit(0)
-            ),
-        )
-        per_doc = tiled.groupBy("id").agg(
-            F.min("__contig").alias("tiled"),
-            F.md5(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("chunk_idx", "chunk_md5"))
-                        ),
-                        lambda c: c["chunk_md5"],
+    chunks = tables.persist(cdc_chunk_table(media, "doc_id", "media"))
+    w = Window.partitionBy("id").orderBy("chunk_idx")
+    tiled = chunks.withColumn(
+        "__contig",
+        F.col("offset")
+        == F.coalesce(
+            F.lag(F.col("offset") + F.col("length")).over(w), F.lit(0)
+        ),
+    )
+    per_doc = tiled.groupBy("id").agg(
+        F.min("__contig").alias("tiled"),
+        F.md5(
+            F.array_join(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(F.struct("chunk_idx", "chunk_md5"))
                     ),
-                    ",",
-                )
-            ).alias("seq_md5"),
-            F.sum("length").alias("blob_bytes"),
-        )
-        per_group = per_doc.withColumn("grp", F.pmod("id", F.lit(25)).cast("int"))
-        grp_stats = per_group.groupBy("grp").agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.countDistinct("seq_md5").alias("n_seqs"),
-            F.min("tiled").alias("tiled_ok"),
-            F.sum("blob_bytes").alias("total_bytes"),
-        )
-        # chunk-level dedup accounting per group: identical members mean
-        # unique bytes x members == total bytes, exactly
-        uniq = (
-            chunks.withColumn("grp", F.pmod("id", F.lit(25)).cast("int"))
-            .groupBy("grp", "chunk_md5")
-            .agg(F.max("length").alias("length"))
-            .groupBy("grp")
-            .agg(F.sum("length").alias("unique_bytes"))
-        )
-        out = grp_stats.join(uniq, "grp").select(
-            "grp",
-            "n_members",
-            "n_seqs",
-            "tiled_ok",
-            (
-                F.col("total_bytes")
-                == F.col("unique_bytes") * F.col("n_members")
-            ).alias("dedup_exact_ok"),
-        )
-        out = out.localCheckpoint()
-    finally:
-        chunks.unpersist()
+                    lambda c: c["chunk_md5"],
+                ),
+                ",",
+            )
+        ).alias("seq_md5"),
+        F.sum("length").alias("blob_bytes"),
+    )
+    per_group = per_doc.withColumn("grp", F.pmod("id", F.lit(25)).cast("int"))
+    grp_stats = per_group.groupBy("grp").agg(
+        F.count(F.lit(1)).alias("n_members"),
+        F.countDistinct("seq_md5").alias("n_seqs"),
+        F.min("tiled").alias("tiled_ok"),
+        F.sum("blob_bytes").alias("total_bytes"),
+    )
+    # chunk-level dedup accounting per group: identical members mean
+    # unique bytes x members == total bytes, exactly
+    uniq = (
+        chunks.withColumn("grp", F.pmod("id", F.lit(25)).cast("int"))
+        .groupBy("grp", "chunk_md5")
+        .agg(F.max("length").alias("length"))
+        .groupBy("grp")
+        .agg(F.sum("length").alias("unique_bytes"))
+    )
+    out = grp_stats.join(uniq, "grp").select(
+        "grp",
+        "n_members",
+        "n_seqs",
+        "tiled_ok",
+        (
+            F.col("total_bytes")
+            == F.col("unique_bytes") * F.col("n_members")
+        ).alias("dedup_exact_ok"),
+    )
+    out = tables.checkpoint(out)
+    tables.unpersist(chunks)
     return out

@@ -535,7 +535,7 @@ def streaming_ann_compact_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     before = n_parquet_files()
-    stats = compact_ann_index(spark, index_dir, keep_latest=1)
+    stats = compact_ann_index(spark, index_dir)
     assert stats["folded_batches"], stats  # the replay produced >= 2 batches
     assert n_parquet_files() < before, (before, n_parquet_files())
     queries = emb.filter(F.col("vec_id") < _ANN_INGEST_QUERIES)
@@ -598,10 +598,8 @@ def streaming_dedup_compact_replay(spark: SparkSession, sf_dir: str) -> DataFram
         )
 
     before = n_parquet_files()
-    s_out = compact_batch_store(spark, out_dir, keep_latest=1, target_files=1)
-    s_hash = compact_batch_store(
-        spark, hash_store, keep_latest=1, target_files=1
-    )
+    s_out = compact_batch_store(spark, out_dir, target_files=1)
+    s_hash = compact_batch_store(spark, hash_store, target_files=1)
     assert s_out["folded_batches"] and s_hash["folded_batches"], (s_out, s_hash)
     assert n_parquet_files() < before, (before, n_parquet_files())
     # continued ingestion against the compacted store: clones of already

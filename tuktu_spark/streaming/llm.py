@@ -1,26 +1,36 @@
-"""Streaming LLM-pipeline operators: incremental near-duplicate detection
-over a continuously-arriving corpus.
+"""Streaming micro-batch stores: the LLM-pipeline operators a stream runs
+through ``foreachBatch`` — incremental MinHash, exact, paragraph and media
+dedup; frozen-model LM, DSIR and classification scoring; frozen-eval-table
+decontamination; ANN-index ingest. Each writes parquet stores under one
+contract, implemented once by the helpers below:
 
-Batch dedup (llm/dedup.py) assumes the whole corpus is present; a training
--data ingest pipeline sees documents arrive. ``streaming_minhash_candidates``
-runs the same MinHash+LSH banding incrementally via foreachBatch:
+- ``batch_id`` is the outermost partition column of every store
+  (``partitionBy("batch_id", *extra)``), written by ``_write_batch``;
+- writes use dynamic partition overwrite, so a batch only ever replaces
+  its own partitions;
+- an empty micro-batch writes nothing (``_per_batch``);
+- a dedup store keeps its state (signatures, content or paragraph hashes)
+  in a directory that commits LAST: a stored ``batch_id`` there proves
+  every write of that batch committed, so a replay of it is skipped
+  (``_commit_last``); a stateless store (scores, labels, decontamination
+  outputs, the ANN index) overwrites its own partition with the same rows
+  on a replay;
+- ``src_batch`` is a data column recording the origin epoch, stamped by
+  the decontamination stores and the ANN index; compaction stamps it for
+  the rest, so a crash-rerun copy stays distinguishable from a legitimate
+  cross-epoch duplicate after the partition is relabelled
+  (``compact_batch_store``);
+- every entry point starts its query through ``foreach_batch_sink``
+  (``_start``), optionally wrapped in ``auto_compacting``.
 
-- each micro-batch computes signatures (same deterministic hash family as
-  batch — a doc's signature is identical either way);
-- new docs band-join against BOTH the batch itself and the accumulated
-  signature store (parquet) — so pairs are found regardless of which
-  micro-batch each member arrived in;
-- new signatures and candidate pairs land in batch_id-partitioned parquet
-  with dynamic partition overwrite: a foreachBatch REPLAY rewrites its own
-  partition instead of appending duplicates, and signatures commit last so
-  a stored batch_id proves the whole batch committed (replays skip). The
-  store holds one row of NUM_HASHES ints per doc — tiny relative to the
-  corpus (the full text is never retained).
+Readers select named data columns and ignore ``batch_id``/``src_batch``.
 
-The candidate set is EXACTLY the batch LSH candidate set over the same
-corpus (banding is deterministic and order-independent — pinned by test).
-Verification (exact Jaccard) stays a batch job over candidates, as in the
-batch pipeline; signatures alone cannot verify exactly.
+The MinHash store emits EXACTLY the batch LSH candidate set over the same
+corpus (banding is deterministic and order-independent — pinned by test):
+new docs band-join against both the batch itself and the accumulated
+signature store, so a pair is found whichever micro-batch each member
+arrived in. The store holds one row of NUM_HASHES ints per doc, never the
+text; exact Jaccard verification stays a batch job over the candidates.
 """
 
 from __future__ import annotations
@@ -37,26 +47,88 @@ from .ops import foreach_batch_sink
 
 _LOG = logging.getLogger(__name__)
 
+# Compaction keeps the newest real batch un-folded (a crash-replay of it
+# must still find its own partition) and folds the older ones into one
+# partition labelled below every epoch id (epochs start at 0).
+KEEP_LATEST = 1
+COMPACT_LABEL = -1
 
-def _banded(sigs: DataFrame, id_col: str) -> DataFrame:
-    # Same degenerate-signature guard as batch (llm/dedup.py
-    # minhash_lsh_candidates): docs with an empty shingle set carry the
-    # untouched sentinel signature and would hot-bucket every band.
-    sigs = sigs.filter(F.col("signature")[0] != D.MERSENNE_P)
-    bands = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.slice("signature", b * D.ROWS_PER_BAND + 1, D.ROWS_PER_BAND).alias("bucket"),
-                )
-                for b in range(D.BANDS)
-            ]
-        )
+
+def _read_store(spark, path: str) -> DataFrame | None:
+    """The parquet store at ``path``, or None if it does not exist yet.
+    Only AnalysisException (path not found / empty directory) means 'no
+    store'; any other failure — permissions, a corrupt file, a transient
+    FS error — propagates so the engine retries the batch instead of
+    silently dropping every cross-batch match."""
+    from pyspark.errors.exceptions.captured import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException:
+        return None
+
+
+def _write_batch(
+    df: DataFrame,
+    path: str,
+    batch_id: int,
+    provenance: bool = False,
+    partition_cols: "tuple[str, ...]" = (),
+) -> None:
+    """Write ``df`` as the ``batch_id`` partition of the store at ``path``
+    with dynamic overwrite; ``provenance`` adds the ``src_batch`` column,
+    ``partition_cols`` further partition levels under ``batch_id``."""
+    df = df.withColumn("batch_id", F.lit(batch_id))
+    if provenance:
+        df = df.withColumn("src_batch", F.lit(batch_id))
+    (
+        df.write.mode("overwrite")
+        .options(partitionOverwriteMode="dynamic")
+        .partitionBy("batch_id", *partition_cols)
+        .parquet(path)
     )
-    return sigs.select(F.col(id_col), bands.alias("bb")).select(
-        id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
+
+
+def _per_batch(body):
+    """The foreachBatch processor running ``body(batch_df, batch_id)`` on
+    every non-empty micro-batch."""
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            body(batch_df, batch_id)
+
+    return process
+
+
+def _commit_last(spark, store: str):
+    """Decorator for the body of a store whose state directory ``store``
+    is written last: ``body(batch_df, batch_id, old)`` gets the state of
+    the earlier batches (None before the first), and a batch whose
+    ``batch_id`` is already in ``store`` has committed and is skipped."""
+
+    def deco(body):
+        def process(batch_df: DataFrame, batch_id: int) -> None:
+            old = _read_store(spark, store)
+            if old is not None and "batch_id" in old.columns:
+                if old.filter(F.col("batch_id") == batch_id).limit(1).count() > 0:
+                    return
+                old = old.drop("batch_id")
+            body(batch_df, batch_id, old)
+
+        return _per_batch(process)
+
+    return deco
+
+
+def _start(stream: DataFrame, process, checkpoint: str, dirs, compact_every):
+    """Start a store's query: ``process`` wrapped in auto_compacting over
+    ``dirs`` and run by foreach_batch_sink. The query carries the
+    processor's ``unpersist_eval`` release handle when it has one."""
+    process = auto_compacting(process, stream.sparkSession, dirs, compact_every)
+    query = foreach_batch_sink(stream, process, checkpoint=checkpoint)
+    if hasattr(process, "unpersist_eval"):
+        query.unpersist_eval = process.unpersist_eval
+    return query
 
 
 def streaming_minhash_candidates(
@@ -71,22 +143,17 @@ def streaming_minhash_candidates(
 ):
     """Start a streaming query emitting LSH candidate pairs incrementally.
     Returns the StreamingQuery; results land in ``pairs_dir`` (parquet,
-    columns id_a/id_b plus a ``batch_id`` partition column recording which
-    micro-batch emitted the pair), signatures accumulate in ``store_dir``
-    (signature columns plus the same ``batch_id`` partition column).
-    Consumers reading either directory should ignore/drop ``batch_id``;
-    it exists for idempotent replay (dynamic partition overwrite).
+    columns id_a/id_b), signatures accumulate in ``store_dir``.
     ``compact_every`` folds both directories every N batches (see
     auto_compacting)."""
     process = make_minhash_batch_processor(
         stream.sparkSession, store_dir, pairs_dir, text_col, id_col, n
     )
-    process = auto_compacting(
-        process, stream.sparkSession,
+    return _start(
+        stream, process, checkpoint,
         [(os.path.join(store_dir, "signatures"), ()), (pairs_dir, ())],
         compact_every,
     )
-    return foreach_batch_sink(stream, process, checkpoint=checkpoint)
 
 
 def make_minhash_batch_processor(
@@ -98,81 +165,36 @@ def make_minhash_batch_processor(
     n: int = 3,
 ):
     """The foreachBatch body, exposed for direct testing (idempotency under
-    batch replay is part of the contract)."""
+    batch replay is part of the contract). The signature store commits
+    last."""
     sig_store = os.path.join(store_dir, "signatures")
 
-    def _read_store() -> DataFrame | None:
-        """Signature store, or None if it doesn't exist yet (first batch).
-        Only AnalysisException (path-not-found / empty dir) means 'no store';
-        any other failure — permissions, corrupt file, transient FS error —
-        must PROPAGATE so the engine retries the batch instead of silently
-        dropping every cross-batch candidate pair."""
-        from pyspark.errors.exceptions.captured import AnalysisException
-
-        try:
-            return spark.read.parquet(sig_store)
-        except AnalysisException:
-            return None
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        old = _read_store()
-        if old is not None and "batch_id" in old.columns:
-            # Idempotence: signatures are written LAST, so a stored batch_id
-            # proves both writes committed — a foreachBatch replay skips.
-            if old.filter(F.col("batch_id") == batch_id).limit(1).count() > 0:
-                return
-            old = old.drop("batch_id")
+    @_commit_last(spark, sig_store)
+    def process(batch_df: DataFrame, batch_id: int, old) -> None:
         sigs = D.minhash_signatures(batch_df, text_col, id_col, n).persist()
-        new_b = _banded(sigs, id_col)
-        # pairs inside this micro-batch
-        a = new_b.select(F.col(id_col).alias("id_a"), "band", "bucket")
-        b = new_b.select(F.col(id_col).alias("id_b"), "band", "bucket")
-        within = (
-            a.join(b, ["band", "bucket"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-        )
-        if old is not None:
-            # pairs against everything seen before; id_a != id_b guards
-            # self-pairs if a doc id ever recurs across batches
-            old_b = _banded(old, id_col)
-            across = (
-                new_b.select(F.col(id_col).alias("id_a"), "band", "bucket")
-                .join(
-                    old_b.select(F.col(id_col).alias("id_b"), "band", "bucket"),
-                    ["band", "bucket"],
-                )
-                .filter(F.col("id_a") != F.col("id_b"))
-                .select(
-                    F.least("id_a", "id_b").alias("id_a"),
-                    F.greatest("id_a", "id_b").alias("id_b"),
-                )
+        try:
+            # pairs inside this micro-batch, deduplicated once by the
+            # write's distinct (minhash_lsh_candidates' own distinct would
+            # add a shuffle job per batch)
+            pairs = D._band_join(sigs, sigs, id_col).filter(
+                F.col("id_a") < F.col("id_b")
             )
-            pairs = within.unionByName(across)
-        else:
-            pairs = within
-        # Partition both outputs by batch_id with dynamic overwrite: a
-        # replayed batch rewrites ITS OWN partition instead of appending
-        # duplicates — exactly-once output without a transactional sink.
-        dyn = {"partitionOverwriteMode": "dynamic"}
-        (
-            pairs.distinct()
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .options(**dyn)
-            .partitionBy("batch_id")
-            .parquet(pairs_dir)
-        )
-        (
-            sigs.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .options(**dyn)
-            .partitionBy("batch_id")
-            .parquet(sig_store)
-        )
-        sigs.unpersist()
+            if old is not None:
+                # pairs against everything seen before; id_a != id_b guards
+                # self-pairs if a doc id ever recurs across batches
+                across = (
+                    D._band_join(sigs, old, id_col)
+                    .filter(F.col("id_a") != F.col("id_b"))
+                    .select(
+                        F.least("id_a", "id_b").alias("id_a"),
+                        F.greatest("id_a", "id_b").alias("id_b"),
+                    )
+                )
+                pairs = pairs.unionByName(across)
+            _write_batch(pairs.distinct(), pairs_dir, batch_id)
+            _write_batch(sigs, sig_store, batch_id)
+        finally:
+            sigs.unpersist()
 
     return process
 
@@ -182,7 +204,6 @@ def auto_compacting(
     spark,
     dirs: "list[tuple[str, tuple[str, ...]]]",
     compact_every: int | None,
-    keep_latest: int = 1,
 ):
     """Wrap a foreachBatch processor with periodic store compaction (r9):
     after every ``compact_every``-th committed batch, each listed
@@ -192,13 +213,13 @@ def auto_compacting(
     processor unchanged.
 
     Replay safety: compaction runs AFTER the processor committed the
-    batch, and keep_latest >= 1 keeps that newest batch partition real,
-    so a crash-replay of the last batch still finds its own partition
-    (dedup stores' skip check) or dynamically overwrites it (ANN). A
-    crash BETWEEN the compacted write and the folded-directory delete
-    leaves duplicates that the NEXT compaction's full-row dropDuplicates
-    removes — the same write-before-delete convergence contract as a
-    manual fold, stretched across one compaction interval.
+    batch and keeps that newest batch partition real, so a crash-replay
+    of the last batch still finds its own partition (dedup stores' skip
+    check) or dynamically overwrites it (ANN). A crash BETWEEN the
+    compacted write and the folded-directory delete leaves duplicates
+    that the NEXT compaction's full-row dropDuplicates removes — the same
+    write-before-delete convergence contract as a manual fold, stretched
+    across one compaction interval.
 
     The wrapped processor keeps the inner processor's attributes
     (functools.wraps copies __dict__) — r11 advice: the decontamination
@@ -207,8 +228,6 @@ def auto_compacting(
     drop it, pinning the cache for the session lifetime."""
     if not compact_every:
         return process
-    if keep_latest < 1:
-        raise ValueError("auto_compacting requires keep_latest >= 1")
     every = int(compact_every)
 
     @functools.wraps(process)
@@ -236,10 +255,7 @@ def auto_compacting(
                     d, batch_id,
                 )
                 continue
-            compact_batch_store(
-                spark, d, keep_latest=keep_latest,
-                extra_partition_cols=tuple(extra),
-            )
+            compact_batch_store(spark, d, extra_partition_cols=tuple(extra))
 
     return wrapped
 
@@ -302,19 +318,17 @@ def streaming_exact_dedup(
 
     The accumulated state is one md5 per distinct content — far smaller
     than the corpus and unbounded-watermark-free by design (content
-    equality has no event-time horizon). Same idempotency contract as the
-    MinHash store: batch_id-partitioned dynamic overwrite, hash store
-    commits last, replays skip. ``compact_every`` folds both directories
-    every N batches (see auto_compacting)."""
+    equality has no event-time horizon). The hash store commits last.
+    ``compact_every`` folds both directories every N batches (see
+    auto_compacting)."""
     process = make_exact_dedup_batch_processor(
         stream.sparkSession, store_dir, out_dir, text_col, id_col
     )
-    process = auto_compacting(
-        process, stream.sparkSession,
+    return _start(
+        stream, process, checkpoint,
         [(out_dir, ()), (os.path.join(store_dir, "content_md5"), ())],
         compact_every,
     )
-    return foreach_batch_sink(stream, process, checkpoint=checkpoint)
 
 
 def make_exact_dedup_batch_processor(
@@ -326,22 +340,8 @@ def make_exact_dedup_batch_processor(
 ):
     hash_store = os.path.join(store_dir, "content_md5")
 
-    def _read_store() -> DataFrame | None:
-        from pyspark.errors.exceptions.captured import AnalysisException
-
-        try:
-            return spark.read.parquet(hash_store)
-        except AnalysisException:
-            return None
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        old = _read_store()
-        if old is not None and "batch_id" in old.columns:
-            if old.filter(F.col("batch_id") == batch_id).limit(1).count() > 0:
-                return
-            old = old.drop("batch_id")
+    @_commit_last(spark, hash_store)
+    def process(batch_df: DataFrame, batch_id: int, old) -> None:
         hashed = batch_df.withColumn("__md5", F.md5(F.col(text_col)))
         # batch-internal canonical pick: min id per content
         w_min = hashed.groupBy("__md5").agg(F.min(id_col).alias("__keep"))
@@ -352,22 +352,9 @@ def make_exact_dedup_batch_processor(
             firsts = firsts.join(
                 old.select(F.col("content_md5").alias("__md5")), "__md5", "left_anti"
             )
-        dyn = {"partitionOverwriteMode": "dynamic"}
-        (
-            firsts.drop("__md5")
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .options(**dyn)
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-        (
-            firsts.select(F.col("__md5").alias("content_md5"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .options(**dyn)
-            .partitionBy("batch_id")
-            .parquet(hash_store)
+        _write_batch(firsts.drop("__md5"), out_dir, batch_id)
+        _write_batch(
+            firsts.select(F.col("__md5").alias("content_md5")), hash_store, batch_id
         )
 
     return process
@@ -393,22 +380,18 @@ def streaming_paragraph_dedup(
 
     State is one md5 per distinct paragraph — boilerplate-heavy corpora
     keep it far below corpus size, and content identity has no event-time
-    horizon so no watermark applies. Same idempotency contract as the
-    exact/minhash stores: batch_id-partitioned dynamic overwrite, the
-    hash store commits LAST so a stored batch_id proves the whole batch
-    committed, and replays skip. For an id-ordered replay of a static
-    corpus the output is pinned equal to batch
-    ``paragraph_dedup_rebuild`` (tests). ``compact_every`` folds both
-    directories every N batches (see auto_compacting)."""
+    horizon so no watermark applies. The hash store commits last. For an
+    id-ordered replay of a static corpus the output is pinned equal to
+    batch ``paragraph_dedup_rebuild`` (tests). ``compact_every`` folds
+    both directories every N batches (see auto_compacting)."""
     process = make_paragraph_dedup_batch_processor(
         stream.sparkSession, store_dir, out_dir, text_col, id_col, sep_regex, joiner
     )
-    process = auto_compacting(
-        process, stream.sparkSession,
+    return _start(
+        stream, process, checkpoint,
         [(out_dir, ()), (os.path.join(store_dir, "paragraph_md5"), ())],
         compact_every,
     )
-    return foreach_batch_sink(stream, process, checkpoint=checkpoint)
 
 
 def make_paragraph_dedup_batch_processor(
@@ -422,22 +405,8 @@ def make_paragraph_dedup_batch_processor(
 ):
     hash_store = os.path.join(store_dir, "paragraph_md5")
 
-    def _read_store() -> DataFrame | None:
-        from pyspark.errors.exceptions.captured import AnalysisException
-
-        try:
-            return spark.read.parquet(hash_store)
-        except AnalysisException:
-            return None
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        old = _read_store()
-        if old is not None and "batch_id" in old.columns:
-            if old.filter(F.col("batch_id") == batch_id).limit(1).count() > 0:
-                return
-            old = old.drop("batch_id")
+    @_commit_last(spark, hash_store)
+    def process(batch_df: DataFrame, batch_id: int, old) -> None:
         # within-batch first occurrence by (id, para_idx) — the batch rule
         marked = D.paragraph_dedup(batch_df, text_col, id_col, sep_regex)
         kept = marked.filter(F.col("keep")).withColumn("__pmd5", F.md5("para"))
@@ -448,23 +417,11 @@ def make_paragraph_dedup_batch_processor(
                 "left_anti",
             )
         rebuilt = kept.groupBy(id_col).agg(D._rebuild_text_agg(text_col, joiner))
-        dyn = {"partitionOverwriteMode": "dynamic"}
-        (
-            rebuilt.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .options(**dyn)
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        _write_batch(rebuilt, out_dir, batch_id)
         # kept paragraphs are distinct by construction (first occurrence
-        # within batch, anti-joined against the store) — commit LAST
-        (
-            kept.select(F.col("__pmd5").alias("paragraph_md5"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .options(**dyn)
-            .partitionBy("batch_id")
-            .parquet(hash_store)
+        # within batch, anti-joined against the store)
+        _write_batch(
+            kept.select(F.col("__pmd5").alias("paragraph_md5")), hash_store, batch_id
         )
 
     return process
@@ -473,12 +430,12 @@ def make_paragraph_dedup_batch_processor(
 # ---------------------------------------------------------------------------
 # Streaming LM scoring: score arriving micro-batches against a FROZEN
 # language model (the CCNet production shape — the LM never changes while
-# the corpus streams in). Stateless per batch given the model, so the
-# foreachBatch processor only needs batch_id idempotency; inside
-# foreachBatch each batch is a plain DataFrame, so the batch scorer (and
-# its window engine) applies unchanged. For a pure streaming plan (no
-# foreachBatch) use score_* with engine='array' — grams are built per-row
-# from the token array, no window function, stream-legal.
+# the corpus streams in). Stateless per batch given the model, so a replay
+# overwrites its own partition; inside foreachBatch each batch is a plain
+# DataFrame, so the batch scorer (and its window engine) applies
+# unchanged. For a pure streaming plan (no foreachBatch) use score_* with
+# engine='array' — grams are built per-row from the token array, no window
+# function, stream-legal.
 # ---------------------------------------------------------------------------
 
 
@@ -491,27 +448,17 @@ def make_lm_score_batch_processor(
     alpha: float = 0.4,
 ):
     """foreachBatch processor scoring each micro-batch with a frozen
-    NgramLM or ArpaLM (llm/ngram_lm.py) and appending per-doc scores to a
-    batch_id-partitioned parquet store (commit-last idempotency: a
-    re-delivered batch overwrites its own partition, same contract as the
-    dedup stores). Pinned equal to batch scoring on replay in tests."""
+    NgramLM or ArpaLM (llm/ngram_lm.py) into a score store. Pinned equal
+    to batch scoring on replay in tests."""
     from ..llm.ngram_lm import ArpaLM, score_arpa, score_ngram_lm
 
+    @_per_batch
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         if isinstance(lm, ArpaLM):
             scored = score_arpa(batch_df, lm, tokens_col, id_col)
         else:
             scored = score_ngram_lm(batch_df, lm, tokens_col, id_col, alpha=alpha)
-        dyn = {"partitionOverwriteMode": "dynamic"}
-        (
-            scored.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .options(**dyn)
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        _write_batch(scored, out_dir, batch_id)
 
     return process
 
@@ -531,15 +478,7 @@ def streaming_lm_score(
     proc = make_lm_score_batch_processor(
         stream_df.sparkSession, lm, out_dir, tokens_col, id_col
     )
-    proc = auto_compacting(
-        proc, stream_df.sparkSession, [(out_dir, ())], compact_every
-    )
-    return (
-        stream_df.writeStream.foreachBatch(proc)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream_df, proc, checkpoint_dir, [(out_dir, ())], compact_every)
 
 
 def make_dsir_weight_batch_processor(
@@ -553,26 +492,16 @@ def make_dsir_weight_batch_processor(
 ):
     """foreachBatch processor scoring each micro-batch's DSIR importance
     weights against a FROZEN llr table (llm/dsir.py — the model is fit
-    once offline, batches are weighted as they arrive) and appending to a
-    batch_id-partitioned parquet store (commit-last idempotency, same
-    contract as the dedup/LM stores). The featurization is the stream-
-    legal gram-array form (no window), and weights are exact BIGINT sums,
-    so streamed scores are bit-equal to batch scores (test-pinned)."""
+    once offline, batches are weighted as they arrive) into a score
+    store. The featurization is the stream-legal gram-array form (no
+    window), and weights are exact BIGINT sums, so streamed scores are
+    bit-equal to batch scores (test-pinned)."""
     from ..llm.dsir import dsir_weights, hashed_ngram_features
 
+    @_per_batch
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         feats = hashed_ngram_features(batch_df, tokens_col, id_col, buckets, max_n)
-        w = dsir_weights(feats, llr_table, id_col)
-        dyn = {"partitionOverwriteMode": "dynamic"}
-        (
-            w.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .options(**dyn)
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        _write_batch(dsir_weights(feats, llr_table, id_col), out_dir, batch_id)
 
     return process
 
@@ -595,15 +524,81 @@ def streaming_dsir_weights(
         stream_df.sparkSession, llr_table, out_dir, tokens_col, id_col,
         buckets, max_n,
     )
-    proc = auto_compacting(
-        proc, stream_df.sparkSession, [(out_dir, ())], compact_every
-    )
-    return (
-        stream_df.writeStream.foreachBatch(proc)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream_df, proc, checkpoint_dir, [(out_dir, ())], compact_every)
+
+
+# ---------------------------------------------------------------------------
+# Streaming decontamination against FROZEN eval-suite artifacts (r10 — the
+# daily-crawl shape: the eval suite is versioned and prebuilt ONCE via
+# llm/decontaminate.write_eval_gram_table + build_gram_bloom/
+# save_gram_bloom; batches are checked as they arrive, no per-batch eval
+# scan). A doc's grams all live in its own batch, so the union of
+# per-batch outputs EQUALS the batch operator over the whole replayed
+# corpus (pinned in tests and by the driver oracle). Every store here
+# stamps ``src_batch``.
+# ---------------------------------------------------------------------------
+
+
+def _eval_gram_table(
+    spark,
+    eval_grams_dir: str,
+    n: int,
+    normalize: bool,
+    bloom: "bytes | None",
+    bloom_k: int,
+    attributed: bool = False,
+    check=None,
+):
+    """The frozen eval gram table and its optional Bloom prefilter UDF, as
+    ``(table, might)``.
+
+    The stored table's (n, normalize, attributed) sidecar is validated
+    first: a mismatch means disjoint hash spaces and a silently empty
+    result, so it fails loudly here; ``check(table)`` validates further
+    before anything is cached. ``bloom=None`` is the small-table regime:
+    the table is cached here (r10 verdict #6: a long-running stream
+    otherwise re-scans the parquet every micro-batch; ``table.unpersist``
+    releases it) and the caller broadcast-hints it, so a micro-batch's
+    verify join never falls back to a shuffle. A bloom says the table is
+    beyond broadcast — too big to pin in executor memory — so it is
+    neither cached nor hinted (AQE sizes the join) and the map-side
+    prefilter, zero false negatives, cuts the join input instead. The
+    filter UDF is built once here, so the bitmap ships per executor
+    rather than re-pickled into every batch's task binary."""
+    from ..llm.decontaminate import bloom_might_contain_udf, check_eval_gram_meta
+
+    check_eval_gram_meta(spark, eval_grams_dir, n, normalize, attributed=attributed)
+    table = spark.read.parquet(eval_grams_dir)
+    if check is not None:
+        check(table)
+    might = bloom_might_contain_udf(bloom, bloom_k) if bloom else None
+    if might is None:
+        table = table.cache()
+    return table, might
+
+
+def _gram_count_processor(
+    table, might, out_dir, text_col, id_col, n, normalize, keys, count_col
+):
+    """Per micro-batch: gram the batch (one narrow scan), prefilter with
+    ``might``, exact-verify against ``table`` and write the distinct
+    matched-gram count per ``keys`` group."""
+    from ..llm.decontaminate import _gram_table
+
+    eval_grams = F.broadcast(table) if might is None else table
+
+    @_per_batch
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        grams = _gram_table(batch_df, text_col, id_col, n, "gram", normalize)
+        if might is not None:
+            grams = grams.filter(might(F.col("gram")))
+        counts = grams.join(eval_grams, "gram").groupBy(*keys).agg(
+            F.count_distinct("gram").alias(count_col)
+        )
+        _write_batch(counts, out_dir, batch_id, provenance=True)
+
+    process.unpersist_eval = table.unpersist
+    return process
 
 
 def make_decontaminate_batch_processor(
@@ -618,76 +613,19 @@ def make_decontaminate_batch_processor(
     normalize: bool = False,
 ):
     """foreachBatch processor producing each micro-batch's contamination
-    report against FROZEN eval-suite artifacts (r10 — the daily-crawl
-    shape: the eval suite is versioned and prebuilt ONCE via
-    llm/decontaminate.write_eval_gram_table + build_gram_bloom/
-    save_gram_bloom; batches are checked as they arrive, no per-batch
-    eval scan). Per batch: gram the batch (one narrow scan), optionally
-    Bloom-prefilter map-side (the fixed-size bitmap rides the closure —
-    zero false negatives, so the verify join sees every true hit), then
-    exact-verify survivors against the stored distinct gram-hash table
-    and write (doc_id, n_matched_grams) rows to a batch_id-partitioned
-    parquet store (dynamic-overwrite replay idempotency + src_batch
-    provenance, same contract as the LM/DSIR score stores).
-
-    Output equality: a doc's grams all live in its own batch, so the
-    union of per-batch reports EQUALS contamination_report over the
-    whole replayed corpus (pinned in tests and by the driver oracle).
-
-    ``bloom=None`` skips the prefilter (right when the eval gram table
-    is small enough that the extra map-side pass outweighs the join
-    savings); with a bloom the join side still reads the SAME stored
-    table, so correctness is sizing-independent. The stored table's
-    (n, normalize) sidecar is validated against this reader's settings
-    — a mismatch means disjoint hash spaces and a silently empty
-    report, so it fails loudly here instead.
-
-    No-bloom is by definition the small-table regime, so the stored
-    table is broadcast-hinted (mirroring the spans processor — r10
-    advice: without the hint each micro-batch's verify join can fall
-    back to a shuffle join, paying per-batch exchange cost) AND cached
-    at build (r10 verdict #6: a long-running stream otherwise re-scans
-    the parquet every micro-batch; ``process.unpersist_eval()`` releases
-    it when the stream stops). With a bloom the caller is saying the
-    table is beyond-broadcast — too big to pin in executor memory —
-    so it is deliberately NEITHER hinted nor cached there (AQE sizes
-    the join; the per-batch scan is the documented cost of that
-    regime)."""
-    from ..llm.decontaminate import (
-        _gram_table,
-        bloom_might_contain_udf,
-        check_eval_gram_meta,
+    report — (doc_id, n_matched_grams) rows — against a frozen
+    write_eval_gram_table artifact, optionally Bloom-prefiltered (see
+    _eval_gram_table for the two eval-side regimes; with a bloom the
+    verify join still reads the SAME stored table, so correctness is
+    sizing-independent). ``process.unpersist_eval()`` releases the
+    no-bloom regime's cached table when the stream stops."""
+    table, might = _eval_gram_table(
+        spark, eval_grams_dir, n, normalize, bloom, bloom_k
     )
-
-    check_eval_gram_meta(spark, eval_grams_dir, n, normalize, attributed=False)
-    eval_cached = spark.read.parquet(eval_grams_dir)
-    might = bloom_might_contain_udf(bloom, bloom_k) if bloom else None
-    if might is None:
-        eval_cached = eval_cached.cache()
-        eval_grams = F.broadcast(eval_cached)
-    else:
-        eval_grams = eval_cached
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        grams = _gram_table(batch_df, text_col, id_col, n, "gram", normalize)
-        if might is not None:
-            grams = grams.filter(might(F.col("gram")))
-        report = grams.join(eval_grams, "gram").groupBy(id_col).agg(
-            F.count_distinct("gram").alias("n_matched_grams")
-        )
-        (
-            report.withColumn("batch_id", F.lit(batch_id))
-            .withColumn("src_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .options(partitionOverwriteMode="dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-
-    process.unpersist_eval = eval_cached.unpersist
-    return process
+    return _gram_count_processor(
+        table, might, out_dir, text_col, id_col, n, normalize,
+        (id_col,), "n_matched_grams",
+    )
 
 
 def make_decontaminate_spans_batch_processor(
@@ -705,58 +643,33 @@ def make_decontaminate_spans_batch_processor(
     contaminated token spans cut out (llm/decontaminate's span
     machinery against the stored distinct gram-hash table — the
     surgical streaming form: keep the clean remainder of every doc
-    instead of only reporting). Rewritten docs land
-    batch_id-partitioned with the same replay/provenance contract as
-    the report store; docs that were wholly contamination are absent,
-    untouched docs pass through whitespace-normalized (the rewrite
-    contract). ``bloom``: optional prefilter for beyond-broadcast gram
-    tables, same contract (and same parameter position) as the report
-    processor — zero false negatives, intervals unchanged. The filter
-    UDF is built ONCE here so the bitmap ships per executor, not
-    re-pickled into every batch's task binary; without a bloom the
-    stored table is broadcast-hinted (passing one is the caller saying
-    the table is beyond-broadcast; AQE then sizes the join) and cached
-    at build so a long stream scans the parquet once, not per
-    micro-batch (r10 verdict #6; ``process.unpersist_eval()`` releases
-    it — with a bloom the beyond-broadcast table is deliberately left
-    uncached).
+    instead of only reporting). Docs that were wholly contamination are
+    absent, untouched docs pass through whitespace-normalized (the
+    rewrite contract). ``bloom``: optional prefilter for beyond-broadcast
+    gram tables, same contract (and same parameter position) as the
+    report processor — zero false negatives, intervals unchanged.
 
     ``normalize`` (r11): per-token-normalized matching — cut spans that
     leak the eval set through case/punctuation perturbation while still
     rewriting the batch's RAW tokens (contaminated_span_intervals'
     normalize path). The stored gram table must have been written with
-    the SAME normalize setting; the metadata sidecar check fails loudly
-    on a mismatch exactly as in the report processor."""
-    from ..llm.decontaminate import (
-        bloom_might_contain_udf,
-        check_eval_gram_meta,
-        contaminated_span_intervals,
-    )
+    the SAME normalize setting."""
+    from ..llm.decontaminate import contaminated_span_intervals
     from ..llm.dedup import remove_interval_tokens
 
-    check_eval_gram_meta(spark, eval_grams_dir, n, normalize=normalize, attributed=False)
-    eval_grams = spark.read.parquet(eval_grams_dir)
-    might = bloom_might_contain_udf(bloom, bloom_k) if bloom else None
-    if might is None:
-        eval_grams = eval_grams.cache()
+    eval_grams, might = _eval_gram_table(
+        spark, eval_grams_dir, n, normalize, bloom, bloom_k
+    )
 
+    @_per_batch
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         iv = contaminated_span_intervals(
             batch_df, None, text_col, id_col, n=n, eval_grams=eval_grams,
             gram_filter=might, broadcast_eval=might is None,
             normalize=normalize,
         )
         clean = remove_interval_tokens(batch_df, iv, text_col, id_col)
-        (
-            clean.withColumn("batch_id", F.lit(batch_id))
-            .withColumn("src_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .options(partitionOverwriteMode="dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        _write_batch(clean, out_dir, batch_id, provenance=True)
 
     process.unpersist_eval = eval_grams.unpersist
     return process
@@ -776,76 +689,46 @@ def make_attribution_batch_processor(
     """foreachBatch processor producing per-(doc, eval) contamination
     ATTRIBUTION against a frozen ATTRIBUTED gram table (r12 —
     write_eval_gram_table(eval_id=...), distinct (eval_id, gram) rows):
-    each micro-batch's docs are gram-joined against the stored table and
-    (doc_id, eval_id, n_shared_grams) rows land batch_id-partitioned with
-    the same replay/provenance contract as the report store. A doc's
-    grams live wholly in its own batch, so the union of per-batch
-    attributions EQUALS contamination_attribution over the replayed
-    corpus (pinned in tests).
+    (doc_id, eval_id, n_shared_grams) rows, whose union over the batches
+    EQUALS contamination_attribution over the replayed corpus (pinned in
+    tests).
 
     The sidecar check requires attributed=True — a plain gram table has
     no eval_id to attribute to and fails loudly here. Eval-side regimes
-    as the report processor: no bloom = cached + broadcast-hinted
-    (``process.unpersist_eval()`` releases), bloom = map-side prefilter
-    over the SAME gram hash space (the bitmap ignores eval_id; zero
-    false negatives, so attribution rows are unchanged) with the table
-    deliberately uncached."""
-    from ..llm.decontaminate import (
-        bloom_might_contain_udf,
-        check_eval_gram_meta,
+    as the report processor; the bloom ignores eval_id, so attribution
+    rows are unchanged by it."""
+
+    def check(table: DataFrame) -> None:
+        if "gram" not in table.columns or len(table.columns) != 2:
+            raise ValueError(
+                f"attribution needs an attributed (eval_id, gram) table; "
+                f"{eval_grams_dir} has columns {table.columns}"
+            )
+        eval_id_col = next(c for c in table.columns if c != "gram")
+        # r12 advice: 'batch_id'/'src_batch' would be silently OVERWRITTEN
+        # by the store's batch columns — corrupting both the attribution
+        # output and the partition layout — and 'n_shared_grams' would
+        # collide with the aggregate alias; reject all of them with the
+        # same rewrite-the-artifact remedy as a corpus-id collision.
+        if eval_id_col == id_col or eval_id_col in (
+            "batch_id", "src_batch", "n_shared_grams"
+        ):
+            raise ValueError(
+                f"the attributed table's id column {eval_id_col!r} collides "
+                f"with the corpus id column {id_col!r} or a reserved store "
+                "column (batch_id/src_batch/n_shared_grams) — rewrite the "
+                "artifact with a distinct eval_id name (e.g. eval_id)"
+            )
+
+    table, might = _eval_gram_table(
+        spark, eval_grams_dir, n, normalize, bloom, bloom_k,
+        attributed=True, check=check,
     )
-
-    check_eval_gram_meta(spark, eval_grams_dir, n, normalize, attributed=True)
-    eval_cached = spark.read.parquet(eval_grams_dir)
-    if "gram" not in eval_cached.columns or len(eval_cached.columns) != 2:
-        raise ValueError(
-            f"attribution needs an attributed (eval_id, gram) table; "
-            f"{eval_grams_dir} has columns {eval_cached.columns}"
-        )
-    eval_id_col = next(c for c in eval_cached.columns if c != "gram")
-    # r12 advice: 'batch_id'/'src_batch' would be silently OVERWRITTEN by
-    # the store's withColumn(lit(batch_id)) below — corrupting both the
-    # attribution output and the partition layout — and 'n_shared_grams'
-    # would collide with the aggregate alias; reject all of them with the
-    # same rewrite-the-artifact remedy as a corpus-id collision.
-    if eval_id_col == id_col or eval_id_col in (
-        "batch_id", "src_batch", "n_shared_grams"
-    ):
-        raise ValueError(
-            f"the attributed table's id column {eval_id_col!r} collides "
-            f"with the corpus id column {id_col!r} or a reserved store "
-            "column (batch_id/src_batch/n_shared_grams) — rewrite the "
-            "artifact with a distinct eval_id name (e.g. eval_id)"
-        )
-    might = bloom_might_contain_udf(bloom, bloom_k) if bloom else None
-    if might is None:
-        eval_cached = eval_cached.cache()
-        eval_grams = F.broadcast(eval_cached)
-    else:
-        eval_grams = eval_cached
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from ..llm.decontaminate import _gram_table
-
-        grams = _gram_table(batch_df, text_col, id_col, n, "gram", normalize)
-        if might is not None:
-            grams = grams.filter(might(F.col("gram")))
-        attr = grams.join(eval_grams, "gram").groupBy(
-            id_col, eval_id_col
-        ).agg(F.count_distinct("gram").alias("n_shared_grams"))
-        (
-            attr.withColumn("batch_id", F.lit(batch_id))
-            .withColumn("src_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .options(partitionOverwriteMode="dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-
-    process.unpersist_eval = eval_cached.unpersist
-    return process
+    eval_id_col = next(c for c in table.columns if c != "gram")
+    return _gram_count_processor(
+        table, might, out_dir, text_col, id_col, n, normalize,
+        (id_col, eval_id_col), "n_shared_grams",
+    )
 
 
 def streaming_attribution(
@@ -869,17 +752,7 @@ def streaming_attribution(
         stream_df.sparkSession, eval_grams_dir, out_dir, bloom, bloom_k,
         text_col, id_col, n, normalize,
     )
-    proc = auto_compacting(
-        proc, stream_df.sparkSession, [(out_dir, ())], compact_every
-    )
-    query = (
-        stream_df.writeStream.foreachBatch(proc)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.unpersist_eval = proc.unpersist_eval
-    return query
+    return _start(stream_df, proc, checkpoint_dir, [(out_dir, ())], compact_every)
 
 
 def attribution_store_summary(
@@ -941,11 +814,9 @@ def make_fuzzy_decontaminate_batch_processor(
     fuzzy_contamination_pairs, same banded-candidates -> exact-verify
     core via _fuzzy_pairs_against): each micro-batch's docs are banded
     against the stored (eval_id, shingles, signature) table and
-    (doc_id, eval_id, jaccard) rows land batch_id-partitioned with the
-    same replay/provenance contract as the other decontamination
-    stores. A doc's shingles live wholly in its own batch, so the union
-    of per-batch outputs EQUALS the batch pairs over the replayed
-    corpus (pinned in tests).
+    (doc_id, eval_id, jaccard) rows land in the store. A doc's shingles
+    live wholly in its own batch, so the union of per-batch outputs
+    EQUALS the batch pairs over the replayed corpus (pinned in tests).
 
     The sidecar check requires a _fuzzy_meta.json with matching
     shingle settings AND banding geometry — a gram table (a different
@@ -994,21 +865,13 @@ def make_fuzzy_decontaminate_batch_processor(
     if engine == "auto":
         engine = pick_fuzzy_engine(eval_cached)
 
+    @_per_batch
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         pairs = _fuzzy_pairs_against(
             batch_df, eval_cached, text_col, id_col, eval_id_col, n,
             threshold, normalize, engine=engine,
         )
-        (
-            pairs.withColumn("batch_id", F.lit(batch_id))
-            .withColumn("src_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .options(partitionOverwriteMode="dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        _write_batch(pairs, out_dir, batch_id, provenance=True)
 
     process.unpersist_eval = eval_cached.unpersist
     return process
@@ -1036,17 +899,7 @@ def streaming_fuzzy_decontaminate(
         stream_df.sparkSession, eval_fuzzy_dir, out_dir, threshold,
         text_col, id_col, n, normalize, engine,
     )
-    proc = auto_compacting(
-        proc, stream_df.sparkSession, [(out_dir, ())], compact_every
-    )
-    query = (
-        stream_df.writeStream.foreachBatch(proc)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.unpersist_eval = proc.unpersist_eval
-    return query
+    return _start(stream_df, proc, checkpoint_dir, [(out_dir, ())], compact_every)
 
 
 def make_decontaminate_spans_policy_batch_processor(
@@ -1066,9 +919,8 @@ def make_decontaminate_spans_policy_batch_processor(
     stream had no policy at all): per micro-batch, a doc whose
     contaminated token fraction exceeds ``max_frac`` is dropped whole —
     past some point the doc mostly IS eval content — while docs at or
-    under it are span-cut surgically; same store contract as the spans
-    processor (batch_id-partitioned, dynamic-overwrite replay
-    idempotency, src_batch provenance).
+    under it are span-cut surgically, into the same store shape as the
+    spans processor.
 
     One code path with batch: each micro-batch runs
     llm/decontaminate.decontaminate_spans_policy itself (the eval-side
@@ -1076,48 +928,27 @@ def make_decontaminate_spans_policy_batch_processor(
     drift from the batch policy — and since a doc's grams AND its token
     count live wholly in its own micro-batch, the union of per-batch
     outputs EQUALS the batch policy over the replayed corpus (pinned in
-    tests/test_streaming_llm.py and by the driver replay query
+    tests and by the driver replay query
     streaming_decontaminate_policy_replay). The per-batch lazy
     localCheckpoint inside the policy keeps the batch's positional gram
     pass single-run across the filter and rewrite branches; the
     checkpointed interval RDD is hits-sized and released by the context
-    cleaner once the batch's reference drops.
+    cleaner once the batch's reference drops. Eval-side regimes exactly
+    as the spans processor (see _eval_gram_table)."""
+    from ..llm.decontaminate import decontaminate_spans_policy
 
-    Eval-side regimes exactly as make_decontaminate_spans_batch_processor:
-    no bloom = small-table regime (stored table cached at build +
-    broadcast-hinted; ``process.unpersist_eval()`` releases the cache),
-    bloom = beyond-broadcast regime (map-side prefilter, table
-    deliberately uncached, AQE sizes the verify join). The stored
-    table's (n, normalize) sidecar is validated up front — a mismatch
-    means disjoint hash spaces and a silently clean stream."""
-    from ..llm.decontaminate import (
-        bloom_might_contain_udf,
-        check_eval_gram_meta,
-        decontaminate_spans_policy,
+    eval_grams, might = _eval_gram_table(
+        spark, eval_grams_dir, n, normalize, bloom, bloom_k
     )
 
-    check_eval_gram_meta(spark, eval_grams_dir, n, normalize=normalize, attributed=False)
-    eval_grams = spark.read.parquet(eval_grams_dir)
-    might = bloom_might_contain_udf(bloom, bloom_k) if bloom else None
-    if might is None:
-        eval_grams = eval_grams.cache()
-
+    @_per_batch
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         clean = decontaminate_spans_policy(
             batch_df, None, max_frac, text_col, id_col, n=n,
             normalize=normalize, eval_grams=eval_grams, gram_filter=might,
             broadcast_eval=might is None,
         )
-        (
-            clean.withColumn("batch_id", F.lit(batch_id))
-            .withColumn("src_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .options(partitionOverwriteMode="dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        _write_batch(clean, out_dir, batch_id, provenance=True)
 
     process.unpersist_eval = eval_grams.unpersist
     return process
@@ -1147,17 +978,7 @@ def streaming_decontaminate_spans_policy(
         stream_df.sparkSession, eval_grams_dir, out_dir, max_frac, bloom,
         bloom_k, text_col, id_col, n, normalize,
     )
-    proc = auto_compacting(
-        proc, stream_df.sparkSession, [(out_dir, ())], compact_every
-    )
-    query = (
-        stream_df.writeStream.foreachBatch(proc)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.unpersist_eval = proc.unpersist_eval
-    return query
+    return _start(stream_df, proc, checkpoint_dir, [(out_dir, ())], compact_every)
 
 
 def streaming_decontaminate_spans(
@@ -1177,25 +998,14 @@ def streaming_decontaminate_spans(
     parquet (see make_decontaminate_spans_batch_processor; bloom sits in
     the same parameter position as streaming_decontaminate's).
     ``normalize`` (r11): per-token-normalized matching against a
-    normalize=True gram table, raw-token rewrite. ``compact_every``
-    folds the store every N batches."""
+    normalize=True gram table, raw-token rewrite. The returned query
+    carries ``unpersist_eval``; ``compact_every`` folds the store every
+    N batches."""
     proc = make_decontaminate_spans_batch_processor(
         stream_df.sparkSession, eval_grams_dir, out_dir, bloom, bloom_k,
         text_col, id_col, n, normalize,
     )
-    proc = auto_compacting(
-        proc, stream_df.sparkSession, [(out_dir, ())], compact_every
-    )
-    query = (
-        stream_df.writeStream.foreachBatch(proc)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # r11 advice: the cached eval table's release handle must be
-    # reachable from the entry point, not only from the raw processor
-    query.unpersist_eval = proc.unpersist_eval
-    return query
+    return _start(stream_df, proc, checkpoint_dir, [(out_dir, ())], compact_every)
 
 
 def streaming_decontaminate(
@@ -1213,26 +1023,14 @@ def streaming_decontaminate(
 ):
     """readStream -> frozen-eval-artifact contamination reports ->
     partitioned parquet (see make_decontaminate_batch_processor).
-    ``normalize`` must match the stored gram table's setting.
-    ``compact_every`` folds the report store every N batches (see
-    auto_compacting)."""
+    ``normalize`` must match the stored gram table's setting. The
+    returned query carries ``unpersist_eval``; ``compact_every`` folds
+    the report store every N batches (see auto_compacting)."""
     proc = make_decontaminate_batch_processor(
         stream_df.sparkSession, eval_grams_dir, out_dir, bloom, bloom_k,
         text_col, id_col, n, normalize,
     )
-    proc = auto_compacting(
-        proc, stream_df.sparkSession, [(out_dir, ())], compact_every
-    )
-    query = (
-        stream_df.writeStream.foreachBatch(proc)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # r11 advice: the cached eval table's release handle must be
-    # reachable from the entry point, not only from the raw processor
-    query.unpersist_eval = proc.unpersist_eval
-    return query
+    return _start(stream_df, proc, checkpoint_dir, [(out_dir, ())], compact_every)
 
 
 def make_media_dedup_batch_processor(
@@ -1247,15 +1045,14 @@ def make_media_dedup_batch_processor(
     each arriving blob reduces to its 8-byte signature (image dHash or
     audio energy-delta fingerprint — identical to the batch tables, so a
     blob's signature is the same either way), first-seen signatures
-    survive to ``out_dir`` and accumulate in the signature store.
+    survive to ``out_dir`` and accumulate in the signature store, which
+    commits last.
 
     State is (sig_hi, sig_lo) per distinct signature — two BIGINTs per
     kept item, never the media bytes. NEAR-duplicate mining stays a
     batch job over the accumulated store (hash64_near_pairs reads just
     the signatures), exactly as exact Jaccard verification does for the
-    streaming MinHash store. Same idempotency contract as the other
-    stores: batch_id-partitioned dynamic overwrite, signature store
-    commits last, replays skip."""
+    streaming MinHash store."""
     from ..llm.multimodal import audio_fingerprint_table, image_dhash_table
 
     sig_store = os.path.join(store_dir, "media_sigs")
@@ -1266,22 +1063,8 @@ def make_media_dedup_batch_processor(
     else:
         raise ValueError(f"kind must be 'image' or 'audio', not {kind!r}")
 
-    def _read_store() -> DataFrame | None:
-        from pyspark.errors.exceptions.captured import AnalysisException
-
-        try:
-            return spark.read.parquet(sig_store)
-        except AnalysisException:
-            return None
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        old = _read_store()
-        if old is not None and "batch_id" in old.columns:
-            if old.filter(F.col("batch_id") == batch_id).limit(1).count() > 0:
-                return
-            old = old.drop("batch_id")
+    @_commit_last(spark, sig_store)
+    def process(batch_df: DataFrame, batch_id: int, old) -> None:
         sigs = sig_table(batch_df, id_col, media_col).select(
             F.col("id").alias(id_col),
             F.col(hi).alias("sig_hi"),
@@ -1302,22 +1085,8 @@ def make_media_dedup_batch_processor(
         firsts = firsts.persist()
         try:
             kept = batch_df.join(firsts.select(id_col), id_col)
-            dyn = {"partitionOverwriteMode": "dynamic"}
-            (
-                kept.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .options(**dyn)
-                .partitionBy("batch_id")
-                .parquet(out_dir)
-            )
-            (
-                firsts.select("sig_hi", "sig_lo")
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .options(**dyn)
-                .partitionBy("batch_id")
-                .parquet(sig_store)
-            )
+            _write_batch(kept, out_dir, batch_id)
+            _write_batch(firsts.select("sig_hi", "sig_lo"), sig_store, batch_id)
         finally:
             firsts.unpersist()
 
@@ -1343,12 +1112,11 @@ def streaming_media_dedup(
     process = make_media_dedup_batch_processor(
         stream.sparkSession, store_dir, out_dir, kind, media_col, id_col
     )
-    process = auto_compacting(
-        process, stream.sparkSession,
+    return _start(
+        stream, process, checkpoint,
         [(out_dir, ()), (os.path.join(store_dir, "media_sigs"), ())],
         compact_every,
     )
-    return foreach_batch_sink(stream, process, checkpoint=checkpoint)
 
 
 def streaming_scene_cuts(
@@ -1417,27 +1185,18 @@ def make_classify_batch_processor(
     """foreachBatch processor for streaming media CLASSIFICATION: each
     micro-batch's blobs embed (any ml/cnn or injected embedder) and score
     against the broadcast centroid table inside Arrow batches; per-row
-    (id, label) rows land batch_id-partitioned with dynamic overwrite, so
-    a replayed batch rewrites its own partition instead of appending
-    duplicates — the stateless-inference member of the streaming-store
-    family (dedup/LM-score/DSIR/scene-cuts)."""
+    (id, label) rows land in the label store — the stateless-inference
+    member of the streaming-store family."""
     from ..ml.deeplearn import classify_images
 
+    @_per_batch
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         labeled = classify_images(
             batch_df, media_col, centroids, top_n=1, embedder=embedder
         )
-        (
-            labeled.select(
-                F.col(id_col), F.get("labels", 0)["label"].alias("label")
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .options(partitionOverwriteMode="dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
+        _write_batch(
+            labeled.select(F.col(id_col), F.get("labels", 0)["label"].alias("label")),
+            out_dir, batch_id,
         )
 
     return process
@@ -1462,10 +1221,7 @@ def streaming_classify(
     process = make_classify_batch_processor(
         stream.sparkSession, out_dir, centroids, embedder, media_col, id_col
     )
-    process = auto_compacting(
-        process, stream.sparkSession, [(out_dir, ())], compact_every
-    )
-    return foreach_batch_sink(stream, process, checkpoint=checkpoint)
+    return _start(stream, process, checkpoint, [(out_dir, ())], compact_every)
 
 
 def make_ann_ingest_batch_processor(
@@ -1478,16 +1234,17 @@ def make_ann_ingest_batch_processor(
     """foreachBatch processor for STREAMING ANN-index ingestion: each
     arriving vector is assigned to the FROZEN coarse centroids (the
     incremental-append contract of append_ivf_index) and lands in a
-    (batch_id, list_id)-partitioned parquet index with dynamic partition
-    overwrite — a replayed batch rewrites exactly its own partitions
-    (idempotent with no side markers), and probes keep LIST PRUNING as
-    directory-partition pruning: a probe reads only
-    ``list_id IN (probed)`` partitions across every batch directory."""
+    (batch_id, list_id)-partitioned index — a replayed batch rewrites
+    exactly its own partitions (idempotent with no side markers), and
+    probes keep LIST PRUNING as directory-partition pruning: a probe
+    reads only ``list_id IN (probed)`` partitions across every batch
+    directory. The ``src_batch`` provenance column (constant per batch,
+    compresses to nothing) is what lets compaction tell a legitimate
+    cross-batch duplicate row from a crash-rerun duplicate."""
     from ..llm.similarity import _as_double, _nearest_centroids
 
+    @_per_batch
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         assigned = batch_df.select(
             F.col(id_col).alias("neighbor_id"),
             _as_double(F.col(vec_col)).alias("nv"),
@@ -1495,19 +1252,9 @@ def make_ann_ingest_batch_processor(
             "list_id",
             F.element_at(_nearest_centroids(F.col("nv"), centroids, 1), 1),
         )
-        (
-            assigned.withColumn("batch_id", F.lit(batch_id))
-            # provenance DATA column (constant per batch, compresses to
-            # nothing): after compaction relabels the partition column,
-            # src_batch still records the origin epoch, which is what
-            # lets compact_ann_index distinguish a legitimate cross-batch
-            # duplicate row (different src_batch) from a crash-rerun
-            # duplicate (same src_batch) — see compact_ann_index.
-            .withColumn("src_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .options(partitionOverwriteMode="dynamic")
-            .partitionBy("batch_id", "list_id")
-            .parquet(index_dir)
+        _write_batch(
+            assigned, index_dir, batch_id, provenance=True,
+            partition_cols=("list_id",),
         )
 
     return process
@@ -1531,11 +1278,9 @@ def streaming_ann_ingest(
     process = make_ann_ingest_batch_processor(
         stream.sparkSession, index_dir, centroids, id_col, vec_col
     )
-    process = auto_compacting(
-        process, stream.sparkSession,
-        [(index_dir, ("list_id",))], compact_every,
+    return _start(
+        stream, process, checkpoint, [(index_dir, ("list_id",))], compact_every
     )
-    return foreach_batch_sink(stream, process, checkpoint=checkpoint)
 
 
 def ann_probe_ingested(
@@ -1590,57 +1335,52 @@ def ann_probe_ingested(
 def compact_batch_store(
     spark,
     store_dir: str,
-    keep_latest: int = 1,
-    compact_label: int = -1,
     extra_partition_cols: "tuple[str, ...]" = (),
     target_files: int | None = None,
 ) -> dict:
     """Fold old ``batch_id=N`` partitions of ANY batch_id-partitioned
     streaming store into ONE compacted partition (r8 verdict #3: every
-    foreachBatch store in this module — minhash signatures + candidate
-    pairs, exact/paragraph content-hash stores and their kept-docs
-    outputs, media signature stores, LM-score/DSIR/classify score
-    outputs, and the (batch_id, list_id) ANN index — grows a parquet
-    directory per micro-batch, a small-files bomb on a long-running
-    stream). After compaction the store holds ``batch_id=compact_label``
-    plus the newest ``keep_latest`` real batches.
+    foreachBatch store in this module grows a parquet directory per
+    micro-batch, a small-files bomb on a long-running stream). After
+    compaction the store holds ``batch_id=COMPACT_LABEL`` plus the newest
+    ``KEEP_LATEST`` real batch.
 
     Reader equality: consumers of these stores select named data
-    columns and ignore the ``batch_id`` replay bookkeeping (each
-    store's docstring), so relabeling old partitions cannot change any
-    result — pinned per-store by the store-equality tests. When
-    ``extra_partition_cols`` name further partition levels (the ANN
-    index's ``list_id``), directory partition pruning on them is
-    unchanged too.
+    columns and ignore the ``batch_id`` replay bookkeeping, so
+    relabeling old partitions cannot change any result — pinned
+    per-store by the store-equality tests. When ``extra_partition_cols``
+    name further partition levels (the ANN index's ``list_id``),
+    directory partition pruning on them is unchanged too.
 
     Replay idempotence: Structured Streaming only ever re-runs the
     LAST (uncommitted) batch after a crash; committed batches never
-    replay. Keeping the newest ``keep_latest`` (>= 1) real batches out
-    of the fold therefore preserves the ingest contract — a replayed
-    batch still dynamically overwrites exactly its own partition, and
-    the dedup stores' commit-last skip check still finds its stored
-    batch_id. ``compact_label`` must be negative so it can never
-    collide with a future epoch id (they start at 0 and increase).
+    replay. Keeping the newest real batch out of the fold therefore
+    preserves the ingest contract — a replayed batch still dynamically
+    overwrites exactly its own partition, and the dedup stores'
+    commit-last skip check still finds its stored batch_id.
+    COMPACT_LABEL is negative so it can never collide with a future
+    epoch id (they start at 0 and increase).
 
     Crash safety (documented, non-transactional): the compacted
     partitions are written BEFORE the folded batch directories are
     deleted. A crash in between leaves duplicates that a re-run
     removes: each row's origin epoch rides the ``src_batch`` DATA
-    column — stamped at ingest (ANN) or, for stores without it, from
-    the partition label here at fold time, which carries identical
-    information because the partition label IS the origin epoch until
-    this function relabels it. The fold's full-row dropDuplicates
-    (which includes src_batch) removes exactly the crash-rerun copies
-    while PRESERVING legitimate duplicates emitted in different epochs
-    (those differ in src_batch — multiplicity preservation is pinned in
-    tests). Known limitation (r8 ADVICE): identical rows a store
-    legitimately holds twice within the SAME epoch collapse too — the
-    dedup/hash stores are per-batch distinct by construction so this is
-    vacuous for them, and for score stores a same-epoch duplicate is a
-    re-delivered input row carrying the same score. The store is read
-    with mergeSchema so a transitional mix of pre-provenance and
-    provenance-carrying files cannot hide real src_batch values behind
-    a src_batch-less inferred schema (r8 ADVICE).
+    column — stamped at ingest (ANN, decontamination) or, for stores
+    without it, from the partition label here at fold time, which
+    carries identical information because the partition label IS the
+    origin epoch until this function relabels it. The fold's full-row
+    dropDuplicates (which includes src_batch) removes exactly the
+    crash-rerun copies while PRESERVING legitimate duplicates emitted in
+    different epochs (those differ in src_batch — multiplicity
+    preservation is pinned in tests). Known limitation (r8 ADVICE):
+    identical rows a store legitimately holds twice within the SAME
+    epoch collapse too — the dedup/hash stores are per-batch distinct by
+    construction so this is vacuous for them, and for score stores a
+    same-epoch duplicate is a re-delivered input row carrying the same
+    score. The store is read with mergeSchema so a transitional mix of
+    pre-provenance and provenance-carrying files cannot hide real
+    src_batch values behind a src_batch-less inferred schema (r8
+    ADVICE).
 
     File sizing: with ``extra_partition_cols`` the fold repartitions by
     them (one file per partition directory); otherwise it coalesces to
@@ -1652,16 +1392,6 @@ def compact_batch_store(
     and read-overwrite-same-path is only safe in Spark when every
     source row is off the scan before job commit — a plan-shape
     accident without the checkpoint barrier."""
-    if keep_latest < 1:
-        raise ValueError(
-            f"keep_latest={keep_latest}: the newest real batch must stay "
-            "un-folded or a post-crash replay of it would duplicate rows"
-        )
-    if compact_label >= 0:
-        raise ValueError(
-            f"compact_label={compact_label} must be negative: non-negative "
-            "labels collide with future stream epoch ids"
-        )
     # mergeSchema: a transitional store mixing pre-provenance files (no
     # src_batch) with provenance-carrying ones must surface the column
     idx = spark.read.option("mergeSchema", "true").parquet(store_dir)
@@ -1671,20 +1401,21 @@ def compact_batch_store(
     batches = sorted(
         r["batch_id"] for r in idx.select("batch_id").distinct().collect()
     )
-    real = [b for b in batches if b != compact_label]
-    fold = real[: max(len(real) - keep_latest, 0)]
+    real = [b for b in batches if b != COMPACT_LABEL]
+    fold = real[: max(len(real) - KEEP_LATEST, 0)]
     if not fold:
         return {"folded_batches": [], "kept_batches": real}
-    sources = fold + ([compact_label] if compact_label in batches else [])
+    sources = fold + ([COMPACT_LABEL] if COMPACT_LABEL in batches else [])
     folded = (
         idx.filter(F.col("batch_id").isin([int(b) for b in sources]))
         # mixed-schema transitional reads: a pre-provenance file yields
         # null src_batch — its partition label is its origin epoch. Must
-        # run BEFORE the relabel below.
+        # run BEFORE the label is dropped below.
         .withColumn("src_batch", F.coalesce(F.col("src_batch"), F.col("batch_id")))
-        .withColumn("batch_id", F.lit(int(compact_label)))
-        # full-row incl. src_batch: removes crash-rerun copies only —
-        # a legitimate cross-epoch duplicate differs in src_batch
+        # the write relabels every row COMPACT_LABEL; full-row dedup incl.
+        # src_batch removes crash-rerun copies only — a legitimate
+        # cross-epoch duplicate differs in src_batch
+        .drop("batch_id")
         .dropDuplicates()
     )
     if extra_partition_cols:
@@ -1699,11 +1430,8 @@ def compact_batch_store(
         folded = folded.coalesce(max(n_files, 1))
     # read-overwrite-same-path barrier (see docstring)
     folded = folded.localCheckpoint()
-    (
-        folded.write.mode("overwrite")
-        .options(partitionOverwriteMode="dynamic")
-        .partitionBy("batch_id", *extra_partition_cols)
-        .parquet(store_dir)
+    _write_batch(
+        folded, store_dir, COMPACT_LABEL, partition_cols=extra_partition_cols
     )
     # delete the folded batch directories (Hadoop FS API: works on any
     # supported filesystem — local, HDFS, s3a)
@@ -1721,22 +1449,11 @@ def compact_batch_store(
     return {"folded_batches": fold, "kept_batches": real[len(fold):]}
 
 
-def compact_ann_index(
-    spark,
-    index_dir: str,
-    keep_latest: int = 1,
-    compact_label: int = -1,
-) -> dict:
+def compact_ann_index(spark, index_dir: str) -> dict:
     """Fold old batch partitions of a streaming-ingested ANN index into
     ONE compacted batch partition (r7 verdict #7) — the (batch_id,
     list_id) instance of :func:`compact_batch_store`. Probes filter on
     list_id only, so directory partition pruning is unchanged and the
     row set is preserved verbatim — pinned by the hash-match test. See
     compact_batch_store for the full replay/crash/provenance contract."""
-    return compact_batch_store(
-        spark,
-        index_dir,
-        keep_latest=keep_latest,
-        compact_label=compact_label,
-        extra_partition_cols=("list_id",),
-    )
+    return compact_batch_store(spark, index_dir, extra_partition_cols=("list_id",))
