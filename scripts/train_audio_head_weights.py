@@ -20,8 +20,15 @@ jitter grid (lengths 380..460 step 7 x 8 step-variants per ramp class =
 more clip lengths than any query doc produces) through the REAL decode
 pipeline; 300 epochs full-batch momentum SGD at lr=0.5 on the
 64-dimensional (32 mean-centered log-energies + 32 ZCRs) features.
-Everything is deterministic (fixed seed, float64, fixed reduction
-order), so re-running this script reproduces the artifact bit-for-bit;
+Everything is deterministic: fixed seed, float64 and a reduction order
+that ml/cnn.py fixes itself: no BLAS call (its products go through
+np.einsum, not ``@``), exp and log built from single IEEE operations
+(fdlibm's algorithms, not libm's or numpy's, whose paths differ by CPU)
+and numpy's own pairwise sums. So re-running this script reproduces the
+artifact bit-for-bit on any CPU for one numpy install (checked across
+OpenBLAS's CPU kernels, with numpy's AVX paths disabled and with glibc's
+AVX2/FMA paths disabled); across numpy versions or architectures it was
+not tried.
 train_head_distributed on the same corpus agrees to float rounding.
 
 Shipped-artifact invariants (pinned in tests/test_audio_head.py): zero

@@ -18,8 +18,15 @@ Training set: the full query-size grid (18-24 x 14-18) x 8 seeds per
 class = 1120 PNGs through the REAL codec decode -> grayscale resize ->
 normalize pipeline; 150 epochs full-batch momentum SGD at lr=0.2
 (measured: lr=0.5 oscillates on the 4-class loss, 0.2 reaches ~2e-3).
-Everything is deterministic (fixed seeds, float64, fixed reduction
-order), so re-running this script reproduces the artifact bit-for-bit;
+Everything is deterministic: fixed seeds, float64 and a reduction order
+that ml/cnn.py fixes itself: no BLAS call (its products go through
+np.einsum, not ``@``), exp and log built from single IEEE operations
+(fdlibm's algorithms, not libm's or numpy's, whose paths differ by CPU)
+and numpy's own pairwise sums. So re-running this script reproduces the
+artifact bit-for-bit on any CPU for one numpy install (checked across
+OpenBLAS's CPU kernels, with numpy's AVX paths disabled and with glibc's
+AVX2/FMA paths disabled); across numpy versions or architectures it was
+not tried.
 train_cnn_distributed on the same corpus agrees to float rounding (the
 partition-sum grouping is the only difference — see ml/cnn.py).
 

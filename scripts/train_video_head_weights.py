@@ -25,10 +25,16 @@ Training set: the full query family period (below) PLUS an off-family
 jitter grid (frame sizes 18-20 x 13-14 and a 23-step seed lattice — size
 and seed combos no query doc produces) through the REAL decode pipeline;
 300 epochs full-batch momentum SGD at lr=0.5 on the 64-dim mean-pooled
-CNN embedding. Everything is deterministic (fixed seed, float64, fixed
-reduction order), so re-running this script reproduces the artifact
-bit-for-bit; train_head_distributed on the same corpus agrees to float
-rounding.
+CNN embedding. Everything is deterministic: fixed seed, float64 and a
+reduction order that ml/cnn.py fixes itself: no BLAS call (its products
+go through np.einsum, not ``@``), exp and log built from single IEEE
+operations (fdlibm's algorithms, not libm's or numpy's, whose paths
+differ by CPU) and numpy's own pairwise sums. So re-running this script
+reproduces the artifact bit-for-bit on any CPU for one numpy install
+(checked across OpenBLAS's CPU kernels, with numpy's AVX paths disabled
+and with glibc's AVX2/FMA paths disabled); across numpy versions or
+architectures it was not tried.
+train_head_distributed on the same corpus agrees to float rounding.
 
 Shipped-artifact invariants (pinned in tests/test_video_head.py): zero
 errors over the closed-form query corpus for the FULL avi-tuple period —

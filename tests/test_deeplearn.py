@@ -123,6 +123,46 @@ class TestRealCnn:
         assert np.array_equal(out2[1:, :, 0], x[:-1, :, 0])
         assert np.all(out2[0] == 0)  # zero padding row
 
+    def test_fixed_order_arithmetic_matches_numpy_and_libm(self):
+        """_matmul/_exp/_log/_log1p (the BLAS- and libm-free arithmetic
+        that keeps the weight artifacts CPU-independent) agree with BLAS
+        and libm to rounding and give the exact special values. Bounds:
+        fdlibm's exp/log are within 1 ulp and glibc's within ~0.5, so they
+        differ by at most 1; log1p by Goldberg's formula is within ~2.5."""
+        import math
+
+        import numpy as np
+
+        from tuktu_spark.ml.cnn import _exp, _log, _log1p, _matmul
+
+        rng = np.random.RandomState(0)
+        a, b = rng.standard_normal((7, 5)), rng.standard_normal((5, 3))
+        for x, y in ((a, b), (a[0], b), (a, b[:, 0]), (b.T, a.T)):
+            np.testing.assert_allclose(_matmul(x, y), x @ y, rtol=1e-13, atol=1e-14)
+        cases = (
+            (_exp, math.exp, 1, np.concatenate([
+                rng.uniform(-745.0, 709.0, 20000), rng.uniform(-40.0, 0.0, 20000),
+                rng.uniform(-1e-9, 1e-9, 1000)])),
+            (_log, math.log, 1, np.concatenate([
+                np.exp(rng.uniform(-700.0, 700.0, 20000)),
+                rng.uniform(0.5, 2.0, 20000)])),
+            (_log1p, math.log1p, 3, np.concatenate([
+                rng.uniform(-0.9, 10.0, 20000), rng.uniform(-1e-9, 1e-9, 1000)])),
+        )
+        for fixed, libm, maxulp, x in cases:
+            want = np.array([libm(v) for v in x.tolist()])
+            np.testing.assert_array_max_ulp(fixed(x), want, maxulp=maxulp)
+        with np.errstate(over="ignore", divide="ignore", invalid="ignore"):
+            np.testing.assert_array_equal(
+                _exp(np.array([0.0, -np.inf, -800.0, np.inf, 800.0, np.nan])),
+                [1.0, 0.0, 0.0, np.inf, np.inf, np.nan],
+            )
+            np.testing.assert_array_equal(
+                _log(np.array([1.0, 0.0, np.inf, -1.0, np.nan])),
+                [0.0, -np.inf, np.inf, np.nan, np.nan],
+            )
+        assert _log1p(0.0) == 0.0 and _log1p(1e-300) == 1e-300
+
     def test_weights_roundtrip(self, tmp_path):
         import numpy as np
 

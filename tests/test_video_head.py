@@ -12,9 +12,11 @@ these tests pin the VIDEO artifact and its seam."""
 from __future__ import annotations
 
 import os
+import subprocess
 import sys
 
 import numpy as np
+import pytest
 
 from tuktu_spark.llm.multimodal import make_avi
 from tuktu_spark.ml.cnn import (
@@ -126,13 +128,73 @@ def test_head_embedder_logits_equal_forward():
 
 def test_artifact_reproducible_from_script(tmp_path):
     """Re-running the training script writes a bit-identical artifact
-    (fixed seed, float64, fixed reduction order) — the artifact is
-    code, not a blob."""
+    (fixed seed, float64, and a reduction order that ml/cnn.py fixes
+    itself: no BLAS call, exp/log from single IEEE operations, numpy's
+    own pairwise sums — the same on every CPU for one numpy install) —
+    the artifact is code, not a blob."""
     from train_video_head_weights import EPOCHS, LR, training_corpus
     from tuktu_spark.ml.cnn import train_head_local
 
     feats, ys = training_corpus()
     head, _ = train_head_local(feats, ys, len(LABELS), epochs=EPOCHS, lr=LR)
+    shipped = DenseHead.load_weights(WEIGHTS)
+    assert np.array_equal(head.w, shipped.w)
+    assert np.array_equal(head.b, shipped.b)
+
+
+def _cpu_has(*flags: str) -> bool:
+    try:
+        with open("/proc/cpuinfo") as fh:
+            have = next(
+                (set(ln.split(":", 1)[1].split()) for ln in fh
+                 if ln.startswith("flags")),
+                set(),
+            )
+    except OSError:
+        return False
+    return set(flags) <= have
+
+
+# Two older CPUs, each as the BLAS kernel OpenBLAS would pick there and the
+# numpy and glibc SIMD paths it would lack: a pre-AVX core, and an AVX2
+# core without AVX-512.
+_AVX512 = "AVX512F AVX512CD AVX512_SKX AVX512_CLX AVX512_CNL AVX512_ICL"
+
+
+@pytest.mark.parametrize("coretype,npy_disabled,glibc_hwcaps", [
+    pytest.param(
+        "Prescott", "AVX F16C FMA3 AVX2 " + _AVX512, "-AVX,-AVX2,-FMA,-FMA4,-AVX512F",
+        id="pre-avx",
+    ),
+    pytest.param(
+        "Haswell", _AVX512, "-AVX512F", id="avx2",
+        marks=pytest.mark.skipif(
+            not _cpu_has("avx2", "fma"),
+            reason="OpenBLAS's Haswell kernel needs AVX2 and FMA",
+        ),
+    ),
+])
+def test_artifact_reproducible_on_other_cpu_paths(
+    tmp_path, coretype, npy_disabled, glibc_hwcaps
+):
+    """The training script, run in a child process that takes another
+    CPU's paths, still writes the shipped artifact bit-for-bit: OpenBLAS
+    forced onto that CPU's GEMM kernel, and numpy's and glibc's SIMD paths
+    cut to what that CPU has. These settings are read once, at library
+    load, so only a child process can stand in for another host; without
+    this, a host whose own paths happen to match the ones that wrote the
+    artifact would never see a dependence on them."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = tmp_path / "videohead.npz"
+    subprocess.run(
+        [sys.executable, os.path.join(repo, "scripts", "train_video_head_weights.py"),
+         str(out)],
+        env=dict(os.environ, OPENBLAS_CORETYPE=coretype,
+                 NPY_DISABLE_CPU_FEATURES=npy_disabled,
+                 GLIBC_TUNABLES=f"glibc.cpu.hwcaps={glibc_hwcaps}"),
+        check=True, capture_output=True, timeout=300,
+    )
+    head = DenseHead.load_weights(str(out))
     shipped = DenseHead.load_weights(WEIGHTS)
     assert np.array_equal(head.w, shipped.w)
     assert np.array_equal(head.b, shipped.b)

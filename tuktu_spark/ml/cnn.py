@@ -17,8 +17,9 @@ ever shuffles.
 
 Determinism: weights come from a fixed-seed MT19937 stream (bit-stable
 across platforms), convolution is pure float64 numpy with a fixed
-reduction order — the same image yields the same embedding everywhere,
-so classification queries are exactly reproducible (driver-oracle-able).
+reduction order (``_matmul``/``_exp``/``_log`` below) — the same image
+yields the same embedding on every CPU, so classification queries are
+exactly reproducible (driver-oracle-able).
 """
 
 from __future__ import annotations
@@ -27,6 +28,100 @@ import numpy as np
 
 EMBED_DIM = 64
 _INPUT = 32  # images are nearest-resized to INPUT x INPUT grayscale
+
+
+# --- fixed-order arithmetic -------------------------------------------------
+#
+# Every product, exp and log on the embedding and training paths goes
+# through the helpers below, so the shipped weight artifacts are what their
+# scripts yield on any CPU. Three things would otherwise depend on the host
+# CPU: ``@`` calls OpenBLAS, whose DYNAMIC_ARCH build picks its GEMM kernel,
+# and so its summation order, from the CPU model at run time; numpy's
+# float64 exp/log/log1p take an AVX-512 path only where the CPU has one; and
+# libm's exp/log/log1p (``math.exp``, and numpy's own fallback) take an FMA
+# path only where the CPU has FMA, which rounds a few exp results in 10,000
+# differently. The order here rests instead on: no BLAS call (np.einsum
+# without ``optimize`` never makes one, and with both operands contiguous
+# along the summed axis its inner loop is a dot product built for numpy's
+# compile-time baseline SIMD, not dispatched at run time); exp and log built
+# from single IEEE operations (+ - * /, rint, frexp, ldexp), which round the
+# same on every SIMD path; and numpy's own pairwise sums. Bit-identity holds
+# for one numpy install across CPUs; across numpy versions or
+# architectures it was not tried.
+
+
+def _matmul(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``a @ b`` for 1-D or 2-D float64 operands, in a fixed summation order."""
+    sa = "ik"[2 - a.ndim:]
+    sb = "jk"[2 - b.ndim:]
+    return np.einsum(
+        f"{sa},{sb}->{sa[:-1]}{sb[:-1]}",
+        np.ascontiguousarray(a), np.ascontiguousarray(b.T),
+    )
+
+
+# fdlibm's e_exp.c / e_log.c: ln2 split so that k * _LN2_HI is exact, and
+# the minimax coefficients of their remez polynomials (both < 1 ulp).
+_LN2_HI = 6.93147180369123816490e-01
+_LN2_LO = 1.90821492927058770002e-10
+_INVLN2 = 1.44269504088896338700e00
+_EXP_P = (1.66666666666666019037e-01, -2.77777777770155933842e-03,
+          6.61375632143793436117e-05, -1.65339022054652515390e-06,
+          4.13813679705723846039e-08)
+_LOG_LG = (6.666666666666735130e-01, 3.999999999940941908e-01,
+           2.857142874366239149e-01, 2.222219843214978396e-01,
+           1.818357216161805012e-01, 1.531383769920937332e-01,
+           1.479819860511658591e-01)
+
+
+def _exp(x: "np.ndarray | float") -> np.ndarray:
+    """exp(x) element-wise, in a fixed order (fdlibm's e_exp.c
+    algorithm): x = k*ln2 + r with |r| <= ln2/2, a rational
+    approximation of exp(r), then an exact scaling by 2**k."""
+    x = np.clip(np.asarray(x, dtype=np.float64), -746.0, 710.0)
+    k = np.nan_to_num(np.rint(x * _INVLN2))
+    hi = x - k * _LN2_HI
+    lo = k * _LN2_LO
+    r = hi - lo
+    t = r * r
+    p1, p2, p3, p4, p5 = _EXP_P
+    c = r - t * (p1 + t * (p2 + t * (p3 + t * (p4 + t * p5))))
+    y = 1.0 - ((lo - (r * c) / (2.0 - c)) - hi)
+    return np.ldexp(y, k.astype(np.int64))
+
+
+def _log(x: "np.ndarray | float") -> np.ndarray:
+    """log(x) element-wise, in a fixed order (fdlibm's e_log.c
+    algorithm): x = 2**k * (1 + f) with sqrt(2)/2 <= 1 + f < sqrt(2),
+    then log(1 + f) = f - f*f/2 + s*(f*f/2 + R(s)), s = f / (2 + f).
+    Zero, negative and non-finite inputs give numpy's log, which is exact
+    for them (-inf, nan, inf)."""
+    x = np.asarray(x, dtype=np.float64)
+    odd = ~((x > 0) & (x < np.inf))
+    m, k = np.frexp(np.where(odd, 1.0, x))  # x = m * 2**k, 0.5 <= m < 1
+    low = m < 0.70710678118654752440
+    m = np.where(low, m + m, m)
+    k = (k - low).astype(np.float64)
+    f = m - 1.0
+    s = f / (2.0 + f)
+    z = s * s
+    w = z * z
+    lg1, lg2, lg3, lg4, lg5, lg6, lg7 = _LOG_LG
+    r = z * (lg1 + w * (lg3 + w * (lg5 + w * lg7))) + w * (lg2 + w * (lg4 + w * lg6))
+    hfsq = 0.5 * f * f
+    out = k * _LN2_HI - ((hfsq - (s * (hfsq + r) + k * _LN2_LO)) - f)
+    if odd.any():
+        out = np.where(odd, np.log(np.where(odd, x, 1.0)), out)
+    return out
+
+
+def _log1p(x: "np.ndarray | float") -> np.ndarray:
+    """log(1 + x) element-wise, accurate for small x (Goldberg's
+    theorem 4: log(u) * x / (u - 1) with u = 1 + x rounded)."""
+    x = np.asarray(x, dtype=np.float64)
+    u = 1.0 + x
+    d = u - 1.0
+    return np.where(d == 0.0, x, _log(u) * (x / np.where(d == 0.0, 1.0, d)))
 
 
 def _he(rng: np.random.RandomState, *shape: int) -> np.ndarray:
@@ -101,7 +196,7 @@ class TinyConvNet:
             xp, shape=(h, wd, 3, 3, c), strides=(s[0], s[1], s[0], s[1], s[2]),
             writeable=False,
         )
-        out = patches.reshape(h * wd, 9 * c) @ w.reshape(9 * c, f)
+        out = _matmul(patches.reshape(h * wd, 9 * c), w.reshape(9 * c, f))
         return out.reshape(h, wd, f) + b
 
     @staticmethod
@@ -119,7 +214,7 @@ class TinyConvNet:
         x = np.maximum(self._conv2d(x, self.w2, self.b2), 0.0)
         x = self._maxpool2(x)
         pooled = x.mean(axis=(0, 1))  # global average pool -> (16,)
-        return pooled @ self.w3 + self.b3
+        return _matmul(pooled, self.w3) + self.b3
 
 
 def _to_gray_square(pix: bytes, w: int, h: int, c: int, size: int = _INPUT) -> np.ndarray:
@@ -167,11 +262,12 @@ def cnn_embed_bytes(data: bytes, net: TinyConvNet | None = None) -> list[float]:
 #
 # The reference only ever RUNS pretrained CNNs; training closes the loop
 # so the model seam is fully self-contained. Gradients are exact
-# (finite-difference-checked in tests), float64, fixed reduction order —
-# so the distributed full-batch gradient is bit-identical to the
-# single-process one for a FIXED partition layout, and agrees to float
-# rounding (<= 1e-14 measured) across layouts, where the partition-sum
-# grouping is the only difference (see train_cnn_distributed).
+# (finite-difference-checked in tests), float64, fixed reduction order
+# (``_matmul``/``_exp``/``_log``) — so the distributed full-batch
+# gradient is bit-identical to the single-process one for a FIXED
+# partition layout, and agrees to float rounding (<= 1e-14 measured)
+# across layouts, where the partition-sum grouping is the only
+# difference (see train_cnn_distributed).
 
 _PARAMS = ("w1", "b1", "w2", "b2", "w3", "b3")
 
@@ -185,7 +281,7 @@ def _forward_cached(net: TinyConvNet, img: np.ndarray) -> dict:
     a2 = np.maximum(z2, 0.0)
     p2 = net._maxpool2(a2)
     g = p2.mean(axis=(0, 1))
-    logits = g @ net.w3 + net.b3
+    logits = _matmul(g, net.w3) + net.b3
     return dict(x0=x0, z1=z1, a1=a1, p1=p1, z2=z2, a2=a2, p2=p2, g=g,
                 logits=logits)
 
@@ -202,10 +298,10 @@ def _conv2d_backward(x: np.ndarray, w: np.ndarray, dout: np.ndarray):
         writeable=False,
     ).reshape(h * wd, 9 * c)
     dflat = dout.reshape(h * wd, f)
-    dw = (patches.T @ dflat).reshape(3, 3, c, f)
+    dw = _matmul(patches.T, dflat).reshape(3, 3, c, f)
     db = dflat.sum(axis=0)
     # dx: scatter dpatches back (col2im)
-    dpatches = (dflat @ w.reshape(9 * c, f).T).reshape(h, wd, 3, 3, c)
+    dpatches = _matmul(dflat, w.reshape(9 * c, f).T).reshape(h, wd, 3, 3, c)
     dxp = np.zeros_like(xp)
     for di in range(3):
         for dj in range(3):
@@ -244,14 +340,14 @@ def loss_and_grads(
         c = _forward_cached(net, img)
         logits = c["logits"]
         m = logits.max()
-        e = np.exp(logits - m)
+        e = _exp(logits - m)
         probs = e / e.sum()
-        total += float(m + np.log(e.sum()) - logits[int(y)])
+        total += float(m + _log(e.sum()) - logits[int(y)])
         dlogits = probs.copy()
         dlogits[int(y)] -= 1.0
         grads["w3"] += np.outer(c["g"], dlogits)
         grads["b3"] += dlogits
-        dg = net.w3 @ dlogits
+        dg = _matmul(net.w3, dlogits)
         hp, wp, _ = c["p2"].shape
         dp2 = np.broadcast_to(dg / (hp * wp), c["p2"].shape)
         da2 = _maxpool2_backward(c["a2"], dp2)
@@ -397,20 +493,20 @@ def audio_embed_bytes(data: bytes, n_frames: int = 32) -> list[float]:
     if n == 0:
         return [0.0] * (2 * n_frames)
     L = max(n // n_frames, 1)
-    feats = []
+    energy = []
     zcrs = []
     for t in range(n_frames):
         fr = mono[t * L : (t + 1) * L]
         if len(fr) == 0:
-            feats.append(0.0)
+            energy.append(0.0)
             zcrs.append(0.0)
             continue
-        feats.append(float(np.log1p((fr * fr).sum())))
+        energy.append(float((fr * fr).sum()))
         sign = fr < 0
         zcrs.append(float(np.count_nonzero(sign[1:] != sign[:-1])) / len(fr))
     # per-clip normalization (the image embedder's lesson: remove the
     # DC/loudness component so the classifier sees the SHAPE)
-    f = np.asarray(feats)
+    f = _log1p(np.asarray(energy))
     f = f - f.mean()
     return f.tolist() + zcrs
 
@@ -479,7 +575,7 @@ class DenseHead:
         return head
 
     def forward(self, feat: "np.ndarray | list[float]") -> np.ndarray:
-        return np.asarray(feat, dtype=np.float64) @ self.w + self.b
+        return _matmul(np.asarray(feat, dtype=np.float64), self.w) + self.b
 
 
 def head_loss_and_grads(
@@ -490,17 +586,17 @@ def head_loss_and_grads(
     loss_and_grads)."""
     x = np.asarray(feats, dtype=np.float64)
     y = np.asarray(labels, dtype=np.int64)
-    logits = x @ head.w + head.b
+    logits = _matmul(x, head.w) + head.b
     m = logits.max(axis=1, keepdims=True)
-    e = np.exp(logits - m)
+    e = _exp(logits - m)
     z = e.sum(axis=1, keepdims=True)
     probs = e / z
     total = float(
-        (m.ravel() + np.log(z.ravel()) - logits[np.arange(len(y)), y]).sum()
+        (m.ravel() + _log(z.ravel()) - logits[np.arange(len(y)), y]).sum()
     )
     dlogits = probs
     dlogits[np.arange(len(y)), y] -= 1.0
-    return total, {"w": x.T @ dlogits, "b": dlogits.sum(axis=0)}
+    return total, {"w": _matmul(x.T, dlogits), "b": dlogits.sum(axis=0)}
 
 
 def train_head_local(
